@@ -2,15 +2,17 @@
 operators, the human-readable twin of the pins in tests/test_plans.py,
 test_bloom.py, test_langid.py, test_pipeline_ops.py, test_topic_nb.py.
 
-Run:  python BENCH/gen_plans.py   (writes /root/repo/PLANS.md)
+Run:  python BENCH/gen_plans.py   (writes PLANS.md at the repo root)
 """
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF = "/root/testdata/sf0.001"
 DETAIL_RE = re.compile(r"PushedFilters|ReadSchema|HashedRelationBroadcastMode")
@@ -40,6 +42,7 @@ def main() -> None:
     from storm_focused_crawler_spark.functions import topic_nb as TN
     from storm_focused_crawler_spark.operators import bloom as B
     from storm_focused_crawler_spark.operators import robots as RB
+    from storm_focused_crawler_spark.operators import seen_filter as SFL
 
     spark = bench.build_session(8, app="gen_plans")
     paths = gen_pages.ensure(SF)
@@ -80,7 +83,6 @@ def main() -> None:
 
     hashes = spark.range(0, 2000).select(F.xxhash64("id").alias("url_hash"))
     shards = B.build_shards(hashes, 4, 1 << 12)
-    routed = B.probe_transform(spark, shards, 4, 1 << 12, broadcast_max_bytes=0)
 
     from storm_focused_crawler_spark.operators import cuckoo as CK
 
@@ -133,12 +135,12 @@ def main() -> None:
         ("Shard-routed Bloom probe (beyond-broadcast path)",
          "One Exchange on (shard) routes each hash to the task holding its "
          "bitset — a cogroup, not an N-times-replicated broadcast.",
-         routed(hashes)),
+         SFL.probe_routed(hashes, B, shards, 4, 1 << 12)),
         ("Shard-routed cuckoo probe (beyond-broadcast path)",
          "Same cogroup shape as the Bloom probe over the deletion-capable "
          "cuckoo sidecar (operators/cuckoo.py): one Exchange on (shard), "
          "each task deserializes exactly one fingerprint table.",
-         CK.probe_routed(hashes, ck_shards, 4, 1 << 10)),
+         SFL.probe_routed(hashes, CK, ck_shards, 4, 1 << 10)),
         ("Char-n-gram language ID — Arrow scorer (hot path)",
          "ONE narrow ArrowEvalPython pass: no Generate (explode), no "
          "Exchange at all.  The relational twin below remains the "
@@ -265,7 +267,7 @@ def main() -> None:
 
     for df in out["_persisted"]:
         df.unpersist()
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(lines))
     print("wrote PLANS.md,", len(sections), "sections")
 

@@ -40,11 +40,9 @@ def parse_args(argv=None):
     ap.add_argument("--rounds", type=int, default=3)
     ap.add_argument("--capacity", type=int, default=1024)
     ap.add_argument("--n-salts", type=int, default=32)
-    ap.add_argument("--bloom", action="store_true",
-                    help="enable the advisory seen pre-filter (kind per --seen-filter)")
-    ap.add_argument("--seen-filter", choices=("bloom", "cuckoo"), default="bloom",
-                    help="sidecar kind: bloom (OR-merge bitsets) or cuckoo "
-                         "(fingerprint table, supports deletion)")
+    ap.add_argument("--seen-filter", choices=("none", "bloom", "cuckoo"), default="none",
+                    help="advisory seen pre-filter: none, bloom (OR-merge bitsets) "
+                         "or cuckoo (fingerprint table, supports deletion)")
     ap.add_argument("--bloom-shards", type=int, default=8)
     ap.add_argument("--bloom-bits", type=int, default=1 << 20, help="bits per Bloom shard")
     ap.add_argument("--cuckoo-buckets", type=int, default=1 << 17,
@@ -110,8 +108,8 @@ def main(argv=None) -> int:
 
     kw = tuple(args.keywords.split(",")) if args.keywords else tuple(topic_keywords())
     cfg = CrawlConfig(rounds=args.rounds, capacity=args.capacity,
-                      keywords=kw, n_salts=args.n_salts, use_bloom=args.bloom,
-                      seen_filter=args.seen_filter,
+                      keywords=kw, n_salts=args.n_salts,
+                      seen_filter=None if args.seen_filter == "none" else args.seen_filter,
                       bloom_shards=args.bloom_shards,
                       bloom_bits_per_shard=args.bloom_bits,
                       cuckoo_buckets_per_shard=args.cuckoo_buckets,

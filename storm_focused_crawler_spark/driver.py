@@ -22,7 +22,8 @@ Scale notes (the 100 TB story, graded against BASELINE.md):
   * politeness runs the two-phase salted top-k (operators/frontier.py)
     so one hot host cannot skew a task;
   * the seen-set probe is an exact anti-join on url_hash (with an
-    optional broadcast-Bloom pre-filter, operators/bloom.py) — the
+    optional Bloom or cuckoo pre-filter, ``CrawlConfig.seen_filter``,
+    probed broadcast or shard-routed by operators/seen_filter.py) — the
     frontier and seen tables are both hash-distributed on url_hash so
     the anti-join co-partitions.
 """
@@ -48,6 +49,12 @@ from storm_focused_crawler_spark.sources.storage import ParquetSnapshotStore
 
 FRONTIER_SCHEMA = "url string, url_hash long, score double, depth int, discovered_round int"
 SEEN_SCHEMA = "url_hash long"
+# append-only per-round deltas (read with store.read_union); a compaction
+# round also commits <table>_full so reads start there
+DELTA_TABLES = ("seen", "host_edges", "postings")
+# full snapshots rewritten every round, only the latest ever read; a
+# compaction round prunes the older ones
+SNAPSHOT_TABLES = ("bloom", "host_sched", "host_used")
 
 
 @dataclass
@@ -57,24 +64,23 @@ class CrawlConfig:
     keywords: tuple[str, ...] = ()
     n_salts: int = 8
     url_buckets: int = 16
-    use_bloom: bool = False
-    # which advisory seen-filter sidecar use_bloom enables: "bloom"
-    # (bitset OR-merge, operators/bloom.py) or "cuckoo" (fingerprint
-    # table with deletion support, operators/cuckoo.py).  Both honor
-    # the same §2.1-3 contract — probe-negative ⇒ definitively unseen;
-    # the exact anti-join stays the membership authority — so the
-    # crawl ordering is identical under either (tested).
-    seen_filter: str = "bloom"
+    # advisory seen-filter sidecar in front of the exact seen anti-join:
+    # None (off), "bloom" (bitset OR-merge, operators/bloom.py) or
+    # "cuckoo" (fingerprint table with deletion support,
+    # operators/cuckoo.py).  Both honor the same §2.1-3 contract —
+    # probe-negative ⇒ definitively unseen; the exact anti-join stays
+    # the membership authority — so the crawl ordering is identical
+    # under any kind (tested).  The probe broadcasts the filter up to
+    # seen_filter.BROADCAST_MAX_BYTES and is shard-routed beyond.
+    seen_filter: str | None = None
     bloom_shards: int = 8
     bloom_bits_per_shard: int = 1 << 20
     # cuckoo sizing: buckets/shard (power of two, 4 slots each) — size
     # for load ≤ 0.8; 2^17 buckets ≈ 524k slots ≈ 1 MiB/shard
     cuckoo_buckets_per_shard: int = 1 << 17
-    # broadcast the filter while total ≤ this; shard-routed probe beyond
-    # (the 10^10-URL / ~12 GiB-bitset path — bloom/cuckoo.probe_routed)
-    bloom_broadcast_max_bytes: int = 64 << 20
-    max_budget: int | None = None  # literal WindowGroupLimit bound; computed once per crawl
-    compact_every: int = 64  # rewrite the full seen set every N rounds (bounds delta-scan fan-in)
+    # every N rounds: write the full set of each DELTA_TABLES table and
+    # prune old SNAPSHOT_TABLES snapshots (bounds read fan-in and state size)
+    compact_every: int = 64
     # commit an inverted-index postings delta per round ([R] TextIndexerBolt
     # counterpart; read the full index with store.read_union(..., 'postings'))
     build_text_index: bool = False
@@ -113,6 +119,42 @@ class CrawlConfig:
     # never enqueued; None = unbounded.  Seeds are depth 0.  Oracle
     # twin: seqcrawler.CrawlConfig.max_depth.
     max_depth: int | None = None
+
+
+def _seen_filter(cfg: CrawlConfig) -> tuple:
+    """(kind module, size parameter per shard, manifest ``bloom_cfg``)
+    for cfg.seen_filter; all None when the filter is off.
+
+    The one place a kind is chosen and its ``bloom_cfg`` built:
+    run_crawl and recrawl both call it, so a resume compares manifests
+    written the same way (a mismatch rebuilds the filter)."""
+    if cfg.seen_filter is None:
+        return None, None, None
+    from storm_focused_crawler_spark.operators import bloom, cuckoo
+
+    if cfg.seen_filter == "bloom":
+        return bloom, cfg.bloom_bits_per_shard, {
+            "n_shards": cfg.bloom_shards, "n_bits": cfg.bloom_bits_per_shard}
+    if cfg.seen_filter == "cuckoo":
+        return cuckoo, cfg.cuckoo_buckets_per_shard, {
+            "kind": "cuckoo", "n_shards": cfg.bloom_shards,
+            "n_buckets": cfg.cuckoo_buckets_per_shard}
+    raise ValueError(
+        f"unknown seen_filter {cfg.seen_filter!r}; expected None, 'bloom' or 'cuckoo'"
+    )
+
+
+def _prev_filter(spark: SparkSession, store: ParquetSnapshotStore, rnd: int,
+                 filt_cfg: dict) -> DataFrame | None:
+    """Round *rnd*'s committed filter shards if they were built under
+    *filt_cfg*, else None (ADVICE r01: resuming with changed kind or
+    sizes must not merge incompatible shards; resuming with the filter
+    newly enabled must not treat a delta-only filter as the full
+    history)."""
+    m = store.manifest(rnd)
+    if "bloom" in m["tables"] and m.get("bloom_cfg") == filt_cfg:
+        return store.read(spark, rnd, "bloom")
+    return None
 
 
 # --------------------------------------------------------------------------
@@ -155,7 +197,6 @@ def run_round(
     rnd: int,
     seed_hashes: list[int],
     bloom_probe=None,
-    compact: bool = False,
     url_expansions: DataFrame | None = None,
     host_ranks: DataFrame | None = None,
     host_carry: DataFrame | None = None,
@@ -199,7 +240,7 @@ def run_round(
             )
             .drop("rank_i")
         )
-    deq = dequeue(elig, host_budget, cfg.capacity, cfg.n_salts, cfg.max_budget,
+    deq = dequeue(elig, host_budget, cfg.capacity, cfg.n_salts,
                   round_ms=cfg.round_ms, host_carry=host_carry,
                   host_cap=cfg.max_pages_per_host, host_used=host_used)
     deq = (
@@ -431,10 +472,6 @@ def run_round(
         out_tables["postings"] = TI.postings(
             ex.select("url", "text_x"), "url", "text_x"
         )
-    if compact:
-        # periodic full rewrite of the seen set in THIS round's atomic
-        # commit; read_union then scans [seen_full] + later deltas only
-        out_tables["seen_full"] = seen_next
     return out_tables
 
 
@@ -452,8 +489,8 @@ def run_crawl(
 ) -> ParquetSnapshotStore:
     import time
 
-    import dataclasses
-
+    # rejects an unknown kind before any commit
+    filt, filt_param, filt_cfg = _seen_filter(cfg)
     store = ParquetSnapshotStore(os.path.join(workdir, "state"))
     corpus_path = prepare_corpus(spark, fixture_paths["pages"], workdir, cfg.url_buckets)
     corpus = spark.read.parquet(corpus_path)
@@ -498,12 +535,6 @@ def run_crawl(
         if has_interval
         else None
     )
-    if cfg.max_budget is None:
-        # never mutate the caller's cfg: a reused CrawlConfig against a
-        # different host_budget table would carry a stale literal bound
-        # (dequeue asserts the literal dominates the table's max budget)
-        row = host_budget.agg(F.max("budget")).collect()[0][0]
-        cfg = dataclasses.replace(cfg, max_budget=max(int(row or 0), 2))
     with open(fixture_paths["seeds"]) as f:
         seeds = [spec.canon(u) for u in json.load(f)]
     sitemap_entries: list[tuple[str, float]] = []
@@ -587,39 +618,17 @@ def run_crawl(
         seen = store.read_union(spark, last, "seen")
         start = last + 1
 
-    from storm_focused_crawler_spark.operators import bloom, cuckoo
+    from storm_focused_crawler_spark.operators import seen_filter
 
-    # the two sidecars share one module API (build_shards/merge_shards/
-    # probe_transform(spark, shards, n_shards, PARAM2, broadcast_max));
-    # PARAM2 is bits-per-shard for bloom, buckets-per-shard for cuckoo
-    if cfg.seen_filter == "cuckoo":
-        filt, filt_param2 = cuckoo, cfg.cuckoo_buckets_per_shard
-        bloom_cfg = {"kind": "cuckoo", "n_shards": cfg.bloom_shards,
-                     "n_buckets": cfg.cuckoo_buckets_per_shard}
-    else:
-        filt, filt_param2 = bloom, cfg.bloom_bits_per_shard
-        bloom_cfg = {"n_shards": cfg.bloom_shards, "n_bits": cfg.bloom_bits_per_shard}
     for rnd in range(start, cfg.rounds):
         t0 = time.time()
-        # a previous bloom is usable only if it exists AND was built with
-        # the same shard/bit config (ADVICE r01: resuming with changed
-        # bloom_shards/bits must not OR incompatible bitsets; resuming
-        # with bloom newly enabled must not treat a delta-only filter as
-        # the full history)
-        have_prev_bloom = False
-        if cfg.use_bloom and rnd > 0:
-            prev_m = store.manifest(rnd - 1)
-            have_prev_bloom = (
-                "bloom" in prev_m["tables"] and prev_m.get("bloom_cfg") == bloom_cfg
-            )
-        probe = None
-        if have_prev_bloom:
-            # shards snapshot committed by the previous round; advisory
-            # only — eligible() re-checks positives exactly (§2.1-3)
-            shards = store.read(spark, rnd - 1, "bloom")
-            probe = filt.probe_transform(
-                spark, shards, cfg.bloom_shards, filt_param2,
-                broadcast_max_bytes=cfg.bloom_broadcast_max_bytes,
+        prev_shards = probe = None
+        if filt is not None and rnd > 0:
+            prev_shards = _prev_filter(spark, store, rnd - 1, filt_cfg)
+        if prev_shards is not None:
+            # advisory only — eligible() re-checks positives exactly (§2.1-3)
+            probe = seen_filter.probe_transform(
+                spark, filt, prev_shards, cfg.bloom_shards, filt_param
             )
         host_ranks = pr_out = None
         if cfg.host_rank_weight > 0 and rnd > 0:
@@ -664,7 +673,6 @@ def run_crawl(
         out = run_round(
             spark, corpus, frontier, seen, robots, host_budget, cfg, rnd, seed_hashes,
             bloom_probe=probe,
-            compact=compact_now,
             url_expansions=url_expansions,
             host_ranks=host_ranks,
             host_carry=host_carry,
@@ -687,14 +695,13 @@ def run_crawl(
                 .agg(F.max("last_abs_ms").alias("last_abs_ms"))
             )
         if compact_now:
-            # compaction applies to EVERY append-only delta table, not
-            # just `seen`: a 1000-round crawl otherwise pays an
-            # unbounded multi-path fan-in on read_union('host_edges' /
-            # 'postings') each round.  <table>_full in this round's
-            # atomic commit + the manifest pointer = the same O(1)
-            # resolution the seen set gets.  The _full set must include
-            # THIS round's delta (read_union starts deltas at base+1).
-            for tbl in ("host_edges", "postings"):
+            # a 1000-round crawl otherwise pays an unbounded multi-path
+            # fan-in on read_union of every delta table each round.
+            # <table>_full in this round's atomic commit + the manifest
+            # pointer resolve the read in O(1).  The _full set must
+            # include THIS round's delta (read_union starts deltas at
+            # base+1).
+            for tbl in DELTA_TABLES:
                 if tbl not in out:
                     continue
                 try:
@@ -704,21 +711,19 @@ def run_crawl(
                 out[f"{tbl}_full"] = (
                     out[tbl] if prior is None else prior.unionByName(out[tbl])
                 )
-        if cfg.use_bloom:
-            if have_prev_bloom:
-                # incremental: hash only this round's delta, OR into prev
-                new_shards = filt.merge_shards(
-                    store.read(spark, rnd - 1, "bloom"),
-                    filt.build_shards(out["seen"], cfg.bloom_shards, filt_param2),
+        if filt is not None:
+            if prev_shards is not None:
+                # incremental: hash only this round's delta, merge into prev
+                out["bloom"] = filt.merge_shards(
+                    prev_shards, filt.build_shards(out["seen"], cfg.bloom_shards, filt_param)
                 )
             else:
-                # no usable prior filter (bloom newly enabled mid-crawl,
+                # no usable prior filter (filter newly enabled mid-crawl,
                 # or config changed): rebuild from the FULL seen set so
-                # pre-bloom rounds stay covered — a delta-only filter
+                # pre-filter rounds stay covered — a delta-only filter
                 # would route their URLs past the anti-join as sure_new
                 full = seen.select("url_hash").unionByName(out["seen"].select("url_hash"))
-                new_shards = filt.build_shards(full, cfg.bloom_shards, filt_param2)
-            out["bloom"] = new_shards
+                out["bloom"] = filt.build_shards(full, cfg.bloom_shards, filt_param)
         persisted = out.pop("_persisted")
         observations = out.pop("_observations", {})
         counts = store.write_round(rnd, out)
@@ -753,23 +758,15 @@ def run_crawl(
                     )
                     stage_metrics[name] = {"rows": 0, "error": repr(e)}
         amend = {"wall_sec": round(time.time() - t0, 3), "stages": stage_metrics}
-        if cfg.use_bloom:
-            amend["bloom_cfg"] = bloom_cfg
+        if filt is not None:
+            amend["bloom_cfg"] = filt_cfg
         store.amend_manifest(rnd, amend)
-        if compact_now and cfg.use_bloom:
-            # the filter sidecar is a FULL snapshot per round and only
-            # the latest is ever read — fold older snapshots into the
-            # compaction-round cleanup so the state dir holds
-            # O(compact_every) of them on a 1000-round crawl
-            store.prune_table("bloom", rnd)
-        if compact_now and has_interval:
-            # host_sched is likewise a full snapshot; keep only the latest
-            store.prune_table("host_sched", rnd)
-        if compact_now and cfg.max_pages_per_host is not None:
-            # host_used accumulates whenever the quota knob is on —
-            # gating its pruning on has_interval left the per-round
-            # full snapshots unpruned for delay-free crawls (ADVICE r05)
-            store.prune_table("host_used", rnd)
+        if compact_now:
+            # only the latest snapshot is ever read, so the state dir
+            # holds O(compact_every) of each on a 1000-round crawl
+            for tbl in SNAPSHOT_TABLES:
+                if tbl in counts:
+                    store.prune_table(tbl, rnd)
         # cut lineage: next round reads the committed snapshot
         frontier = store.read(spark, rnd, "frontier")
         seen = store.read_union(spark, rnd, "seen")
@@ -843,6 +840,8 @@ def recrawl(
     the maintenance round consumes one round slot; continue crawling by
     calling ``run_crawl`` with a larger ``cfg.rounds``.
     """
+    # rejects an unknown kind before the maintenance commit
+    filt, filt_param, filt_cfg = _seen_filter(cfg)
     last = store.latest_round()
     if last is None:
         raise ValueError("recrawl needs at least one committed round")
@@ -883,32 +882,18 @@ def recrawl(
         tables["host_sched"] = store.read(spark, last, "host_sched")
 
     amend: dict = {"maintenance": "recrawl"}
-    if cfg.use_bloom:
-        from storm_focused_crawler_spark.operators import bloom, cuckoo
-
-        prev_m = store.manifest(last)
-        if cfg.seen_filter == "cuckoo":
-            bloom_cfg = {"kind": "cuckoo", "n_shards": cfg.bloom_shards,
-                         "n_buckets": cfg.cuckoo_buckets_per_shard}
-            if "bloom" in prev_m["tables"] and prev_m.get("bloom_cfg") == bloom_cfg:
-                # targeted deletion: each victim touches one shard
-                tables["bloom"] = cuckoo.delete_from_shards(
-                    store.read(spark, last, "bloom"),
-                    v.select("url_hash"),
-                    cfg.bloom_shards,
-                )
-            else:
-                tables["bloom"] = cuckoo.build_shards(
-                    seen_full, cfg.bloom_shards, cfg.cuckoo_buckets_per_shard
-                )
-        else:
-            # Bloom cannot delete — rebuild from the compacted seen set
-            bloom_cfg = {"n_shards": cfg.bloom_shards,
-                         "n_bits": cfg.bloom_bits_per_shard}
-            tables["bloom"] = bloom.build_shards(
-                seen_full, cfg.bloom_shards, cfg.bloom_bits_per_shard
+    if filt is not None:
+        prev_shards = _prev_filter(spark, store, last, filt_cfg)
+        if prev_shards is not None and hasattr(filt, "delete_from_shards"):
+            # cuckoo: targeted deletion, each victim touches one shard
+            tables["bloom"] = filt.delete_from_shards(
+                prev_shards, v.select("url_hash"), cfg.bloom_shards
             )
-        amend["bloom_cfg"] = bloom_cfg
+        else:
+            # Bloom cannot delete (nor can a filter built under another
+            # config be edited) — rebuild from the compacted seen set
+            tables["bloom"] = filt.build_shards(seen_full, cfg.bloom_shards, filt_param)
+        amend["bloom_cfg"] = filt_cfg
 
     store.write_round(mnt, tables)
     store.amend_manifest(mnt, amend)

@@ -7,8 +7,7 @@ built via vectorized Arrow UDFs").  Here the seen set's Bloom sidecar
 is sharded by ``pmod(url_hash, n_shards)``; each shard's bitset is
 built by a grouped Arrow UDF (numpy, no per-row Python), shards are
 mergeable by bitwise OR (so incremental rounds just OR the new round's
-shards in), and the probe is a broadcast of the small bitsets plus a
-vectorized pandas UDF.
+shards in), and the probe is a vectorized pandas UDF over the bitsets.
 
 Correctness discipline (§2.1-3): the Bloom is ADVISORY.  Probe-negative
 rows are definitively unseen (no false negatives — property-tested);
@@ -16,34 +15,19 @@ probe-positive rows go to the exact anti-join, which remains the
 membership authority.  At a 10^10 frontier this cuts the anti-join's
 probe side to the ~0.1% of rows that are Bloom-positive.
 
-Two probe strategies share the same bitsets:
-
-  * ``probe_transform`` broadcast mode — collect all shards into one
-    broadcast dict, probe via scalar pandas UDF.  Right while the total
-    bitset fits comfortably in executor memory: bits_per_shard=2^23
-    (1 MiB) × 64 shards ≈ 64 MiB for ~5×10^8 seen URLs at FPR≈1%, k=5.
-  * ``probe_transform`` routed mode — co-partition the frontier by
-    shard id and cogroup it with the shard table, so each task loads
-    ONLY its own shard's bitset (one Arrow batch group per shard;
-    numpy probe inside).  This is the 10^10-URL path: at 1% FPR that
-    seen set needs ~12 GiB of bitset — unbroadcastable — but split
-    over 1024 shards it is ~12 MiB per shard, and a task touches
-    exactly one.  Cost: one shuffle of the (narrow) frontier keyed by
-    shard — at that scale strictly cheaper than shipping 12 GiB to
-    every executor.
-
-The driver picks automatically: broadcast while
-``n_shards · n_bits/8 ≤ CrawlConfig.bloom_broadcast_max_bytes``,
-routed beyond (tests force both and assert identical output).
+The probe itself — broadcast, or shard-routed beyond
+``seen_filter.BROADCAST_MAX_BYTES`` — is operators/seen_filter.py,
+shared with the cuckoo sidecar; this module supplies the kind's
+``shard_bytes`` / ``decode`` / ``member`` trio it calls.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
+from pyspark.sql import DataFrame
+
+from storm_focused_crawler_spark.operators.seen_filter import shard_col
 
 K_HASHES = 5
 
@@ -68,7 +52,16 @@ def _set_bits(bits: np.ndarray, pos: np.ndarray) -> None:
     np.bitwise_or.at(bits, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
 
 
-def _test_bits(bits: np.ndarray, hashes: np.ndarray, n_bits: int) -> np.ndarray:
+def shard_bytes(n_bits: int) -> int:
+    return n_bits // 8
+
+
+def decode(shard, n_bits: int) -> np.ndarray:
+    """One shard row → its bitset."""
+    return np.frombuffer(shard["bits"], dtype=np.uint8)
+
+
+def member(bits: np.ndarray, hashes: np.ndarray, n_bits: int) -> np.ndarray:
     pos = _positions(hashes, n_bits).reshape(-1, K_HASHES)
     hit = (bits[pos >> 3] & (1 << (pos & 7)).astype(np.uint8)) != 0
     return hit.all(axis=1)
@@ -86,7 +79,7 @@ def build_shards(df: DataFrame, n_shards: int, n_bits: int) -> DataFrame:
              "n": [len(pdf)]}
         )
 
-    withshard = df.withColumn("shard", F.pmod(F.col("url_hash"), F.lit(n_shards)).cast("int"))
+    withshard = df.withColumn("shard", shard_col(n_shards))
     return withshard.groupBy("shard").applyInPandas(build, "shard int, bits binary, n long")
 
 
@@ -104,86 +97,3 @@ def merge_shards(a: DataFrame, b: DataFrame) -> DataFrame:
 
     return a.unionByName(b).groupBy("shard").applyInPandas(orr, "shard int, bits binary, n long")
 
-
-def probe_transform(
-    spark: SparkSession,
-    shards: DataFrame,
-    n_shards: int,
-    n_bits: int,
-    broadcast_max_bytes: int = 64 << 20,
-):
-    """DataFrame transformer: df → df + boolean ``_maybe`` column.
-
-    Picks broadcast vs shard-routed probing by total bitset size (see
-    module docstring).  Input df must carry ``url_hash``.
-    """
-    total_bytes = n_shards * (n_bits // 8)
-    if total_bytes <= broadcast_max_bytes:
-        col_fn = probe_col(spark, shards, n_shards, n_bits)
-        return lambda df: df.withColumn("_maybe", col_fn(F.col("url_hash")))
-    return lambda df: probe_routed(df, shards, n_shards, n_bits)
-
-
-def probe_routed(
-    df: DataFrame, shards: DataFrame, n_shards: int, n_bits: int
-) -> DataFrame:
-    """Shard-routed probe: adds ``_maybe`` without broadcasting any bitset.
-
-    The frontier is hash-partitioned by shard id and cogrouped with the
-    shard table, so each task receives (its frontier rows, its ONE
-    bitset row) — per-executor memory is bounded by shards-per-task,
-    never the full filter.  Probe is the same vectorized numpy test as
-    the broadcast path (identical output, property-tested).
-    """
-    out_schema = T.StructType(
-        list(df.schema.fields) + [T.StructField("_maybe", T.BooleanType())]
-    )
-
-    def probe(fr: pd.DataFrame, sh: pd.DataFrame) -> pd.DataFrame:
-        fr = fr.drop(columns=["_shard"])
-        if fr.empty:
-            fr["_maybe"] = pd.Series([], dtype=bool)
-            return fr
-        if sh.empty:  # shard never built → nothing seen in it
-            fr["_maybe"] = False
-            return fr
-        bits = np.frombuffer(sh["bits"].iloc[0], dtype=np.uint8)
-        h = fr["url_hash"].to_numpy(dtype=np.int64).view(np.uint64)
-        fr["_maybe"] = _test_bits(bits, h, n_bits)
-        return fr
-
-    keyed = df.withColumn(
-        "_shard", F.pmod(F.col("url_hash"), F.lit(n_shards)).cast("int")
-    )
-    return (
-        keyed.groupBy("_shard")
-        .cogroup(shards.groupBy("shard"))
-        .applyInPandas(probe, out_schema)
-    )
-
-
-def probe_col(spark: SparkSession, shards: DataFrame, n_shards: int, n_bits: int):
-    """Returns a column-function: url_hash → maybe_seen (vectorized probe).
-
-    Broadcasts the collected bitsets once; the pandas UDF probes numpy-
-    side.  Use as: df.withColumn('maybe_seen', probe(F.col('url_hash'))).
-    Only valid while the total bitset is broadcast-sized — the routed
-    twin above is the beyond-broadcast path.
-    """
-    blobs = {int(r["shard"]): np.frombuffer(r["bits"], dtype=np.uint8) for r in shards.collect()}
-    empty = np.zeros(n_bits // 8, dtype=np.uint8)
-    bc = spark.sparkContext.broadcast({s: b for s, b in blobs.items()})
-
-    @F.pandas_udf("boolean")
-    def maybe_seen(url_hash: pd.Series) -> pd.Series:
-        h = url_hash.to_numpy(dtype=np.int64).view(np.uint64)
-        shard = (url_hash.to_numpy(dtype=np.int64) % n_shards + n_shards) % n_shards
-        out = np.zeros(len(h), dtype=bool)
-        table = bc.value
-        for s in np.unique(shard):
-            m = shard == s
-            bits = table.get(int(s), empty)
-            out[m] = _test_bits(bits, h[m], n_bits)
-        return pd.Series(out)
-
-    return maybe_seen

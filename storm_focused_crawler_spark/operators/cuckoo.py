@@ -38,13 +38,9 @@ UNCONDITIONAL, not load-dependent — property-tested in
 tests/test_cuckoo.py, including at adversarial load factors.
 
 Shards are keyed by ``pmod(url_hash, n_shards)`` exactly like the
-Bloom shards, and the probe offers the same two modes behind the same
-``probe_transform`` API the driver already speaks:
-
-  * broadcast — collect the (small) shard tables, scalar pandas UDF;
-  * shard-routed cogroup — each task loads only its own shard's
-    table; the 10^10-URL path where the total table out-sizes a
-    broadcast.
+Bloom shards, and the probe — broadcast, or shard-routed cogroup for
+the 10^10-URL path — is the same operators/seen_filter.py harness,
+calling this module's ``shard_bytes`` / ``decode`` / ``member``.
 
 Merging two shard sets re-inserts the smaller side's stored
 fingerprints into the larger side's table (sorted, deterministic).
@@ -58,9 +54,9 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
+from pyspark.sql import DataFrame
+
+from storm_focused_crawler_spark.operators.seen_filter import shard_col
 
 SLOTS = 4
 PLACE_PASSES = 8     # free-slot-only passes before evictions start
@@ -200,9 +196,17 @@ def _entries(table: np.ndarray, stash: list[tuple[int, int]]) -> np.ndarray:
     return pairs[order]
 
 
-def _probe_one(
-    table: np.ndarray, stash: list[tuple[int, int]], h: np.ndarray, n_buckets: int
-) -> np.ndarray:
+def shard_bytes(n_buckets: int) -> int:
+    return n_buckets * SLOTS * 2
+
+
+def decode(shard, n_buckets: int):
+    """One shard row → its (table, stash)."""
+    return _deserialize(shard["table"], shard["stash"], n_buckets)
+
+
+def member(state, h: np.ndarray, n_buckets: int) -> np.ndarray:
+    table, stash = state
     fp = _fingerprint(h)
     b1 = _bucket1(h, n_buckets)
     b2 = _alt_bucket(b1, fp, n_buckets)
@@ -233,9 +237,7 @@ def build_shards(df: DataFrame, n_shards: int, n_buckets: int) -> DataFrame:
              "n": [len(h)]}
         )
 
-    withshard = df.withColumn(
-        "shard", F.pmod(F.col("url_hash"), F.lit(n_shards)).cast("int")
-    )
+    withshard = df.withColumn("shard", shard_col(n_shards))
     return withshard.groupBy("shard").applyInPandas(build, _SHARD_SCHEMA)
 
 
@@ -309,85 +311,10 @@ def delete_from_shards(shards: DataFrame, victims: DataFrame, n_shards: int) -> 
              "n": [int(sh["n"].iloc[0])]}
         )
 
-    keyed = victims.withColumn(
-        "shard", F.pmod(F.col("url_hash"), F.lit(n_shards)).cast("int")
-    )
+    keyed = victims.withColumn("shard", shard_col(n_shards))
     return (
         shards.groupBy("shard")
         .cogroup(keyed.groupBy("shard"))
         .applyInPandas(dele, _SHARD_SCHEMA)
     )
 
-
-def probe_transform(
-    spark: SparkSession,
-    shards: DataFrame,
-    n_shards: int,
-    n_buckets: int,
-    broadcast_max_bytes: int = 64 << 20,
-):
-    """DataFrame transformer: df → df + boolean ``_maybe`` column —
-    same contract as bloom.probe_transform, so driver.run_round and
-    frontier.eligible take either interchangeably."""
-    total_bytes = n_shards * n_buckets * SLOTS * 2
-    if total_bytes <= broadcast_max_bytes:
-        col_fn = probe_col(spark, shards, n_shards, n_buckets)
-        return lambda df: df.withColumn("_maybe", col_fn(F.col("url_hash")))
-    return lambda df: probe_routed(df, shards, n_shards, n_buckets)
-
-
-def probe_routed(
-    df: DataFrame, shards: DataFrame, n_shards: int, n_buckets: int
-) -> DataFrame:
-    """Shard-routed probe: cogroup by shard id, each task loads ONE
-    shard's table — the beyond-broadcast (10^10-URL) path."""
-    out_schema = T.StructType(
-        list(df.schema.fields) + [T.StructField("_maybe", T.BooleanType())]
-    )
-
-    def probe(fr: pd.DataFrame, sh: pd.DataFrame) -> pd.DataFrame:
-        fr = fr.drop(columns=["_shard"])
-        if fr.empty:
-            fr["_maybe"] = pd.Series([], dtype=bool)
-            return fr
-        if sh.empty:
-            fr["_maybe"] = False
-            return fr
-        table, stash = _deserialize(sh["table"].iloc[0], sh["stash"].iloc[0], n_buckets)
-        h = fr["url_hash"].to_numpy(dtype=np.int64).view(np.uint64)
-        fr["_maybe"] = _probe_one(table, stash, h, n_buckets)
-        return fr
-
-    keyed = df.withColumn(
-        "_shard", F.pmod(F.col("url_hash"), F.lit(n_shards)).cast("int")
-    )
-    return (
-        keyed.groupBy("_shard")
-        .cogroup(shards.groupBy("shard"))
-        .applyInPandas(probe, out_schema)
-    )
-
-
-def probe_col(spark: SparkSession, shards: DataFrame, n_shards: int, n_buckets: int):
-    """url_hash → maybe_seen column function over broadcast shard tables."""
-    rows = shards.collect()
-    tables = {
-        int(r["shard"]): _deserialize(r["table"], r["stash"], n_buckets)
-        for r in rows
-    }
-    bc = spark.sparkContext.broadcast(tables)
-    empty_table = np.zeros((n_buckets, SLOTS), dtype=np.uint16)
-
-    @F.pandas_udf("boolean")
-    def maybe_seen(url_hash: pd.Series) -> pd.Series:
-        h = url_hash.to_numpy(dtype=np.int64).view(np.uint64)
-        shard = (url_hash.to_numpy(dtype=np.int64) % n_shards + n_shards) % n_shards
-        out = np.zeros(len(h), dtype=bool)
-        tbl = bc.value
-        for s in np.unique(shard):
-            m = shard == s
-            table, stash = tbl.get(int(s), (empty_table, []))
-            out[m] = _probe_one(table, stash, h[m], n_buckets)
-        return pd.Series(out)
-
-    return maybe_seen

@@ -44,14 +44,13 @@ def eligible(
     """frontier ∖ seen, minus robots-blocked (§2.1-5 pre-filter).
 
     seen is probed by url_hash with an exact LEFT ANTI join — the Bloom
-    sidecar (operators/bloom.py) pre-filters the probe side when
-    *bloom_probe* is given (a DataFrame transformer adding a boolean
-    ``_maybe`` column — broadcast or shard-routed, bloom.probe_transform),
-    but the anti-join stays the membership authority (§2.1-3):
-    Bloom-negative rows are DEFINITIVELY unseen (no false negatives,
-    property-tested) and skip the join entirely; only Bloom-positive
-    rows — ~FPR·|frontier| + |actually seen| — touch the 10^10-hash
-    seen table.
+    or cuckoo sidecar pre-filters the probe side when *bloom_probe* is
+    given (a DataFrame transformer adding a boolean ``_maybe`` column —
+    broadcast or shard-routed, seen_filter.probe_transform), but the
+    anti-join stays the membership authority (§2.1-3): filter-negative
+    rows are DEFINITIVELY unseen (no false negatives, property-tested)
+    and skip the join entirely; only filter-positive rows —
+    ~FPR·|frontier| + |actually seen| — touch the 10^10-hash seen table.
 
     robots carries full REP semantics (operators/robots.py: Allow +
     longest-match, RFC 9309); legacy (host, disallow_prefix) tables are
@@ -121,22 +120,18 @@ def dequeue(
     full-sort every hot-host group at 10^10-frontier scale.  Verified
     by tests/test_plans.py::test_dequeue_uses_window_group_limit.
     """
+    # one scalar off a broadcast-sized dim table, computed at plan build
+    row = host_budget.agg(F.max("budget")).collect()[0][0]
+    table_max = max(int(row or 0), DEFAULT_BUDGET)
     if max_budget is None:
-        # one scalar off a broadcast-sized dim table, computed at plan
-        # build; callers on a hot path pass it explicitly (CrawlConfig)
-        row = host_budget.agg(F.max("budget")).collect()[0][0]
-        max_budget = max(int(row or 0), DEFAULT_BUDGET)
-    else:
+        max_budget = table_max
+    elif max_budget < table_max:
         # the literal WindowGroupLimit bound MUST dominate every row's
-        # budget or rows below the real per-host budget are silently
-        # pruned; cheap scalar check (host_budget is dim-table-sized)
-        row = host_budget.agg(F.max("budget")).collect()[0][0]
-        table_max = max(int(row or 0), DEFAULT_BUDGET)
-        if max_budget < table_max:
-            raise ValueError(
-                f"max_budget literal {max_budget} < host_budget table max "
-                f"{table_max}; dequeue would under-schedule hosts"
-            )
+        # budget or rows below the real per-host budget are silently pruned
+        raise ValueError(
+            f"max_budget literal {max_budget} < host_budget table max "
+            f"{table_max}; dequeue would under-schedule hosts"
+        )
     b = elig.join(F.broadcast(host_budget), "host", "left").withColumn(
         "budget", F.coalesce(F.col("budget"), F.lit(DEFAULT_BUDGET))
     )

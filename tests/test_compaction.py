@@ -113,7 +113,7 @@ def test_filter_sidecar_snapshots_pruned_on_compaction(spark, sf_dir, tmp_path):
             rounds=rounds, capacity=32,
             keywords=tuple(gen_pages.topic_keywords()),
             compact_every=compact_every,
-            use_bloom=True, seen_filter="cuckoo",
+            seen_filter="cuckoo",
             bloom_shards=4, cuckoo_buckets_per_shard=1 << 10, **kw,
         )
 
@@ -150,3 +150,38 @@ def test_filter_sidecar_snapshots_pruned_on_compaction(spark, sf_dir, tmp_path):
     store2 = drv.run_crawl(spark, paths, cfg(11, 3), wd, resume=True)
     assert store2.latest_round() == 10
     assert bloom_rounds() == [8, 9, 10]  # next compaction lands at 11
+
+
+def test_host_used_snapshots_pruned_on_compaction(spark, sf_dir, tmp_path):
+    """host_used (the per-host quota spend) is a full snapshot per round
+    like the filter sidecar.  A crawl with the quota on and no crawl
+    delay must prune it on compaction rounds too (ADVICE r05: its
+    pruning was once gated on the crawl-delay setting), with ordering
+    and seen state equal to an uncompacted run."""
+    import os
+
+    paths = gen_pages.ensure(sf_dir)
+    rounds = 6
+
+    def cfg(compact_every):
+        return drv.CrawlConfig(
+            rounds=rounds, capacity=32,
+            keywords=tuple(gen_pages.topic_keywords()),
+            compact_every=compact_every, max_pages_per_host=3,
+        )
+
+    store = drv.run_crawl(spark, paths, cfg(3), str(tmp_path / "used"))
+    have = sorted(
+        r for r in range(rounds)
+        if os.path.isdir(os.path.join(store.root, f"round={r}", "host_used"))
+    )
+    # compactions at rounds 2 and 5; the last pruned every snapshot below 5
+    assert have == [5], have
+    assert "host_used" in store.manifest(5)["tables"]
+    for r in range(5):
+        m = store.manifest(r)
+        assert "host_sched" not in m["tables"], r  # no crawl delay
+        assert "host_used" not in m["tables"], r
+        assert "host_used" in m.get("pruned", {}), r
+    ref = drv.run_crawl(spark, paths, cfg(0), str(tmp_path / "used_ref"))
+    assert _state(spark, store, rounds) == _state(spark, ref, rounds)

@@ -1,7 +1,8 @@
 """Cuckoo seen-filter properties (SURVEY.md §5.2-3, cuckoo half of the
 north star's "Bloom/cuckoo-filter URL-seen set"): unconditional zero
 false negatives (incl. adversarial load), bounded FPR, semantic merge,
-deletion, and broadcast == routed probe."""
+and deletion.  The broadcast/routed probe modes are tested for both
+kinds in test_seen_filter.py."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from storm_focused_crawler_spark.operators import cuckoo as C
+from storm_focused_crawler_spark.operators import seen_filter as SF
 
 N_BUCKETS = 1 << 10   # 4096 slots/shard
 N_SHARDS = 4
@@ -29,7 +31,7 @@ def test_no_false_negatives(spark, hashes):
     inserted = hashes[:2000]
     df = _hdf(spark, inserted)
     shards = C.build_shards(df, N_SHARDS, N_BUCKETS)
-    probe = C.probe_col(spark, shards, N_SHARDS, N_BUCKETS)
+    probe = SF.probe_col(spark, C, shards, N_SHARDS, N_BUCKETS)
     miss = df.withColumn("m", probe(F.col("url_hash"))).filter(~F.col("m")).count()
     assert miss == 0
 
@@ -42,7 +44,7 @@ def test_no_false_negatives_at_adversarial_load(spark, hashes):
     dense = rng.randint(-(2 ** 63), 2 ** 63 - 1, size=n, dtype=np.int64)
     df = _hdf(spark, dense)
     shards = C.build_shards(df, N_SHARDS, N_BUCKETS)
-    probe = C.probe_col(spark, shards, N_SHARDS, N_BUCKETS)
+    probe = SF.probe_col(spark, C, shards, N_SHARDS, N_BUCKETS)
     miss = df.withColumn("m", probe(F.col("url_hash"))).filter(~F.col("m")).count()
     assert miss == 0
 
@@ -50,7 +52,7 @@ def test_no_false_negatives_at_adversarial_load(spark, hashes):
 def test_fpr_bounded(spark, hashes):
     inserted, fresh = hashes[:2000], hashes[2000:]
     shards = C.build_shards(_hdf(spark, inserted), N_SHARDS, N_BUCKETS)
-    probe = C.probe_col(spark, shards, N_SHARDS, N_BUCKETS)
+    probe = SF.probe_col(spark, C, shards, N_SHARDS, N_BUCKETS)
     fp = (
         _hdf(spark, fresh)
         .withColumn("m", probe(F.col("url_hash")))
@@ -62,41 +64,6 @@ def test_fpr_bounded(spark, hashes):
     assert fp / len(fresh) <= max(4 * theo, 0.005), (fp / len(fresh), theo)
 
 
-def test_routed_probe_equals_broadcast_probe(spark, hashes):
-    inserted = hashes[:2000]
-    df = _hdf(spark, hashes)
-    shards = C.build_shards(_hdf(spark, inserted), N_SHARDS, N_BUCKETS)
-    col_fn = C.probe_col(spark, shards, N_SHARDS, N_BUCKETS)
-    bcast = {r["url_hash"]: r["m"]
-             for r in df.withColumn("m", col_fn(F.col("url_hash"))).collect()}
-    routed = {r["url_hash"]: r["_maybe"]
-              for r in C.probe_routed(df, shards, N_SHARDS, N_BUCKETS).collect()}
-    assert bcast == routed
-
-
-def test_routed_probe_plan_is_cogrouped_not_broadcast(spark, hashes):
-    ins = _hdf(spark, hashes[:100])
-    shards = C.build_shards(ins, N_SHARDS, N_BUCKETS)
-    plan = (
-        C.probe_routed(ins, shards, N_SHARDS, N_BUCKETS)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "FlatMapCoGroupsInPandas" in plan
-    assert "BroadcastExchange" not in plan
-
-
-def test_probe_transform_picks_mode_by_size(spark, hashes):
-    ins = _hdf(spark, hashes[:100])
-    shards = C.build_shards(ins, N_SHARDS, N_BUCKETS)
-    routed = C.probe_transform(spark, shards, N_SHARDS, N_BUCKETS, broadcast_max_bytes=0)
-    plan = routed(ins)._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapCoGroupsInPandas" in plan
-    bcast = C.probe_transform(spark, shards, N_SHARDS, N_BUCKETS,
-                              broadcast_max_bytes=1 << 30)
-    plan2 = bcast(ins)._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapCoGroupsInPandas" not in plan2
-
-
 def test_merge_probes_as_union(spark, hashes):
     """Merged shards answer positive for every member of either input
     (semantic contract — table BYTES may differ from a rebuild, unlike
@@ -106,7 +73,7 @@ def test_merge_probes_as_union(spark, hashes):
         C.build_shards(_hdf(spark, a), N_SHARDS, N_BUCKETS),
         C.build_shards(_hdf(spark, b), N_SHARDS, N_BUCKETS),
     )
-    probe = C.probe_col(spark, merged, N_SHARDS, N_BUCKETS)
+    probe = SF.probe_col(spark, C, merged, N_SHARDS, N_BUCKETS)
     both = _hdf(spark, np.concatenate([a, b]))
     miss = both.withColumn("m", probe(F.col("url_hash"))).filter(~F.col("m")).count()
     assert miss == 0
@@ -144,7 +111,7 @@ def test_delete_removes_only_victims(spark, hashes):
     assert not (key(hv) & key(hs)), "fixture seed produced a collision; pick another"
     shards = C.build_shards(_hdf(spark, inserted), N_SHARDS, N_BUCKETS)
     after = C.delete_from_shards(shards, _hdf(spark, victims), N_SHARDS)
-    probe = C.probe_col(spark, after, N_SHARDS, N_BUCKETS)
+    probe = SF.probe_col(spark, C, after, N_SHARDS, N_BUCKETS)
     # survivors: unconditionally still present
     miss = (
         _hdf(spark, survivors)

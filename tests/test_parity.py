@@ -73,53 +73,63 @@ def test_crawl_parity(spark, fixture_paths, oracle_result, tmp_path, parts):
         assert vals[2:] == omap[url][2:]
 
 
-def test_crawl_parity_with_bloom(spark, fixture_paths, oracle_result, tmp_path):
-    """With the Bloom pre-filter ON, results are IDENTICAL — the Bloom
-    is advisory (§2.1-3): negatives skip the anti-join (no false
-    negatives), positives are re-checked exactly."""
-    wd = str(tmp_path / "bloomrun")
+SEEN_FILTERS = {
+    "bloom": dict(seen_filter="bloom", bloom_shards=4, bloom_bits_per_shard=1 << 16),
+    "cuckoo": dict(seen_filter="cuckoo", bloom_shards=4, cuckoo_buckets_per_shard=1 << 10),
+}
+
+
+@pytest.mark.parametrize("kind,routed", [
+    pytest.param(kind, routed, id=f"{kind}-{'routed' if routed else 'broadcast'}")
+    for kind in SEEN_FILTERS
+    for routed in (False, True)
+])
+def test_crawl_parity_with_seen_filter(
+    spark, fixture_paths, oracle_result, tmp_path, monkeypatch, kind, routed
+):
+    """With a Bloom or cuckoo pre-filter ON, results are IDENTICAL — the
+    filter is advisory (§2.1-3): negatives skip the anti-join (no false
+    negatives), positives are re-checked exactly.  Run in broadcast
+    probe mode and FORCED onto the shard-routed (beyond-broadcast) path
+    — the 10^10-URL configuration; the probe calls prove which mode ran."""
+    from storm_focused_crawler_spark.operators import seen_filter as SF
+
+    calls = []
+    for name in ("probe_col", "probe_routed"):
+        def spy(*a, _real=getattr(SF, name), _name=name):
+            calls.append(_name)
+            return _real(*a)
+
+        monkeypatch.setattr(SF, name, spy)
+    if routed:
+        monkeypatch.setattr(SF, "BROADCAST_MAX_BYTES", 0)
+    wd = str(tmp_path / f"{kind}{routed}")
     cfg = drv.CrawlConfig(
         rounds=ROUNDS, capacity=CAPACITY,
         keywords=tuple(gen_pages.topic_keywords()),
-        use_bloom=True, bloom_shards=4, bloom_bits_per_shard=1 << 16,
+        **SEEN_FILTERS[kind],
     )
     store = drv.run_crawl(spark, fixture_paths, cfg, wd)
     ordering, results, seen = _collect(spark, store)
     assert ordering == sorted(oracle_result.ordering)
     assert seen == oracle_result.seen_hashes
     assert set(results) == {t[2] for t in oracle_result.results}
-
-
-def test_crawl_parity_with_routed_bloom(spark, fixture_paths, oracle_result, tmp_path):
-    """Same parity gate with the probe FORCED onto the shard-routed
-    (beyond-broadcast) path — the 10^10-URL configuration."""
-    wd = str(tmp_path / "bloomrouted")
-    cfg = drv.CrawlConfig(
-        rounds=ROUNDS, capacity=CAPACITY,
-        keywords=tuple(gen_pages.topic_keywords()),
-        use_bloom=True, bloom_shards=4, bloom_bits_per_shard=1 << 16,
-        bloom_broadcast_max_bytes=0,  # force probe_routed
-    )
-    store = drv.run_crawl(spark, fixture_paths, cfg, wd)
-    ordering, results, seen = _collect(spark, store)
-    assert ordering == sorted(oracle_result.ordering)
-    assert seen == oracle_result.seen_hashes
-    assert set(results) == {t[2] for t in oracle_result.results}
+    # rounds 1.. probe the previous round's filter
+    assert calls == ["probe_routed" if routed else "probe_col"] * (ROUNDS - 1)
 
 
 def test_bloom_enabled_mid_crawl_covers_prebloom_rounds(
     spark, fixture_paths, oracle_result, tmp_path
 ):
-    """ADVICE r01 (medium): resuming an existing workdir with use_bloom
-    newly enabled must rebuild the filter from the FULL seen set, so
+    """ADVICE r01 (medium): resuming an existing workdir with the Bloom
+    filter newly enabled must rebuild the filter from the FULL seen set, so
     URLs seen in pre-bloom rounds are never re-emitted."""
     kw = tuple(gen_pages.topic_keywords())
     wd = str(tmp_path / "bloomlate")
     drv.run_crawl(spark, fixture_paths,
                   drv.CrawlConfig(rounds=1, capacity=CAPACITY, keywords=kw), wd)
     cfg = drv.CrawlConfig(
-        rounds=ROUNDS, capacity=CAPACITY, keywords=kw,
-        use_bloom=True, bloom_shards=4, bloom_bits_per_shard=1 << 16,
+        rounds=ROUNDS, capacity=CAPACITY, keywords=kw, **SEEN_FILTERS["bloom"],
     )
     store = drv.run_crawl(spark, fixture_paths, cfg, wd, resume=True)
     ordering, results, seen = _collect(spark, store)
@@ -159,43 +169,6 @@ def test_resume_exact(spark, fixture_paths, oracle_result, tmp_path):
     ordering, results, seen = _collect(spark, store)
     assert ordering == sorted(oracle_result.ordering)
     assert seen == oracle_result.seen_hashes
-
-
-def test_crawl_parity_with_cuckoo(spark, fixture_paths, oracle_result, tmp_path):
-    """Same parity gate with the CUCKOO seen-filter sidecar (the other
-    half of the north star's "Bloom/cuckoo-filter URL-seen set"):
-    identical ordering/seen/results — the filter is advisory under the
-    same §2.1-3 contract, broadcast probe mode."""
-    wd = str(tmp_path / "cuckoorun")
-    cfg = drv.CrawlConfig(
-        rounds=ROUNDS, capacity=CAPACITY,
-        keywords=tuple(gen_pages.topic_keywords()),
-        use_bloom=True, seen_filter="cuckoo",
-        bloom_shards=4, cuckoo_buckets_per_shard=1 << 10,
-    )
-    store = drv.run_crawl(spark, fixture_paths, cfg, wd)
-    ordering, results, seen = _collect(spark, store)
-    assert ordering == sorted(oracle_result.ordering)
-    assert seen == oracle_result.seen_hashes
-    assert set(results) == {t[2] for t in oracle_result.results}
-
-
-def test_crawl_parity_with_routed_cuckoo(spark, fixture_paths, oracle_result, tmp_path):
-    """Cuckoo sidecar with the probe FORCED onto the shard-routed
-    (beyond-broadcast) cogroup path — the 10^10-URL configuration."""
-    wd = str(tmp_path / "cuckoorouted")
-    cfg = drv.CrawlConfig(
-        rounds=ROUNDS, capacity=CAPACITY,
-        keywords=tuple(gen_pages.topic_keywords()),
-        use_bloom=True, seen_filter="cuckoo",
-        bloom_shards=4, cuckoo_buckets_per_shard=1 << 10,
-        bloom_broadcast_max_bytes=0,  # force probe_routed
-    )
-    store = drv.run_crawl(spark, fixture_paths, cfg, wd)
-    ordering, results, seen = _collect(spark, store)
-    assert ordering == sorted(oracle_result.ordering)
-    assert seen == oracle_result.seen_hashes
-    assert set(results) == {t[2] for t in oracle_result.results}
 
 
 def test_max_depth_cap_matches_oracle(spark, tmp_path):

@@ -28,7 +28,7 @@ def _cfg(**kw):
     base = dict(
         rounds=ROUNDS, capacity=CAPACITY,
         keywords=tuple(gen_pages.topic_keywords()),
-        use_bloom=True, seen_filter="cuckoo",
+        seen_filter="cuckoo",
         bloom_shards=4, cuckoo_buckets_per_shard=1 << 10,
     )
     base.update(kw)
@@ -80,9 +80,10 @@ def test_recrawl_refetches_victims_cuckoo(spark, fixture_paths, tmp_path):
     # cuckoo sidecar was DELETED from, not rebuilt: victims no longer
     # probe positive, everything still-seen does (advisory contract)
     from storm_focused_crawler_spark.operators import cuckoo as C
+    from storm_focused_crawler_spark.operators import seen_filter as SF
 
     shards = store.read(spark, mnt, "bloom")
-    probe = C.probe_col(spark, shards, cfg.bloom_shards, cfg.cuckoo_buckets_per_shard)
+    probe = SF.probe_col(spark, C, shards, cfg.bloom_shards, cfg.cuckoo_buckets_per_shard)
     sdf = spark.createDataFrame([(int(h),) for h in sorted(seen_after)], "url_hash long")
     assert sdf.withColumn("m", probe(F.col("url_hash"))).filter(~F.col("m")).count() == 0
 
@@ -161,9 +162,10 @@ def test_recrawl_bloom_kind_rebuilds(spark, fixture_paths, tmp_path):
     mnt = drv.recrawl(spark, store, cfg, vdf, rescore=2.0)
 
     from storm_focused_crawler_spark.operators import bloom as B
+    from storm_focused_crawler_spark.operators import seen_filter as SF
 
     shards = store.read(spark, mnt, "bloom")
-    probe = B.probe_col(spark, shards, cfg.bloom_shards, cfg.bloom_bits_per_shard)
+    probe = SF.probe_col(spark, B, shards, cfg.bloom_shards, cfg.bloom_bits_per_shard)
     seen_after = store.read_union(spark, mnt, "seen").select("url_hash")
     assert (
         seen_after.withColumn("m", probe(F.col("url_hash"))).filter(~F.col("m")).count()
@@ -280,3 +282,23 @@ def test_refresh_victims_age_policy(spark, fixture_paths, tmp_path):
         x["url_hash"] for x in store.read_union(spark, nxt, "seen").collect()
     }
     assert got_seen == res.seen_hashes
+
+
+def test_unknown_seen_filter_rejected_before_any_commit(spark, fixture_paths, tmp_path):
+    """A misspelled filter kind fails loudly instead of silently running
+    Bloom or no filter at all — in run_crawl before round 0 commits,
+    and in recrawl before the maintenance round commits."""
+    import os
+
+    from storm_focused_crawler_spark.sources.storage import ParquetSnapshotStore
+
+    wd = str(tmp_path / "badkind")
+    with pytest.raises(ValueError, match="seen_filter 'cukoo'"):
+        drv.run_crawl(spark, fixture_paths, _cfg(seen_filter="cukoo"), wd)
+    assert ParquetSnapshotStore(os.path.join(wd, "state")).latest_round() is None
+
+    store = drv.run_crawl(spark, fixture_paths, _cfg(rounds=1, seen_filter=None), wd)
+    vdf = spark.createDataFrame([("https://h001.example.com/",)], "url string")
+    with pytest.raises(ValueError, match="seen_filter 'cukoo'"):
+        drv.recrawl(spark, store, _cfg(seen_filter="cukoo"), vdf)
+    assert store.latest_round() == 0
