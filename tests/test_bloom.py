@@ -1,6 +1,7 @@
 """Bloom seen-set properties (SURVEY.md §5.2-3): zero false negatives,
-bounded FPR, OR-merge correctness.  The broadcast/routed probe modes
-are tested for both kinds in test_seen_filter.py."""
+bounded FPR, OR-merge correctness, and the shared probe harness's two
+modes on Bloom shards.  test_seen_filter.py runs the same harness over
+both filter kinds against each kind's own membership test."""
 
 from __future__ import annotations
 
@@ -41,6 +42,47 @@ def test_fpr_bounded(spark, hashes):
     n_per, k = len(inserted) / N_SHARDS, B.K_HASHES
     theo = (1 - np.exp(-k * n_per / N_BITS)) ** k
     assert fp / len(fresh) <= max(2 * theo, 0.01), (fp / len(fresh), theo)
+
+
+def test_routed_probe_equals_broadcast_probe(spark, hashes):
+    """The shard-routed (cogrouped, per-shard bitset) probe must return
+    exactly the broadcast probe's verdicts — same bitsets, same math."""
+    inserted = hashes[:2000]
+    df = spark.createDataFrame([(int(h),) for h in hashes], "url_hash long")
+    ins = spark.createDataFrame([(int(h),) for h in inserted], "url_hash long")
+    shards = B.build_shards(ins, N_SHARDS, N_BITS)
+    col_fn = SF.probe_col(spark, B, shards, N_SHARDS, N_BITS)
+    bcast = {r["url_hash"]: r["m"]
+             for r in df.withColumn("m", col_fn(F.col("url_hash"))).collect()}
+    routed = {r["url_hash"]: r["_maybe"]
+              for r in SF.probe_routed(df, B, shards, N_SHARDS, N_BITS).collect()}
+    assert bcast == routed
+
+
+def test_routed_probe_plan_is_cogrouped_not_broadcast(spark, hashes):
+    """Scale property: the routed path must be a cogroup on the shard
+    key (each task reads one bitset), with no broadcast of the shards."""
+    ins = spark.createDataFrame([(int(h),) for h in hashes[:100]], "url_hash long")
+    shards = B.build_shards(ins, N_SHARDS, N_BITS)
+    plan = (
+        SF.probe_routed(ins, B, shards, N_SHARDS, N_BITS)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "FlatMapCoGroupsInPandas" in plan
+    assert "BroadcastExchange" not in plan
+
+
+def test_probe_transform_picks_mode_by_size(spark, hashes, monkeypatch):
+    ins = spark.createDataFrame([(int(h),) for h in hashes[:100]], "url_hash long")
+    shards = B.build_shards(ins, N_SHARDS, N_BITS)
+    monkeypatch.setattr(SF, "BROADCAST_MAX_BYTES", 0)
+    routed = SF.probe_transform(spark, B, shards, N_SHARDS, N_BITS)
+    plan = routed(ins)._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapCoGroupsInPandas" in plan
+    monkeypatch.setattr(SF, "BROADCAST_MAX_BYTES", 1 << 30)
+    bcast = SF.probe_transform(spark, B, shards, N_SHARDS, N_BITS)
+    plan2 = bcast(ins)._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapCoGroupsInPandas" not in plan2
 
 
 def test_merge_equals_rebuild(spark, hashes):
