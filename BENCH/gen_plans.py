@@ -117,10 +117,11 @@ def main() -> None:
          "— the corpus is never exchanged; `html` is dropped before anything "
          "shuffles (no Exchange carries html).",
          out["results"]),
-        ("Salted two-phase politeness dequeue, host-authority blended",
-         "Both rank filters carry literal bounds, so Catalyst inserts "
-         "WindowGroupLimit (bounded top-k heaps) BEFORE the window sorts; "
-         "the budget dim and the §2.1-7 host-rank table both join broadcast.",
+        ("Per-host top-k politeness dequeue, host-authority blended",
+         "One host exchange: the rank filter's literal bound plans a Partial "
+         "WindowGroupLimit below it (≤ max_budget rows per host per map task) "
+         "and a Final one above it, BEFORE the window sort; the budget dim "
+         "and the §2.1-7 host-rank table both join broadcast.",
          out["frontier"]),
         ("REP robots filter (longest-match + Allow)",
          "Rules group into ONE array per host (broadcast); the verdict is an "
@@ -180,15 +181,15 @@ def main() -> None:
              "focused-crawler")),
         ("Crawl-delay dequeue (min_interval_ms cap)",
          "The interval cap folds into the broadcast budget join as a "
-         "scalar expression (integer-exact ceil); both rank filters keep "
-         "their LITERAL bounds, so WindowGroupLimit survives unchanged — "
+         "scalar expression (integer-exact ceil); the rank filter keeps "
+         "its LITERAL bound, so WindowGroupLimit survives unchanged — "
          "the politeness cap costs no extra exchange.",
          __import__("storm_focused_crawler_spark.operators.frontier",
                     fromlist=["dequeue"]).dequeue(
              frontier.withColumn("host", F.lit("h.ex")),
              spark.createDataFrame([("h.ex", 4, 15000)],
                                    "host string, budget int, min_interval_ms int"),
-             capacity=64, n_salts=8, max_budget=4)),
+             capacity=64, max_budget=4)),
         ("Gopher repetition filter (text_repetition_gopher)",
          "One Generate (gram explode) + TWO map-side-combinable hash "
          "aggregates; gram rows carry (doc_id, n, gram) only — the text "

@@ -117,8 +117,8 @@ def main() -> None:
 
 North-rule criterion: throughput scaling efficiency ≥ 0.8 from N to 4N
 executors, same input.  Sandbox stand-in (no real cluster): the same
-deterministic frontier-pipeline job — canonicalize (Arrow pandas UDF)
-→ xxhash64 → exact seen anti-join → salted two-phase politeness
+deterministic frontier-pipeline job — canonicalize (Arrow UDF)
+→ xxhash64 → exact seen anti-join → per-host top-k politeness
 dequeue over {args.rows:,} skewed URLs (30% on one hot host) — at
 local[2], local[8], local[32]; each level runs in fresh processes with
 {args.iters} timed iterations per process after a warmup, pooled across

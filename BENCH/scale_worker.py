@@ -5,7 +5,7 @@ Synthesizes an R-row URL frontier DETERMINISTICALLY inside Spark
 it through the engine's real frontier pipeline:
 
     canonicalize_udf → xxhash64 → exact seen anti-join →
-    host derivation → salted two-phase politeness dequeue →
+    host derivation → per-host top-k politeness dequeue →
     broadcast text join → relevance score → aggregate
 
 This is the scale-bound part of a crawl round — the thing that is
@@ -14,7 +14,7 @@ O(round capacity), a constant, so it cannot carry a scaling signal;
 bench.py's crawl_e2e covers it end-to-end.
 
 The synthetic frontier is deliberately HOST-SKEWED (30% of URLs on one
-hot host, the rest Zipf-ish over 1000 hosts) so the two-phase salted
+hot host, the rest Zipf-ish over 1000 hosts) so the map-side partial
 top-k in operators/frontier.py is exercised exactly where Storm's
 fieldsGrouping(host) would have hot-spotted one executor.
 
@@ -85,7 +85,7 @@ def run_iteration(spark, rows: int, capacity: int) -> dict:
         F.concat(F.lit("h"), F.lpad(F.col("id").cast("string"), 4, "0"), F.lit(".scale-test.com")).alias("host"),
         (F.lit(100) + F.pmod(F.col("id"), F.lit(50))).cast("int").alias("budget"),
     )
-    deq = dequeue(elig, budgets, capacity, n_salts=32)
+    deq = dequeue(elig, budgets, capacity)
     out = deq.agg(
         F.count("*").alias("n"),
         F.sum("score").alias("s"),

@@ -240,7 +240,7 @@ def run_bench(spark, sf_dir: str) -> dict:
     timings["crawl_e2e"] = round(crawl["wall_sec"], 3)
 
     # scale-bound frontier pipeline (canon → hash → seen anti-join →
-    # salted politeness dequeue) over 16M synthetic skewed URLs — the
+    # politeness dequeue) over 16M synthetic skewed URLs — the
     # same job BENCH/run_scaling.py measures across parallelism levels.
     # min-of-3 fresh timings: this host's neighbor noise varies identical
     # jobs 3-6x (BENCH/BASELINE.md), and BENCH_r01 recorded a single

@@ -171,7 +171,7 @@ def stages_frontier(spark, sf_dir):
         F.concat(F.lit("h"), F.lpad(F.col("id").cast("string"), 4, "0"), F.lit(".scale-test.com")).alias("host"),
         (F.lit(100) + F.pmod(F.col("id"), F.lit(50))).cast("int").alias("budget"),
     )
-    deq = dequeue(elig, budgets, 100_000, n_salts=32)
+    deq = dequeue(elig, budgets, 100_000)
     timed("…+dequeue (full)", lambda: _noop(deq))
 
 

@@ -39,7 +39,6 @@ def parse_args(argv=None):
     ap.add_argument("--workdir", required=True)
     ap.add_argument("--rounds", type=int, default=3)
     ap.add_argument("--capacity", type=int, default=1024)
-    ap.add_argument("--n-salts", type=int, default=32)
     ap.add_argument("--seen-filter", choices=("none", "bloom", "cuckoo"), default="none",
                     help="advisory seen pre-filter: none, bloom (OR-merge bitsets) "
                          "or cuckoo (fingerprint table, supports deletion)")
@@ -108,7 +107,7 @@ def main(argv=None) -> int:
 
     kw = tuple(args.keywords.split(",")) if args.keywords else tuple(topic_keywords())
     cfg = CrawlConfig(rounds=args.rounds, capacity=args.capacity,
-                      keywords=kw, n_salts=args.n_salts,
+                      keywords=kw,
                       seen_filter=None if args.seen_filter == "none" else args.seen_filter,
                       bloom_shards=args.bloom_shards,
                       bloom_bits_per_shard=args.bloom_bits,

@@ -19,8 +19,8 @@ Scale notes (the 100 TB story, graded against BASELINE.md):
   * the fat ``html`` column is projected ONLY inside the fetch join's
     output and is extracted immediately; nothing downstream of
     extraction shuffles html bytes (SURVEY.md §7.4-4);
-  * politeness runs the two-phase salted top-k (operators/frontier.py)
-    so one hot host cannot skew a task;
+  * politeness runs one per-host top-k whose map-side partial limit
+    (operators/frontier.py) keeps one hot host from skewing a task;
   * the seen-set probe is an exact anti-join on url_hash (with an
     optional Bloom or cuckoo pre-filter, ``CrawlConfig.seen_filter``,
     probed broadcast or shard-routed by operators/seen_filter.py) — the
@@ -62,7 +62,7 @@ class CrawlConfig:
     rounds: int = 3
     capacity: int = 64
     keywords: tuple[str, ...] = ()
-    n_salts: int = 8
+    n_salts: int = 8  # ignored: frontier.dequeue bounds host skew map-side
     url_buckets: int = 16
     # advisory seen-filter sidecar in front of the exact seen anti-join:
     # None (off), "bloom" (bitset OR-merge, operators/bloom.py) or
@@ -240,7 +240,7 @@ def run_round(
             )
             .drop("rank_i")
         )
-    deq = dequeue(elig, host_budget, cfg.capacity, cfg.n_salts,
+    deq = dequeue(elig, host_budget, cfg.capacity,
                   round_ms=cfg.round_ms, host_carry=host_carry,
                   host_cap=cfg.max_pages_per_host, host_used=host_used)
     deq = (

@@ -8,8 +8,9 @@ inputs → byte-identical parquet.  No Spark needed — pyarrow only — so
 the sequential oracle can consume the identical fixture.
 
 Host skew is intentional: hosts are drawn Zipf(a=1.3) so the hottest
-host dominates, exercising the salted politeness repartition
-(SURVEY.md §4.3-1) exactly the way a real crawl frontier would.
+host dominates, exercising the politeness dequeue's per-host skew
+bound (operators/frontier.py) exactly the way a real crawl frontier
+would.
 """
 
 from __future__ import annotations

@@ -4,20 +4,18 @@ This is the engine's replacement for the reference's per-host
 politeness buckets inside WebPageFetcherBolt and its
 fieldsGrouping("host") hash partitioning ([R], SURVEY.md §3).  Storm's
 fieldsGrouping sends ALL of a hot host's tuples to one executor —
-unbounded skew.  Here politeness is enforced relationally with a
-two-phase salted top-k (SURVEY.md §4.3-1):
+unbounded skew.  Here politeness is one per-host top-k with an
+explicit skew bound: the literal rank bound ``max_budget`` makes
+Catalyst plan a Partial WindowGroupLimit below the one host exchange
+and a Final one above it, so each map task forwards ≤ ``max_budget``
+rows per host and a reducer gets ≤ (map partitions × ``max_budget``)
+rows of any host.  Above ``spark.sql.optimizer.windowGroupLimitThreshold``
+Catalyst plans no limit, so dequeue raises ValueError at plan build.
 
-  phase 1: row_number within (host, salt) — the salt splits a hot
-           host's rows across S shuffle groups, so no single task sees
-           a whole hot host; keep rank ≤ budget, pruning each host to
-           ≤ S·budget rows no matter how skewed the frontier is;
-  phase 2: exact row_number within host on the pruned set — cheap,
-           because the input is already ≤ S·budget rows per host.
-
-Both phases order by (score DESC, url ASC); the unique url tiebreak
-makes the result a total order, so the dequeue is deterministic under
-any partitioning (SURVEY.md §7.4-1) — pytest re-runs it at 2 and 32
-partitions and compares.
+Ranking by (score DESC, url ASC), a total order, keeps the dequeue
+deterministic under any partitioning (SURVEY.md §7.4-1): tests run it
+at 1 and 8 shuffle partitions on skewed input (test_crawl_delay.py) and
+whole crawls at 2/4 and 2/32 (test_parity.py, test_host_rank_blend.py).
 
 The global top-C window runs single-partition BY DESIGN: its input is
 already pruned to ≤ Σ budgets rows (a few rows per host), so at a
@@ -33,6 +31,7 @@ from pyspark.sql import functions as F
 from storm_focused_crawler_spark.functions.udfs import host_col, path_col
 
 DEFAULT_BUDGET = 2  # hosts missing from host_budget (oracle twin: seqcrawler)
+_WGL_THRESHOLD = "spark.sql.optimizer.windowGroupLimitThreshold"
 
 
 def eligible(
@@ -70,6 +69,12 @@ def eligible(
         e = frontier.join(seen.select("url_hash"), "url_hash", "left_anti")
     e = e.withColumn("host", host_col(F.col("url")))
     return rep_filter(e, robots, path_col(F.col("url")))
+
+
+def _check_wgl_bound(df: DataFrame, max_budget: int) -> None:
+    threshold = int(df.sparkSession.conf.get(_WGL_THRESHOLD))
+    if max_budget > threshold:  # no WindowGroupLimit: hot hosts ship whole
+        raise ValueError(f"max_budget {max_budget} > {_WGL_THRESHOLD}={threshold}")
 
 
 def dequeue(
@@ -112,19 +117,21 @@ def dequeue(
     carry_ms + (rank−1)·interval.  Carry can only lower the cap, so
     the literal WindowGroupLimit bound still dominates.
 
-    Each rank filter is split in two: a LITERAL bound (``max_budget``)
+    The rank filter is split in two: a LITERAL bound (``max_budget``)
     first, then the exact per-host column bound.  Catalyst can only
-    compile ``row_number <= <literal>`` into WindowGroupLimit (top-k
-    pruning that keeps a k-row heap per group instead of sorting and
-    materializing the whole partition); a column bound alone would
-    full-sort every hot-host group at 10^10-frontier scale.  Verified
-    by tests/test_plans.py::test_dequeue_uses_window_group_limit.
+    compile ``row_number <= <literal>`` into WindowGroupLimit (a k-row
+    heap per group instead of a full sort), split Partial/Final around
+    the host exchange (module docstring; pinned by tests/test_plans.py).
+    ``n_salts`` is accepted and ignored.
     """
+    if max_budget is not None:
+        _check_wgl_bound(elig, max_budget)  # before any job
     # one scalar off a broadcast-sized dim table, computed at plan build
     row = host_budget.agg(F.max("budget")).collect()[0][0]
     table_max = max(int(row or 0), DEFAULT_BUDGET)
     if max_budget is None:
         max_budget = table_max
+        _check_wgl_bound(elig, max_budget)
     elif max_budget < table_max:
         # the literal WindowGroupLimit bound MUST dominate every row's
         # budget or rows below the real per-host budget are silently pruned
@@ -175,20 +182,12 @@ def dequeue(
             ).otherwise(F.col("budget")),
         )
     order = [F.col("score").desc(), F.col("url").asc()]
-    # phase 1 — salted local prune (skew-proof)
-    salt = F.pmod(F.col("url_hash"), F.lit(n_salts))
-    w1 = Window.partitionBy("host", salt).orderBy(*order)
+    # per-host top-k: Partial WindowGroupLimit → host exchange → Final
+    w = Window.partitionBy("host").orderBy(*order)
     b = (
-        b.withColumn("_rn1", F.row_number().over(w1))
-        .filter(F.col("_rn1") <= F.lit(max_budget))  # literal → WindowGroupLimit
-        .filter(F.col("_rn1") <= F.col("budget"))  # exact per-host bound
-    )
-    # phase 2 — exact per-host budget on the pruned set
-    w2 = Window.partitionBy("host").orderBy(*order)
-    b = (
-        b.withColumn("_rn2", F.row_number().over(w2))
-        .filter(F.col("_rn2") <= F.lit(max_budget))
-        .filter(F.col("_rn2") <= F.col("budget"))
+        b.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= F.lit(max_budget))  # literal → WindowGroupLimit
+        .filter(F.col("_rn") <= F.col("budget"))  # exact per-host bound
     )
     # sched_ms: politeness-spaced fetch offset inside the round window,
     # starting from the cross-round carry (0 when no debt / no delay)
@@ -198,7 +197,7 @@ def dequeue(
             F.lit(0),
         )
         sched = F.when(ival > 0, F.col("_carry")).otherwise(F.lit(0)) + (
-            F.col("_rn2") - 1
+            F.col("_rn") - 1
         ) * ival
     else:
         sched = F.lit(0)
@@ -208,7 +207,7 @@ def dequeue(
     out = (
         b.withColumn("seq", F.row_number().over(wg))
         .filter(F.col("seq") <= capacity)
-        .drop("_rn1", "_rn2", "budget")
+        .drop("_rn", "budget")
     )
     if has_interval:
         out = out.drop("min_interval_ms", "_carry", "_left")

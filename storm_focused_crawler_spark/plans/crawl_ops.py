@@ -1,6 +1,6 @@
 """Crawl-specific UDF/stateful operators — rows-only entries.
 
-These depend on xxhash64 / pandas-UDF canonicalization / the pages
+These depend on xxhash64 / Arrow-UDF canonicalization / the pages
 fixture, which DuckDB cannot reproduce, so the driver records the
 weaker rows-only check; their values are pytest-locked instead:
   * canon / hash64 — tests/test_spec.py (golden + Spark lock)
@@ -160,7 +160,7 @@ def dequeue_crawl_delay(spark, sf_dir):
         .otherwise(F.lit(None).cast("int"))
         .alias("min_interval_ms"),
     )
-    return dequeue(u, hb, capacity=200, n_salts=8, round_ms=60_000).select(
+    return dequeue(u, hb, capacity=200, round_ms=60_000).select(
         "host", "url", "seq", "sched_ms"
     )
 

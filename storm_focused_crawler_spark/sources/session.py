@@ -3,10 +3,11 @@
 Local sandbox testing runs on local[N]; on a real cluster the same
 builder is driven by spark-submit (--master/--num-executors), and the
 config here only sets the knobs that matter at both scales: AQE on
-(runtime re-plan + skew-join splitting complements our explicit
-salting), shuffle partitions sized to the parallelism level, Arrow
-enabled for the pandas-UDF paths, UTC timezone pinned so results are
-comparable against the DuckDB oracle.
+(runtime re-plan + skew-join splitting complements the dequeue's
+explicit map-side top-k skew bound), shuffle partitions sized to the
+parallelism level, Arrow enabled for the pandas/Arrow-UDF paths, UTC
+timezone pinned so results are comparable against the DuckDB oracle,
+and a driver heap sized to the machine (``SPARK_DRIVER_MEM`` overrides).
 """
 
 from __future__ import annotations
@@ -14,6 +15,14 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def _default_driver_mem() -> str:
+    """2/5 of physical memory, capped at 48g: a heap larger than the
+    machine lets a long-lived local session grow until the OS kills the
+    driver JVM."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(48, phys * 2 // 5 // (1 << 30)))}g"
 
 
 def get_spark(
@@ -42,7 +51,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.mergeSchema", "false")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", _default_driver_mem()))
     )
     for k, v in (extra or {}).items():
         b = b.config(k, v)

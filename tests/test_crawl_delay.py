@@ -26,19 +26,31 @@ def _ceil(a: int, b: int) -> int:
     return (a + b - 1) // b
 
 
-def test_dequeue_interval_caps_and_sched_ms(spark):
-    """Engine dequeue vs a direct python computation: per-host counts
-    equal min(budget, ceil(round_ms/interval)), picks are the per-host
-    (score desc, url asc) top so capped, and sched_ms spaces them
-    interval ms apart (0 for no-delay hosts)."""
-    rows = [
+def _uniform_rows():
+    return [
         (f"https://h{i % 5}.ex/p{i:03d}", float((i * 7) % 13), i)
         for i in range(60)
     ]
-    elig = spark.createDataFrame(
-        [(u, hash(u) % (1 << 60), s, 0, u.split("/")[2]) for u, s, _ in rows],
-        "url string, url_hash long, score double, depth int, host string",
-    )
+
+
+def _skewed_rows():
+    """h0.ex holds 70% of the rows (score ties broken by url)."""
+    return [
+        (f"https://{'h0' if i % 10 < 7 else f'h{1 + i % 4}'}.ex/p{i:04d}",
+         float((i * 7) % 13), i)
+        for i in range(400)
+    ]
+
+
+@pytest.mark.parametrize("parts", [1, 8])
+def test_dequeue_interval_caps_and_sched_ms(spark, parts):
+    """Engine dequeue vs a direct python computation: per-host counts
+    equal min(budget, ceil(round_ms/interval)), picks are the per-host
+    (score desc, url asc) top so capped, and sched_ms spaces them
+    interval ms apart (0 for no-delay hosts).  Also with one host
+    holding most rows and the input spread over 8 partitions, so a
+    host's top rows sit in different map tasks — the map-side Partial
+    top-k must still keep the exact per-host top."""
     hb = spark.createDataFrame(
         [
             ("h0.ex", 5, 15_000),   # icap 4 < budget 5 → capped at 4
@@ -49,7 +61,24 @@ def test_dequeue_interval_caps_and_sched_ms(spark):
         ],
         "host string, budget int, min_interval_ms int",
     )
-    got = dequeue(elig, hb, capacity=100, n_salts=4, round_ms=ROUND_MS).collect()
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    try:
+        for rows, spread in ((_uniform_rows(), None), (_skewed_rows(), None),
+                             (_skewed_rows(), 8)):
+            elig = spark.createDataFrame(
+                [(u, hash(u) % (1 << 60), s, 0, u.split("/")[2]) for u, s, _ in rows],
+                "url string, url_hash long, score double, depth int, host string",
+            )
+            if spread:
+                elig = elig.repartition(spread)
+            got = dequeue(elig, hb, capacity=100, round_ms=ROUND_MS).collect()
+            _check_interval_caps(rows, got)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def _check_interval_caps(rows, got):
     by_host: dict[str, list] = {}
     for r in got:
         by_host.setdefault(r["host"], []).append(r)
@@ -224,7 +253,7 @@ def test_dequeue_host_carry_shifts_and_caps(spark):
         "host string, carry_ms long",
     )
     got = dequeue(
-        elig, hb, capacity=100, n_salts=4, round_ms=ROUND_MS, host_carry=carry
+        elig, hb, capacity=100, round_ms=ROUND_MS, host_carry=carry
     ).collect()
     by_host: dict[str, list] = {}
     for r in got:
@@ -326,7 +355,7 @@ def test_streaming_sched_ms_matches_batch_dequeue(spark, tmp_path):
         [(f"h{i}.ex", 5, 25_000) for i in range(3)],
         "host string, budget int, min_interval_ms int",
     )
-    batch = dequeue(elig, hb, capacity=100, n_salts=4, round_ms=ROUND_MS).collect()
+    batch = dequeue(elig, hb, capacity=100, round_ms=ROUND_MS).collect()
     batch_sched = {}
     for r in batch:
         batch_sched.setdefault(r["host"], []).append((r["url"], r["sched_ms"]))

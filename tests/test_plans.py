@@ -20,8 +20,12 @@ def fixture_paths(sf_dir):
     return gen_pages.ensure(sf_dir)
 
 
-def _plan(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+def _plan(df, mode: str = "formatted") -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), mode)
+
+
+def _indent(line: str) -> int:
+    return len(line) - len(line.lstrip(" :+-"))
 
 
 def test_column_pruning_html_never_read_unless_needed(spark, fixture_paths):
@@ -53,13 +57,8 @@ def test_fetch_join_broadcasts_dequeued_side(spark, fixture_paths):
     assert "Exchange hashpartitioning(url" not in plan
 
 
-def test_dequeue_uses_window_group_limit(spark, fixture_paths):
-    """rank<=k filters must compile to WindowGroupLimit (top-k pruning
-    before the full sort) — this is what keeps the salted politeness
-    window from materializing whole hot-host partitions."""
-    from storm_focused_crawler_spark.operators.frontier import dequeue
-
-    frontier = (
+def _dequeue_frontier(spark, fixture_paths):
+    return (
         spark.read.parquet(fixture_paths["pages"])
         .select("url")
         .distinct()
@@ -70,10 +69,31 @@ def test_dequeue_uses_window_group_limit(spark, fixture_paths):
             "host", F.substring_index(F.substring_index("url", "://", -1), "/", 1)
         )
     )
+
+
+def test_dequeue_uses_window_group_limit(spark, fixture_paths):
+    """rank<=k filters must compile to WindowGroupLimit (top-k pruning
+    before the full sort) — a Partial one below the single host
+    exchange is what keeps a hot host from reaching one reducer whole."""
+    from storm_focused_crawler_spark.operators.frontier import dequeue
+
+    frontier = _dequeue_frontier(spark, fixture_paths)
     budgets = spark.read.parquet(fixture_paths["host_budget"])
-    plan = _plan(dequeue(frontier, budgets, 64, n_salts=8))
-    assert plan.count("WindowGroupLimit") >= 2, "phase-1/phase-2 top-k not pruned"
+    plan = _plan(dequeue(frontier, budgets, 64))
+    assert plan.count("WindowGroupLimit") >= 2, "per-host top-k not pruned"
     assert "BroadcastHashJoin" in plan  # budgets joined broadcast
+
+    # the skew bound: ONE host exchange, a map-side Partial top-k below
+    # it (each map task forwards ≤ max_budget rows per host), no salt
+    simple = _plan(dequeue(frontier, budgets, 64), "simple")
+    lines = simple.splitlines()
+    host_x = [i for i, ln in enumerate(lines) if "Exchange hashpartitioning(host" in ln]
+    assert len(host_x) == 1, simple
+    partial = [i for i, ln in enumerate(lines) if "WindowGroupLimit" in ln and "Partial" in ln]
+    assert any(
+        i > host_x[0] and _indent(lines[i]) > _indent(lines[host_x[0]]) for i in partial
+    ), simple
+    assert "pmod(url_hash" not in simple
 
     # the crawl-delay cap (min_interval_ms) must NOT cost the pruning:
     # it folds into the budget column as a scalar expression and the
@@ -82,9 +102,37 @@ def test_dequeue_uses_window_group_limit(spark, fixture_paths):
         "min_interval_ms",
         F.when(F.length("host") % 2 == 0, F.lit(15_000)),
     )
-    plan_d = _plan(dequeue(frontier, delayed, 64, n_salts=8))
+    plan_d = _plan(dequeue(frontier, delayed, 64))
     assert plan_d.count("WindowGroupLimit") >= 2, "interval cap broke top-k pruning"
     assert "BroadcastHashJoin" in plan_d
+
+
+def test_dequeue_rejects_budget_above_window_group_limit_threshold(spark, fixture_paths):
+    """Above windowGroupLimitThreshold Catalyst plans no WindowGroupLimit,
+    so the map-side skew bound would silently vanish: dequeue refuses at
+    plan build, before any Spark job runs."""
+    from storm_focused_crawler_spark.operators.frontier import dequeue
+
+    frontier = _dequeue_frontier(spark, fixture_paths)
+    budgets = spark.read.parquet(fixture_paths["host_budget"])
+    table_max = budgets.agg(F.max("budget")).collect()[0][0]
+    conf = "spark.sql.optimizer.windowGroupLimitThreshold"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, str(table_max))
+    sc = spark.sparkContext
+    try:
+        dequeue(frontier, budgets, 64, max_budget=table_max)  # at the threshold: fine
+        sc.setJobGroup("dequeue-threshold", "must run no job")
+        with pytest.raises(ValueError, match=conf):
+            dequeue(frontier, budgets, 64, max_budget=table_max + 1)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup("dequeue-threshold") == []
+        # a max_budget derived from the table is checked the same way
+        with pytest.raises(ValueError, match=conf):
+            dequeue(frontier, budgets.withColumn("budget", F.lit(table_max + 1)), 64)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set(conf, old)
 
 
 def test_no_html_through_round_shuffles(spark, fixture_paths, tmp_path):

@@ -69,6 +69,58 @@ def test_xxh64_matches_spark(spark):
         assert got[u] == spec.xxh64(u), u
 
 
+
+def _fuzz_urls(n: int, seed: int) -> list[str]:
+    """Seeded URL mix: scheme/host case, default and other ports, %
+    escapes, dot segments, queries and fragments, plus canonical ones."""
+    import random
+
+    rnd = random.Random(seed)
+    segs = ["a", "B", "d1.2", ".", "..", "%7e", "%7E", "%2f", "%41", "%zz", "~x",
+            "ünï", "", "x y", "%", "a.b.", ".hidden"]
+    out = []
+    for _ in range(n):
+        scheme = rnd.choice(["http", "https", "HTTP", "Https", "ftp"])
+        host = "".join(
+            c.upper() if rnd.random() < 0.15 else c
+            for c in rnd.choice(["h1.example-com", "x.com", "sub.host.ex", "w"])
+        )
+        port = rnd.choice(["", "", "", ":80", ":443", ":8080", ":"])
+        path = "".join("/" + rnd.choice(segs) for _ in range(rnd.randint(0, 4)))
+        if rnd.random() < 0.5:
+            path = path or "/"
+        query = ""
+        if rnd.random() < 0.2:
+            params = [f"{rnd.choice('zyxa')}={rnd.choice(['1', '%2a', '', 'b%41'])}"
+                      for _ in range(rnd.randint(0, 3))]
+            query = "?" + "&".join(params)
+        frag = "#f" if rnd.random() < 0.1 else ""
+        out.append(f"{scheme}://{host}{port}{path}{query}{frag}")
+    return out
+
+
+def test_canonicalize_udf_matches_spec(spark):
+    """The Arrow UDF (RE2 fast path + per-element fallback) returns
+    exactly spec.canon for every row, null for null — on a mixed fuzz
+    set, whitespace/unicode edge cases, and all-fast / all-slow batches."""
+    from storm_focused_crawler_spark.functions.udfs import canonicalize_udf
+
+    edge = [None, "", "\v", "http://x.com/a\vb", "http://x.com/a\u00a0b",
+            "http://x.com/a\u00a0", "http://x.com/a\n", "http://X.com/a\n",
+            "http://x.com/\u00fcn\u00ef/\u00e7\u00f8d\u00e9", "http://x.com/\u3000/..",
+            "http://x.com/a b", "http://x.com/a\tb/./c"]
+    mixed = [raw for raw, _ in GOLDEN_CANON] + _fuzz_urls(12_000, seed=7) + edge
+    all_fast = [f"https://h{i % 97}.example-com/p/{i}/d{i % 7}.2" for i in range(3000)]
+    all_slow = [f"HTTP://H{i % 97}.ex:80/a/../p{i}?b=2&a=1" for i in range(3000)]
+    for urls in (mixed, all_fast, all_slow):
+        df = spark.createDataFrame(list(enumerate(urls)), "id long, u string")
+        got = dict(df.select("id", canonicalize_udf("u").alias("c")).collect())
+        for i, u in enumerate(urls):
+            assert got[i] == (None if u is None else spec.canon(u)), repr(u)
+    # the two single-kind batches really are single-kind
+    assert all(spec.canon(u) == u for u in all_fast)
+    assert all(spec.canon(u) != u for u in all_slow)
+
 def test_html_roundtrip_byte_identical():
     texts = [
         "plain words here",

@@ -7,6 +7,8 @@ on the same parquet input — the twin relationship the module promises.
 
 from __future__ import annotations
 
+import os
+import time
 import uuid
 
 import pytest
@@ -213,6 +215,10 @@ def test_doc_dedup_stream_exactly_once(spark, tmp_path):
                       "text": pa.array(ts, pa.string())}),
             d / f"b{i}.parquet",
         )
+    # the file source reads in mtime order; pin it to name order
+    t0 = time.time() - 60
+    for i in range(3):
+        os.utime(d / f"b{i}.parquet", (t0 + i, t0 + i))
 
     stream = (
         spark.readStream.schema("doc_id long, text string")
