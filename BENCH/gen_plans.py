@@ -33,6 +33,14 @@ def tree_of(df) -> str:
 
 
 def main() -> None:
+    from storm_focused_crawler_spark.sources.session import scope
+
+    # the round's persisted frames stay cached until every plan is explained
+    with scope():
+        write_plans()
+
+
+def write_plans() -> None:
     import bench
     from pyspark.sql import functions as F
 
@@ -266,8 +274,6 @@ def main() -> None:
     for title, blurb, df in sections:
         lines += [f"## {title}", "", blurb, "", "```", tree_of(df), "```", ""]
 
-    for df in out["_persisted"]:
-        df.unpersist()
     with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(lines))
     print("wrote PLANS.md,", len(sections), "sections")

@@ -47,14 +47,17 @@ def dump_plans(spark, sf_dir, tag, names):
 def time_queries(spark, sf_dir, names, n=3):
     import __spark_entry__ as entry
 
+    from storm_focused_crawler_spark.sources.session import scope
+
     qs = entry.queries()
     for name in names:
         best, samples = float("inf"), []
         for _ in range(n):
             spark.sparkContext.setJobDescription(f"bench_extra:{name}")
-            t0 = time.time()
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            s = round(time.time() - t0, 3)
+            with scope():  # released after the timing
+                t0 = time.time()
+                qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+                s = round(time.time() - t0, 3)
             samples.append(s)
             best = min(best, s)
         print(f"{name}: min {best}  samples {samples}")

@@ -44,7 +44,9 @@ from storm_focused_crawler_spark.functions.udfs import (
     extract_text_col,
     score_col,
 )
+from storm_focused_crawler_spark.operators import graph
 from storm_focused_crawler_spark.operators.frontier import dequeue, eligible
+from storm_focused_crawler_spark.sources.session import persist, scope
 from storm_focused_crawler_spark.sources.storage import ParquetSnapshotStore
 
 FRONTIER_SCHEMA = "url string, url_hash long, score double, depth int, discovered_round int"
@@ -209,7 +211,8 @@ def run_round(
     counts are collected DURING the existing write actions, zero extra
     jobs (north rule: "per-partition lineage + metrics"; the
     per-partition breakdown is the ``metrics`` table, the per-stage
-    rollup lands in the round manifest via ``_observations``).
+    rollup lands in the round manifest via ``_observations``).  Its
+    persisted frames are released by the caller's ``session.scope()``.
     """
     from pyspark.sql import Observation
 
@@ -224,8 +227,6 @@ def run_round(
         # expression tree (add(score, mul(w, div(rank_i, SCALE)))) +
         # half-even round — bit-identical to the oracle's doubles.
         # host_ranks is host-cardinality (~10^6 at web scale): broadcast.
-        from storm_focused_crawler_spark.operators.graph import SCALE
-
         elig = (
             elig.join(F.broadcast(host_ranks), "host", "left")
             .withColumn(
@@ -234,7 +235,7 @@ def run_round(
                     F.col("score")
                     + F.lit(cfg.host_rank_weight)
                     * (F.coalesce(F.col("rank_i"), F.lit(0).cast("long"))
-                       / F.lit(float(SCALE))),
+                       / F.lit(float(spec.PAGERANK_SCALE))),
                     6,
                 ),
             )
@@ -246,7 +247,7 @@ def run_round(
     deq = (
         deq.select("url", "url_hash", "score", "depth", "seq", "host", "sched_ms")
         .observe(obs["dequeued"], F.count(F.lit(1)).alias("rows"))
-        .persist()
+        .transform(persist)
     )
 
     ordering = deq.select(F.lit(rnd).alias("round"), "seq", "url").orderBy("seq")
@@ -287,7 +288,7 @@ def run_round(
                 "left_anti",
             )
             .select(F.col("final_url").alias("url"), "seq", "depth")
-            .persist()
+            .transform(persist)
         )
     fetched = corpus.join(F.broadcast(fetch_keys), "url", "inner")
     w_asof = Window.partitionBy("url").orderBy(F.col("warc_ts").desc())
@@ -315,7 +316,7 @@ def run_round(
             F.sum(F.length("text_x")).alias("text_chars"),
             F.sum("n_links").alias("outlinks"),
         )
-    ).persist()
+    ).transform(persist)
 
     results = ex.select(
         F.lit(rnd).alias("round"),
@@ -347,7 +348,7 @@ def run_round(
         .withColumn("discovered_round", F.lit(rnd + 1))
         .select("_src_host", "url", "url_hash", "score", "depth", "discovered_round")
         .observe(obs["links"], F.count(F.lit(1)).alias("rows"))
-    ).persist()  # feeds the seen anti-join; don't re-run the UDF chain
+    ).transform(persist)  # feeds the seen anti-join; don't re-run the UDF chain
     host_edges = links.select(
         F.col("_src_host").alias("src"), host_col(F.col("url")).alias("dst")
     )
@@ -403,7 +404,7 @@ def run_round(
         # NOTE: no repartition here — the groupBy already hash-distributed
         # the rows, and hash partitioning does not survive a parquet write;
         # an extra exchange would be pure shuffle cost every round.
-        .persist()  # computed twice: frontier write + lineage metrics
+        .transform(persist)  # computed twice: frontier write + lineage metrics
     )
 
     # --- per-partition lineage metrics (north rule) -------------------------
@@ -455,9 +456,6 @@ def run_round(
         "frontier": frontier_next,
         "seen": seen_delta,
         "metrics": metrics,
-        # caller unpersists after commit
-        "_persisted": [deq, ex, links, frontier_next]
-        + ([fetch_keys] if redirects is not None else []),
         "_observations": obs,  # stage → Observation; read AFTER the writes ran
     })
     if cfg.host_rank_weight > 0:
@@ -621,155 +619,147 @@ def run_crawl(
     from storm_focused_crawler_spark.operators import seen_filter
 
     for rnd in range(start, cfg.rounds):
-        t0 = time.time()
-        prev_shards = probe = None
-        if filt is not None and rnd > 0:
-            prev_shards = _prev_filter(spark, store, rnd - 1, filt_cfg)
-        if prev_shards is not None:
-            # advisory only — eligible() re-checks positives exactly (§2.1-3)
-            probe = seen_filter.probe_transform(
-                spark, filt, prev_shards, cfg.bloom_shards, filt_param
-            )
-        host_ranks = pr_out = None
-        if cfg.host_rank_weight > 0 and rnd > 0:
-            from storm_focused_crawler_spark.operators import graph
-
-            try:
-                pr_edges = store.read_union(spark, rnd - 1, "host_edges")
-            except FileNotFoundError:
-                pr_edges = None  # flag enabled mid-crawl on resume: no graph yet
-            if pr_edges is not None:
-                pr_out = graph.pagerank(pr_edges, cfg.host_rank_iters)
-                host_ranks = pr_out.select(F.col("node").alias("host"), "rank_i")
-        # cross-round crawl-delay continuity (VERDICT r04 #2): the
-        # checkpointed host_sched snapshot (host → absolute ms of its
-        # last fetch) becomes this round's carry — the politeness debt
-        # a delayed host starts the round with.  Both tables are
-        # dim-sized; the whole computation broadcasts.
-        prev_sched = host_carry = None
-        if has_interval and rnd > 0:
-            pm = store.manifest(rnd - 1)
-            if "host_sched" in pm["tables"]:
-                prev_sched = store.read(spark, rnd - 1, "host_sched")
-                host_carry = (
-                    prev_sched.join(F.broadcast(delayed_hosts), "host", "inner")
-                    .select(
-                        "host",
-                        F.greatest(
-                            F.lit(0).cast("long"),
-                            F.col("last_abs_ms")
-                            + F.col("min_interval_ms")
-                            - F.lit(rnd * cfg.round_ms).cast("long"),
-                        ).alias("carry_ms"),
-                    )
-                    .filter(F.col("carry_ms") > 0)
-                )
-        prev_used = host_used = None
-        if cfg.max_pages_per_host is not None and rnd > 0:
-            pm = store.manifest(rnd - 1)
-            if "host_used" in pm["tables"]:
-                prev_used = host_used = store.read(spark, rnd - 1, "host_used")
-        compact_now = cfg.compact_every > 0 and (rnd + 1) % cfg.compact_every == 0
-        out = run_round(
-            spark, corpus, frontier, seen, robots, host_budget, cfg, rnd, seed_hashes,
-            bloom_probe=probe,
-            url_expansions=url_expansions,
-            host_ranks=host_ranks,
-            host_carry=host_carry,
-            host_used=host_used,
-            redirects=redirects,
-        )
-        if "host_used" in out and prev_used is not None:
-            # full snapshot = prior spend ∪ this round's delta, summed
-            out["host_used"] = (
-                prev_used.unionByName(out["host_used"])
-                .groupBy("host")
-                .agg(F.sum("used").alias("used"))
-            )
-        if "host_sched" in out and prev_sched is not None:
-            # full snapshot = prior clock ∪ this round's delta, latest
-            # fetch per host — only the newest snapshot is ever read
-            out["host_sched"] = (
-                prev_sched.unionByName(out["host_sched"])
-                .groupBy("host")
-                .agg(F.max("last_abs_ms").alias("last_abs_ms"))
-            )
-        if compact_now:
-            # a 1000-round crawl otherwise pays an unbounded multi-path
-            # fan-in on read_union of every delta table each round.
-            # <table>_full in this round's atomic commit + the manifest
-            # pointer resolve the read in O(1).  The _full set must
-            # include THIS round's delta (read_union starts deltas at
-            # base+1).
-            for tbl in DELTA_TABLES:
-                if tbl not in out:
-                    continue
-                try:
-                    prior = store.read_union(spark, rnd - 1, tbl) if rnd > 0 else None
-                except FileNotFoundError:
-                    prior = None  # table joined the crawl this round
-                out[f"{tbl}_full"] = (
-                    out[tbl] if prior is None else prior.unionByName(out[tbl])
-                )
-        if filt is not None:
+        with scope():  # releases the round's cached frames after its commit
+            t0 = time.time()
+            prev_shards = probe = None
+            if filt is not None and rnd > 0:
+                prev_shards = _prev_filter(spark, store, rnd - 1, filt_cfg)
             if prev_shards is not None:
-                # incremental: hash only this round's delta, merge into prev
-                out["bloom"] = filt.merge_shards(
-                    prev_shards, filt.build_shards(out["seen"], cfg.bloom_shards, filt_param)
+                # advisory only — eligible() re-checks positives exactly (§2.1-3)
+                probe = seen_filter.probe_transform(
+                    spark, filt, prev_shards, cfg.bloom_shards, filt_param
                 )
-            else:
-                # no usable prior filter (filter newly enabled mid-crawl,
-                # or config changed): rebuild from the FULL seen set so
-                # pre-filter rounds stay covered — a delta-only filter
-                # would route their URLs past the anti-join as sure_new
-                full = seen.select("url_hash").unionByName(out["seen"].select("url_hash"))
-                out["bloom"] = filt.build_shards(full, cfg.bloom_shards, filt_param)
-        persisted = out.pop("_persisted")
-        observations = out.pop("_observations", {})
-        counts = store.write_round(rnd, out)
-        for df in persisted:
-            df.unpersist()
-        if pr_out is not None:
-            from storm_focused_crawler_spark.operators import graph
-
-            graph.release(pr_out)
-        # stage-level lineage, collected by the Observation API during the
-        # writes above (no extra jobs); persisted next to the row counts.
-        # An empty round can have its CollectMetrics node eliminated by
-        # AQE empty-relation propagation — that stage's lineage is then
-        # definitionally all-zero, not an error.  Any OTHER failure
-        # (timeout, interrupted job, misnamed metric) is recorded in the
-        # manifest and logged, never silently zeroed.
-        round_is_empty = counts.get("ordering", 0) == 0
-        stage_metrics = {}
-        for name, o in observations.items():
-            try:
-                stage_metrics[name] = {
-                    k: (int(v) if v is not None else 0) for k, v in o.get.items()
-                }
-            except Exception as e:
-                if round_is_empty:
-                    stage_metrics[name] = {"rows": 0}
-                else:
-                    import logging
-
-                    logging.getLogger(__name__).warning(
-                        "observation %r failed on non-empty round %d: %r", name, rnd, e
+            host_ranks = None
+            if cfg.host_rank_weight > 0 and rnd > 0:
+                try:
+                    pr_edges = store.read_union(spark, rnd - 1, "host_edges")
+                except FileNotFoundError:
+                    pr_edges = None  # flag enabled mid-crawl on resume: no graph yet
+                if pr_edges is not None:
+                    ranks = graph.pagerank(pr_edges, cfg.host_rank_iters)
+                    host_ranks = ranks.select(F.col("node").alias("host"), "rank_i")
+            # cross-round crawl-delay continuity (VERDICT r04 #2): the
+            # checkpointed host_sched snapshot (host → absolute ms of its
+            # last fetch) becomes this round's carry — the politeness debt
+            # a delayed host starts the round with.  Both tables are
+            # dim-sized; the whole computation broadcasts.
+            prev_sched = host_carry = None
+            if has_interval and rnd > 0:
+                pm = store.manifest(rnd - 1)
+                if "host_sched" in pm["tables"]:
+                    prev_sched = store.read(spark, rnd - 1, "host_sched")
+                    host_carry = (
+                        prev_sched.join(F.broadcast(delayed_hosts), "host", "inner")
+                        .select(
+                            "host",
+                            F.greatest(
+                                F.lit(0).cast("long"),
+                                F.col("last_abs_ms")
+                                + F.col("min_interval_ms")
+                                - F.lit(rnd * cfg.round_ms).cast("long"),
+                            ).alias("carry_ms"),
+                        )
+                        .filter(F.col("carry_ms") > 0)
                     )
-                    stage_metrics[name] = {"rows": 0, "error": repr(e)}
-        amend = {"wall_sec": round(time.time() - t0, 3), "stages": stage_metrics}
-        if filt is not None:
-            amend["bloom_cfg"] = filt_cfg
-        store.amend_manifest(rnd, amend)
-        if compact_now:
-            # only the latest snapshot is ever read, so the state dir
-            # holds O(compact_every) of each on a 1000-round crawl
-            for tbl in SNAPSHOT_TABLES:
-                if tbl in counts:
-                    store.prune_table(tbl, rnd)
-        # cut lineage: next round reads the committed snapshot
-        frontier = store.read(spark, rnd, "frontier")
-        seen = store.read_union(spark, rnd, "seen")
+            prev_used = host_used = None
+            if cfg.max_pages_per_host is not None and rnd > 0:
+                pm = store.manifest(rnd - 1)
+                if "host_used" in pm["tables"]:
+                    prev_used = host_used = store.read(spark, rnd - 1, "host_used")
+            compact_now = cfg.compact_every > 0 and (rnd + 1) % cfg.compact_every == 0
+            out = run_round(
+                spark, corpus, frontier, seen, robots, host_budget, cfg, rnd, seed_hashes,
+                bloom_probe=probe,
+                url_expansions=url_expansions,
+                host_ranks=host_ranks,
+                host_carry=host_carry,
+                host_used=host_used,
+                redirects=redirects,
+            )
+            if "host_used" in out and prev_used is not None:
+                # full snapshot = prior spend ∪ this round's delta, summed
+                out["host_used"] = (
+                    prev_used.unionByName(out["host_used"])
+                    .groupBy("host")
+                    .agg(F.sum("used").alias("used"))
+                )
+            if "host_sched" in out and prev_sched is not None:
+                # full snapshot = prior clock ∪ this round's delta, latest
+                # fetch per host — only the newest snapshot is ever read
+                out["host_sched"] = (
+                    prev_sched.unionByName(out["host_sched"])
+                    .groupBy("host")
+                    .agg(F.max("last_abs_ms").alias("last_abs_ms"))
+                )
+            if compact_now:
+                # a 1000-round crawl otherwise pays an unbounded multi-path
+                # fan-in on read_union of every delta table each round.
+                # <table>_full in this round's atomic commit + the manifest
+                # pointer resolve the read in O(1).  The _full set must
+                # include THIS round's delta (read_union starts deltas at
+                # base+1).
+                for tbl in DELTA_TABLES:
+                    if tbl not in out:
+                        continue
+                    try:
+                        prior = store.read_union(spark, rnd - 1, tbl) if rnd > 0 else None
+                    except FileNotFoundError:
+                        prior = None  # table joined the crawl this round
+                    out[f"{tbl}_full"] = (
+                        out[tbl] if prior is None else prior.unionByName(out[tbl])
+                    )
+            if filt is not None:
+                if prev_shards is not None:
+                    # incremental: hash only this round's delta, merge into prev
+                    out["bloom"] = filt.merge_shards(
+                        prev_shards, filt.build_shards(out["seen"], cfg.bloom_shards, filt_param)
+                    )
+                else:
+                    # no usable prior filter (filter newly enabled mid-crawl,
+                    # or config changed): rebuild from the FULL seen set so
+                    # pre-filter rounds stay covered — a delta-only filter
+                    # would route their URLs past the anti-join as sure_new
+                    full = seen.select("url_hash").unionByName(out["seen"].select("url_hash"))
+                    out["bloom"] = filt.build_shards(full, cfg.bloom_shards, filt_param)
+            observations = out.pop("_observations", {})
+            counts = store.write_round(rnd, out)
+            # stage-level lineage, collected by the Observation API during the
+            # writes above (no extra jobs); persisted next to the row counts.
+            # An empty round can have its CollectMetrics node eliminated by
+            # AQE empty-relation propagation — that stage's lineage is then
+            # definitionally all-zero, not an error.  Any OTHER failure
+            # (timeout, interrupted job, misnamed metric) is recorded in the
+            # manifest and logged, never silently zeroed.
+            round_is_empty = counts.get("ordering", 0) == 0
+            stage_metrics = {}
+            for name, o in observations.items():
+                try:
+                    stage_metrics[name] = {
+                        k: (int(v) if v is not None else 0) for k, v in o.get.items()
+                    }
+                except Exception as e:
+                    if round_is_empty:
+                        stage_metrics[name] = {"rows": 0}
+                    else:
+                        import logging
+
+                        logging.getLogger(__name__).warning(
+                            "observation %r failed on non-empty round %d: %r", name, rnd, e
+                        )
+                        stage_metrics[name] = {"rows": 0, "error": repr(e)}
+            amend = {"wall_sec": round(time.time() - t0, 3), "stages": stage_metrics}
+            if filt is not None:
+                amend["bloom_cfg"] = filt_cfg
+            store.amend_manifest(rnd, amend)
+            if compact_now:
+                # only the latest snapshot is ever read, so the state dir
+                # holds O(compact_every) of each on a 1000-round crawl
+                for tbl in SNAPSHOT_TABLES:
+                    if tbl in counts:
+                        store.prune_table(tbl, rnd)
+            # cut lineage: next round reads the committed snapshot
+            frontier = store.read(spark, rnd, "frontier")
+            seen = store.read_union(spark, rnd, "seen")
     return store
 
 

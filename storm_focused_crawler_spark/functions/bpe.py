@@ -9,7 +9,8 @@ VOCABULARY (10^7-10^8 rows at web scale, not 10^11 tokens): explode
 adjacent symbol pairs weighted by word count, one hash agg, a scalar
 argmax collect, and a per-row regexp merge.  Each iteration
 localCheckpoints the vocab-sized frame, so plan depth stays constant
-(same discipline as dedup.cluster_keepers).
+(same discipline as dedup.cluster_keepers); the caller's open
+``session.scope()`` releases the checkpoints.
 
 Determinism: the winning pair is (count DESC, left ASC, right ASC) —
 total order, no RNG.  Merges apply leftmost-first via zero-width
@@ -25,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from storm_focused_crawler_spark.sources.session import checkpoint
 
 END = "</w>"
 
@@ -72,7 +75,7 @@ def learn_merges(spark: SparkSession, hist: DataFrame, n_merges: int) -> list[tu
     Checkpoints are LAZY: each iteration's argmax collect is the one
     job that materializes the (plan-truncated) vocab frame, instead of
     the r5 shape's eager-checkpoint + collect = 2 jobs per merge."""
-    work = _symbolize(hist).localCheckpoint(eager=False)
+    work = checkpoint(_symbolize(hist))
     out: list[tuple] = []
     for rank in range(1, n_merges + 1):
         top = (
@@ -91,7 +94,7 @@ def learn_merges(spark: SparkSession, hist: DataFrame, n_merges: int) -> list[tu
                 F.concat(F.lit(" "), "sym", F.lit(" ")), pat, left + right
             ).alias("sym"),
             "cnt",
-        ).select(F.trim("sym").alias("sym"), "cnt").localCheckpoint(eager=False)
+        ).select(F.trim("sym").alias("sym"), "cnt").transform(checkpoint)
     return out
 
 

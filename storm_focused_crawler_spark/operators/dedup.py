@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from storm_focused_crawler_spark.sources.session import checkpoint
+
 MINHASH_PERMS = 32
 MINHASH_BANDS = 8  # 8 bands × 4 rows
 _P = 4294967311  # first prime > 2^32
@@ -53,15 +55,18 @@ def shingles_col(text, n: int = 3):
     ).otherwise(F.array().cast("array<string>"))
 
 
+def _shingles(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(_id, sh): per-doc shingle sets, not materialized."""
+    return df.select(F.col(id_col).alias("_id"), shingles_col(F.col(text_col)).alias("sh"))
+
+
 def _shingle_table(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(_id, sh): the materialized shingle-set table — computed ONCE
     per run (localCheckpoint) because every MinHash path references it
     from several exchange branches (signature explode + both verify
     join sides), and each branch would otherwise recompute the shingle
     HOF from the scan."""
-    return df.select(
-        F.col(id_col).alias("_id"), shingles_col(F.col(text_col)).alias("sh")
-    ).localCheckpoint(eager=False)  # materialized by the first consumer
+    return checkpoint(_shingles(df, id_col, text_col))  # materialized by the first consumer
 
 
 def _signature_from_shingles(sh_tab: DataFrame) -> DataFrame:
@@ -78,16 +83,8 @@ def _signature_from_shingles(sh_tab: DataFrame) -> DataFrame:
 
 
 def minhash_signature(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """df → (id, sig array<long>[MINHASH_PERMS]) via shuffle-light agg."""
-    sh = df.select(
-        F.col(id_col).alias("_id"), F.explode(shingles_col(F.col(text_col))).alias("shingle")
-    ).withColumn("h32", F.pmod(F.xxhash64("shingle"), F.lit(1 << 32)))
-    aggs = []
-    for j in range(MINHASH_PERMS):
-        a, b = _perm_consts(j)
-        aggs.append(F.min(F.pmod(F.lit(a) * F.col("h32") + F.lit(b), F.lit(_P))).alias(f"m{j}"))
-    sig = sh.groupBy("_id").agg(*aggs)
-    return sig.select("_id", F.array(*[f"m{j}" for j in range(MINHASH_PERMS)]).alias("sig"))
+    """df → (_id, sig array<long>[MINHASH_PERMS]) via shuffle-light agg."""
+    return _signature_from_shingles(_shingles(df, id_col, text_col))
 
 
 def minhash_band_buckets(sig: DataFrame) -> DataFrame:
@@ -145,15 +142,13 @@ def incremental_minhash_pairs(
     ids (the candidate-id set is materialized dup-sized and broadcast
     semi-joined into the corpus scan BEFORE any shingling, so the
     non-candidate corpus never pays the shingle pass — r5 shingled the
-    whole corpus once per verify side).  Within-batch pairs reuse the
-    batch path on the new docs alone, sharing the batch shingle
-    table."""
+    whole corpus once per verify side).  Within-batch pairs run the
+    batch path (``_lsh_pairs``) over the same batch shingle table."""
     new_sh = _shingle_table(new_docs, id_col, text_col)  # batch-sized
-    new_sig = _signature_from_shingles(new_sh)
     cand = (
         minhash_band_buckets(corpus_sigs).alias("o")
         .join(
-            F.broadcast(minhash_band_buckets(new_sig)).alias("n"),
+            F.broadcast(minhash_band_buckets(_signature_from_shingles(new_sh))).alias("n"),
             (F.col("o.band") == F.col("n.band")) & (F.col("o.bh") == F.col("n.bh")),
         )
         .select(
@@ -164,24 +159,19 @@ def incremental_minhash_pairs(
         .distinct()
         # dup-sized; materialized because both the candidate-id
         # derivation and the verify join read it
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     cand_ids = (
         cand.select(F.col("id_a").alias("_id"))
         .unionByName(cand.select(F.col("id_b").alias("_id")))
         .distinct()
     )
-    old_cand_sh = (
-        corpus_docs.join(
-            F.broadcast(cand_ids), corpus_docs[id_col] == cand_ids["_id"], "left_semi"
-        )
-        .select(F.col(id_col).alias("_id"), shingles_col(F.col(text_col)).alias("sh"))
-        .localCheckpoint(eager=False)
+    old_cand = corpus_docs.join(
+        F.broadcast(cand_ids), corpus_docs[id_col] == cand_ids["_id"], "left_semi"
     )
-    sh = old_cand_sh.unionByName(new_sh)
-    v = _verify_pairs(cand, sh, threshold)
-    within = minhash_lsh_pairs(new_docs, id_col, text_col, threshold)
-    return v.unionByName(within).distinct()
+    old_cand_sh = _shingle_table(old_cand, id_col, text_col)
+    v = _verify_pairs(cand, old_cand_sh.unionByName(new_sh), threshold)
+    return v.unionByName(_lsh_pairs(new_sh, threshold)).distinct()
 
 
 def _verify_pairs(cand: DataFrame, sh_tab: DataFrame, threshold: float) -> DataFrame:
@@ -215,18 +205,27 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
     The shingle table is materialized once (_shingle_table) and feeds
     both the signature aggregation and the two exact-verify join sides.
     """
-    sh_tab = _shingle_table(df, id_col, text_col)
-    sig = _signature_from_shingles(sh_tab)
-    bands = minhash_band_buckets(sig)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
+    return _lsh_pairs(_shingle_table(df, id_col, text_col), threshold)
+
+
+def _lsh_pairs(sh_tab: DataFrame, threshold: float) -> DataFrame:
+    """Banded-LSH candidates within a (_id, sh) shingle table, verified
+    by exact jaccard against the same table."""
+    cand = _band_pairs(minhash_band_buckets(_signature_from_shingles(sh_tab)))
+    return _verify_pairs(cand, sh_tab, threshold)
+
+
+def _band_pairs(bands: DataFrame, *carry: str) -> DataFrame:
+    """(id_a, id_b[, c_a, c_b for each carried column c]) once per _id
+    pair sharing a (band, bh) bucket in any band, id_a < id_b."""
+    a, b = bands.alias("a"), bands.alias("b")
+    return (
         a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bh") == F.col("b.bh"))
                & (F.col("a._id") < F.col("b._id")))
-        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
+        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"),
+                *[F.col(f"{s}.{c}").alias(f"{c}_{s}") for c in carry for s in "ab"])
         .distinct()
     )
-    return _verify_pairs(cand, sh_tab, threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -302,7 +301,7 @@ def simhash_near_pairs(df: DataFrame, id_col: str, text_col: str,
     (_id, sh) table exactly once; both self-join sides and the verify
     read it back."""
     s = df.select(F.col(id_col).alias("_id"), simhash_col(F.col(text_col)).alias("sh"))
-    s = s.localCheckpoint(eager=False)  # materialized by the first consumer
+    s = checkpoint(s)  # materialized by the first consumer
     band_exprs = []
     for b in range(4):  # python-literal shift amounts
         src = F.col("sh.hi") if b < 2 else F.col("sh.lo")
@@ -314,16 +313,7 @@ def simhash_near_pairs(df: DataFrame, id_col: str, text_col: str,
     bands = s.select("_id", "sh", F.explode(F.array(*band_exprs)).alias("e")).select(
         "_id", "sh", "e.band", "e.bh"
     )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bh") == F.col("b.bh"))
-               & (F.col("a._id") < F.col("b._id")))
-        .select(
-            F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"),
-            F.col("a.sh").alias("sh_a"), F.col("b.sh").alias("sh_b"),
-        )
-        .distinct()
-    )
+    cand = _band_pairs(bands, "sh")
     hamming = F.bit_count(F.col("sh_a.hi").bitwiseXOR(F.col("sh_b.hi"))) + F.bit_count(
         F.col("sh_a.lo").bitwiseXOR(F.col("sh_b.lo"))
     )
@@ -470,18 +460,7 @@ def embedding_near_pairs(
         "_id",
         embedding_band_buckets_udf(dim, n_bands, planes_per_band)(F.col("v")).alias("bkts"),
     )
-    ex = bk.select("_id", F.posexplode("bkts").alias("band", "bkt"))
-    a, b = ex.alias("a"), ex.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkt") == F.col("b.bkt"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
-        .distinct()
-    )
+    cand = _band_pairs(bk.select("_id", F.posexplode("bkts").alias("band", "bh")))
     # exact verify with norms precomputed ONCE per vector (not per pair):
     # identical doubles to computing them inline — same elements, same
     # fold order — but 3× less higher-order-function work on the pair
@@ -539,20 +518,19 @@ def cluster_keepers(
     edges = (
         e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(checkpoint, eager=True)
     )
     # each round references lab FOUR times (self + neighbor join +
     # pointer jump's two sides + the fixpoint probe), so a persist-only
     # "cut" leaves a logical plan that grows ~4^k — analysis time, not
     # execution, becomes the bottleneck by round ~6.  localCheckpoint
-    # truncates the PLAN itself (pagerank's 2-ref loop grows linearly
-    # and gets away with persist; a multi-self-ref loop cannot).  On a
+    # truncates the PLAN itself (as graph.pagerank does).  On a
     # cluster, executor loss invalidates local checkpoints — a restart
     # of this (single-job, minutes-long) resolution re-runs it; swap in
     # reliable checkpoint(dir) if that tradeoff is wrong for a caller.
     lab = (
         edges.select("u").distinct().select("u", F.col("u").alias("lab"))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint, eager=True)
     )
     prev_sum = object()  # sentinel: never equal to a sum value
     for _ in range(max_iters):
@@ -567,17 +545,15 @@ def cluster_keepers(
             .agg(F.min("lab").alias("lab"))
             # LAZY checkpoint: the sum action below materializes it —
             # one job per iteration instead of eager-checkpoint + count
-            .localCheckpoint(eager=False)
+            .transform(checkpoint)
         )
         s = new.agg(F.sum(F.col("lab").cast("decimal(38,0)")).alias("s")).collect()[0]["s"]
-        lab.unpersist()
         lab = new
         if s == prev_sum:
             break
         prev_sum = s
-    edges.unpersist()
-    # lab stays persisted behind the returned frame; callers running one
-    # resolution per job let it age out, long-lived drivers unpersist
+    # edges and every round's lab stay materialized until the caller's
+    # session.scope() closes; the returned frame reads the last lab
     return lab.select(F.col("u").alias("doc_id"), F.col("lab").alias("keeper_id"))
 
 

@@ -5,7 +5,8 @@ A focused crawler's frontier scoring can fold in link-graph authority
 classic public-knowledge authority signal).  This is the repo's
 representative ITERATIVE algorithm: per iteration one join + one
 hash aggregate, state materialized and lineage truncated each step so
-a 50-iteration run never builds a 50-deep plan.
+a 50-iteration run never builds a 50-deep plan; the caller's open
+``session.scope()`` releases that state, so run the action inside it.
 
 Determinism discipline: ranks are INTEGER micro-units (parts of
 ``SCALE``), contributions use integer division, and per-node sums are
@@ -25,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from storm_focused_crawler_spark.sources.session import checkpoint, persist
 from storm_focused_crawler_spark.spec import (  # single source of truth (§2.1-7)
     PAGERANK_DAMP_DEN as DAMP_DEN,
     PAGERANK_DAMP_NUM as DAMP_NUM,
@@ -39,17 +41,17 @@ def pagerank(edges: DataFrame, iters: int = 10) -> DataFrame:
     edges(src string, dst string); multi-edges count once per
     occurrence, self-loops allowed.  rank_i is the exact integer
     state (sums to ≤ SCALE with deterministic floor losses); rank is
-    the float view rank_i / SCALE.
+    the float view rank_i / SCALE.  Every table materialized here stays
+    until the caller's ``session.scope()`` closes.
     """
     nodes = (
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
         .distinct()
-        .persist()
+        .transform(persist)
     )
     n = nodes.count()
     if n == 0:  # a crawl round may extract zero links; no graph, no ranks
-        nodes.unpersist()
         return edges.sparkSession.createDataFrame(
             [], "node string, rank_i long, rank double"
         )
@@ -59,7 +61,7 @@ def pagerank(edges: DataFrame, iters: int = 10) -> DataFrame:
     edges_deg = (
         edges.join(deg.withColumnRenamed("node", "src"), "src")
         .select("src", "dst", "deg")
-        .localCheckpoint(eager=False)  # materialized by the first consumer
+        .transform(checkpoint)  # materialized by the first consumer
     )
     ranks = nodes.select("node", F.lit(SCALE // n).cast("long").alias("rank_i"))
 
@@ -67,7 +69,7 @@ def pagerank(edges: DataFrame, iters: int = 10) -> DataFrame:
     # dangling nodes (no out-edges) spread their mass uniformly; the
     # membership is fixed, so detect ONCE and pay the per-iteration
     # mass term only when the set is non-empty
-    dangling = nodes.join(deg, "node", "left_anti").persist()
+    dangling = persist(nodes.join(deg, "node", "left_anti"))
     has_dangling = dangling.count() > 0
     for _ in range(iters):
         contrib = edges_deg.join(ranks.withColumnRenamed("node", "src"), "src").select(
@@ -103,22 +105,8 @@ def pagerank(edges: DataFrame, iters: int = 10) -> DataFrame:
         # per-iteration job); the RDD materializes when the caller's
         # action — or the next iteration's broadcast — first computes
         # it, and stays persisted for every later reference.
-        ranks = new_ranks.localCheckpoint(eager=False)
+        ranks = checkpoint(new_ranks)
 
-    out = ranks.select(
+    return ranks.select(
         "node", "rank_i", F.round(F.col("rank_i") / F.lit(float(SCALE)), 9).alias("rank")
     )
-    nodes.unpersist()
-    dangling.unpersist()
-    # the final iteration's state stays materialized behind the
-    # returned frame; long-lived callers (one pagerank per crawl
-    # round) release via this handle once done with the result
-    out._sfc_cached = ranks
-    return out
-
-
-def release(ranks_out: DataFrame) -> None:
-    """Unpersist the cached state behind a pagerank() result."""
-    cached = getattr(ranks_out, "_sfc_cached", None)
-    if cached is not None:
-        cached.unpersist()

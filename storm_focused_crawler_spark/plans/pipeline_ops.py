@@ -26,6 +26,7 @@ from storm_focused_crawler_spark.plans.queries import (
     _urls,
     op,
 )
+from storm_focused_crawler_spark.sources.session import checkpoint, persist
 
 # ======================= deduplication ======================================
 
@@ -94,7 +95,7 @@ def dedup_ngram_jaccard(spark, sf_dir):
     sh = (
         d.filter(n_toks >= 3)
         .select("doc_id", D.shingles_col(F.col("text")).alias("shingles"))
-        .localCheckpoint(eager=False)  # materialized by the first consumer
+        .transform(checkpoint)  # materialized by the first consumer
     )
     ex = sh.select(
         "doc_id", F.explode("shingles").alias("s"), F.size("shingles").alias("n")
@@ -507,7 +508,7 @@ def rank_bm25(spark, sf_dir):
     d = _spread(d0)
     # ONE corpus tokenize pass: postings persist; dl and df both derive
     # from the persisted aggregate, never from the text again
-    post = TI.postings(d, "doc_id", "text").persist()
+    post = persist(TI.postings(d, "doc_id", "text"))
     dl = TI.doc_lengths(post)
     n_docs = d0.count()  # scalar row count: skip the rebalance exchange
     tot = dl.agg(F.sum("dl").alias("s"), F.count("*").alias("c")).collect()[0]
@@ -564,7 +565,7 @@ def quality_lm_perplexity(spark, sf_dir):
     reference slice, per-doc ppl + head/middle/tail tertile."""
     d = _t(spark, sf_dir, "documents")
     uni, bi = CU.lm_bigram_counts(d.filter(F.col("doc_id") % 5 == 0))
-    uni, bi = uni.persist(), bi.persist()  # dim-sized; built once
+    uni, bi = persist(uni), persist(bi)  # dim-sized; built once
     st = uni.agg(F.sum("c1").alias("n"), F.count("*").alias("v")).collect()[0]
     return CU.lm_perplexity(d, uni, bi, int(st["n"]), int(st["v"]))
 

@@ -12,9 +12,14 @@ and a driver heap sized to the machine (``SPARK_DRIVER_MEM`` overrides).
 
 from __future__ import annotations
 
+import contextlib
 import os
+import threading
+from collections.abc import Callable, Iterator
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+_scopes = threading.local()  # foreachBatch runs on the query's own thread
 
 
 def _default_driver_mem() -> str:
@@ -58,3 +63,39 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextlib.contextmanager
+def scope() -> Iterator[None]:
+    """Release every frame this thread materializes through
+    :func:`persist` / :func:`checkpoint` (the package's only
+    materialization path) while this scope is the innermost one.  The
+    code that runs the action opens it; outside any scope nothing is
+    released (the caller owns its actions)."""
+    stack = vars(_scopes).setdefault("stack", [])
+    stack.append([])
+    try:
+        yield
+    finally:
+        for release in reversed(stack.pop()):
+            release()
+
+
+def _scoped(out: DataFrame, release: Callable[[], None]) -> DataFrame:
+    stack = vars(_scopes).get("stack")
+    if stack:
+        stack[-1].append(release)
+    return out
+
+
+def persist(df: DataFrame) -> DataFrame:
+    """``df.persist()``, unpersisted when the innermost scope closes."""
+    return _scoped(df.persist(), df.unpersist)  # persist() returns df itself
+
+
+def checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
+    """``df.localCheckpoint(eager)``; the scope unpersists the RDD behind
+    its ``LogicalRDD`` (``unpersist()`` on the frame itself is a no-op)."""
+    out = df.localCheckpoint(eager=eager)
+    rdd = out._jdf.queryExecution().analyzed().rdd()
+    return _scoped(out, lambda: rdd.unpersist(False))

@@ -36,9 +36,11 @@ from __future__ import annotations
 
 from typing import TYPE_CHECKING, Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from storm_focused_crawler_spark.sources.session import persist, scope
 
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
@@ -344,46 +346,44 @@ def make_fetch_batch(corpus: DataFrame, keywords: list[str],
     )
 
     def fetch_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Window
-
-        admitted = batch_df.select("url")
-        fetched = corpus.join(F.broadcast(admitted), "url", "inner")
-        w_asof = Window.partitionBy("url").orderBy(F.col("warc_ts").desc())
-        latest = (
-            fetched.withColumn("_rn", F.row_number().over(w_asof))
-            .filter(F.col("_rn") == 1)
-        )
-        ex = (
-            latest.withColumn("text_x", extract_text_col(F.col("html")))
-            .withColumn("links_raw", extract_links_col(F.col("html")))
-            .drop("html")  # html never crosses a shuffle (SURVEY §7.4-4)
-            .withColumn("score", score_col(F.col("text_x"), list(keywords)))
-            .persist()
-        )
-        (
-            ex.select(
-                F.lit(batch_id).alias("batch_id"),
-                "url",
-                "score",
-                F.col("text_x").alias("text"),
-                "lang",
-                F.size("links_raw").alias("n_links"),
+        with scope():  # one per micro-batch: ex is released after both sinks
+            admitted = batch_df.select("url")
+            fetched = corpus.join(F.broadcast(admitted), "url", "inner")
+            w_asof = Window.partitionBy("url").orderBy(F.col("warc_ts").desc())
+            latest = (
+                fetched.withColumn("_rn", F.row_number().over(w_asof))
+                .filter(F.col("_rn") == 1)
             )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(results_dir)
-        )
-        links = (
-            ex.select(F.explode("links_raw").alias("link_raw"))
-            .withColumn("url", canonicalize_udf(F.col("link_raw")))
-            .select("url")
-            .distinct()
-        )
-        # feedback edge: discovered links become the next generation's
-        # frontier input (Q1's checkpointed source picks up new files)
-        links.write.mode("append").parquet(frontier_dir)
-        ex.unpersist()
+            ex = (
+                latest.withColumn("text_x", extract_text_col(F.col("html")))
+                .withColumn("links_raw", extract_links_col(F.col("html")))
+                .drop("html")  # html never crosses a shuffle (SURVEY §7.4-4)
+                .withColumn("score", score_col(F.col("text_x"), list(keywords)))
+                .transform(persist)
+            )
+            (
+                ex.select(
+                    F.lit(batch_id).alias("batch_id"),
+                    "url",
+                    "score",
+                    F.col("text_x").alias("text"),
+                    "lang",
+                    F.size("links_raw").alias("n_links"),
+                )
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("batch_id")
+                .parquet(results_dir)
+            )
+            links = (
+                ex.select(F.explode("links_raw").alias("link_raw"))
+                .withColumn("url", canonicalize_udf(F.col("link_raw")))
+                .select("url")
+                .distinct()
+            )
+            # feedback edge: discovered links become the next generation's
+            # frontier input (Q1's checkpointed source picks up new files)
+            links.write.mode("append").parquet(frontier_dir)
 
     return fetch_batch
 

@@ -148,28 +148,26 @@ def test_no_html_through_round_shuffles(spark, fixture_paths, tmp_path):
         CrawlConfig,
         run_round,
     )
+    from storm_focused_crawler_spark.sources.session import scope
 
     with open(fixture_paths["seeds"]) as f:
         seeds = [spec.canon(u) for u in json.load(f)]
     frontier = spark.createDataFrame(
         [(u, spec.xxh64(u), 0.0, 0, 0) for u in seeds], FRONTIER_SCHEMA
     )
-    out = run_round(
-        spark,
-        spark.read.parquet(fixture_paths["pages"]),
-        frontier,
-        spark.createDataFrame([], SEEN_SCHEMA),
-        spark.read.parquet(fixture_paths["robots"]),
-        spark.read.parquet(fixture_paths["host_budget"]),
-        CrawlConfig(rounds=1, capacity=64, keywords=("data",)),
-        0,
-        [spec.xxh64(u) for u in seeds],
-    )
-    try:
+    with scope():
+        out = run_round(
+            spark,
+            spark.read.parquet(fixture_paths["pages"]),
+            frontier,
+            spark.createDataFrame([], SEEN_SCHEMA),
+            spark.read.parquet(fixture_paths["robots"]),
+            spark.read.parquet(fixture_paths["host_budget"]),
+            CrawlConfig(rounds=1, capacity=64, keywords=("data",)),
+            0,
+            [spec.xxh64(u) for u in seeds],
+        )
         plan = _plan(out["frontier"])
-        for ln in plan.splitlines():
-            if "Exchange" in ln and "html" in ln:
-                raise AssertionError(f"html bytes cross a shuffle: {ln}")
-    finally:
-        for df in out["_persisted"]:
-            df.unpersist()
+    for ln in plan.splitlines():
+        if "Exchange" in ln and "html" in ln:
+            raise AssertionError(f"html bytes cross a shuffle: {ln}")

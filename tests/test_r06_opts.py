@@ -100,13 +100,13 @@ def test_pagerank_dangling_fold_matches_python_twin(spark):
     """Graph with dangling nodes (d has no out-edges): the broadcast
     1-row dangling-mass fold must reproduce the python twin's integer
     ranks exactly, including the `dang // n` floor division."""
-    from storm_focused_crawler_spark.operators.graph import pagerank, release
+    from storm_focused_crawler_spark.operators.graph import pagerank
+    from storm_focused_crawler_spark.sources.session import scope
     from storm_focused_crawler_spark.spec import pagerank_py
 
     edges = [("a", "b"), ("b", "c"), ("c", "a"), ("a", "d"), ("b", "d")]
     df = spark.createDataFrame(edges, "src string, dst string")
-    out = pagerank(df, iters=7)
-    got = {r["node"]: r["rank_i"] for r in out.collect()}
+    with scope():
+        got = {r["node"]: r["rank_i"] for r in pagerank(df, iters=7).collect()}
     want = pagerank_py(edges, iters=7)
-    release(out)
     assert got == want
