@@ -824,7 +824,9 @@ def recrawl(
         (touches each victim's one shard, no rebuild, no full-seen
         scan); a BLOOM sidecar cannot delete and is REBUILT from the
         new ``seen_full`` — this asymmetry is exactly why the north
-        star names a cuckoo option.
+        star names a cuckoo option;
+      * ``host_sched`` / ``host_used`` — the crawl-delay clock and the
+        cumulative ``max_pages_per_host`` spend, carried unchanged.
 
     Returns the committed maintenance round number.  Resume semantics:
     the maintenance round consumes one round slot; continue crawling by
@@ -864,12 +866,14 @@ def recrawl(
         "frontier": prev_frontier.unionByName(requeued),
         "seen_full": seen_full,
     }
-    prev_m_sched = store.manifest(last)
-    if "host_sched" in prev_m_sched["tables"]:
-        # the continuous politeness clock must survive a maintenance
-        # commit — re-point the latest snapshot so the post-maintenance
-        # round still carries every host's last-fetch offset forward
-        tables["host_sched"] = store.read(spark, last, "host_sched")
+    # the crawl-delay clock (host_sched) and the per-host quota spend
+    # (host_used) must survive a maintenance commit: the next round
+    # reads them from this round only.  The filter sidecar is the one
+    # snapshot this commit rewrites (below).
+    prev_tables = store.manifest(last)["tables"]
+    for tbl in SNAPSHOT_TABLES:
+        if tbl != "bloom" and tbl in prev_tables:
+            tables[tbl] = store.read(spark, last, tbl)
 
     amend: dict = {"maintenance": "recrawl"}
     if filt is not None:

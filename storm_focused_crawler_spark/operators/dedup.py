@@ -3,8 +3,10 @@
 Four families, all designed Spark-first for the 100 TB case:
 
   * exact        — hash-groupBy on content (one shuffle, map-side combine)
-  * ngram-jaccard— word-shingle self-join (SQL-expressible; see
-                   plans/pipeline_ops.py for the DuckDB-oracled twin)
+  * ngram-jaccard— exact word-3-gram jaccard self-join (jaccard_pairs):
+                   PPJoin prefix + positional filter candidates, exact
+                   verify (the registered dedup_ngram_jaccard op is
+                   DuckDB-oracled, plans/pipeline_ops.py)
   * minhash-LSH  — ENTIRELY JVM-side: shingle → xxhash64 → N_PERM
                    universal-hash mins (groupBy agg) → banded bucket
                    self-join → exact-jaccard verification of candidates.
@@ -15,6 +17,12 @@ Four families, all designed Spark-first for the 100 TB case:
                    candidate pairs from 16-bit band buckets, hamming
                    verified with bit_count(xor).
 
+ngram-jaccard and minhash-LSH are one set-similarity join with two
+candidate generators: both read one (_id, sh) shingle table
+(_shingle_table), produce (id_a, id_b) candidates (PPJoin prefix or
+MinHash bands), and keep those whose exact jaccard _verify_pairs
+confirms.
+
 Sig math stays inside int64: h32 = url/shingle hash folded to 32 bits,
 a_j < 2^31 so a_j*h32 + b_j < 2^63 (no ANSI overflow), mod the first
 prime above 2^32.
@@ -24,7 +32,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from storm_focused_crawler_spark.sources.session import checkpoint
@@ -56,16 +64,26 @@ def shingles_col(text, n: int = 3):
 
 
 def _shingles(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(_id, sh): per-doc shingle sets, not materialized."""
-    return df.select(F.col(id_col).alias("_id"), shingles_col(F.col(text_col)).alias("sh"))
+    """(_id, sh): per-doc shingle sets, not materialized.  Docs with no
+    shingle are dropped here: a doc without one makes no signature and
+    no candidate anyway (an empty sh explodes to no rows).  The filter
+    is on the CHEAP token count (sh non-empty ⟺ ≥ 3 tokens), not on
+    size(sh) >= 1: a filter on the derived column gets pushed below the
+    exchange and re-evaluates the whole shingle HOF three times per row
+    (measured 3.1s -> 0.4s for the exploded ngram-jaccard stream)."""
+    text = F.col(text_col)
+    n_toks = F.size(F.filter(F.split(text, " "), lambda t: t != ""))
+    return df.filter(n_toks >= 3).select(
+        F.col(id_col).alias("_id"), shingles_col(text).alias("sh")
+    )
 
 
 def _shingle_table(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(_id, sh): the materialized shingle-set table — computed ONCE
-    per run (localCheckpoint) because every MinHash path references it
-    from several exchange branches (signature explode + both verify
-    join sides), and each branch would otherwise recompute the shingle
-    HOF from the scan."""
+    per run (localCheckpoint) because every join path references it
+    from several exchange branches (signature or prefix explode + both
+    verify join sides), and each branch would otherwise recompute the
+    shingle HOF from the scan."""
     return checkpoint(_shingles(df, id_col, text_col))  # materialized by the first consumer
 
 
@@ -176,7 +194,10 @@ def incremental_minhash_pairs(
 
 def _verify_pairs(cand: DataFrame, sh_tab: DataFrame, threshold: float) -> DataFrame:
     """Exact-jaccard verification of candidate (id_a, id_b) pairs
-    against a (_id, sh) shingle table."""
+    against a (_id, sh) shingle table: keeps a pair when the UNROUNDED
+    ratio is ≥ threshold (as both DuckDB oracles do) and reports it
+    rounded to 6 places — rounding first would admit a pair just below
+    the threshold."""
     v = (
         cand.join(
             sh_tab.withColumnRenamed("_id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a"
@@ -184,17 +205,71 @@ def _verify_pairs(cand: DataFrame, sh_tab: DataFrame, threshold: float) -> DataF
         .join(
             sh_tab.withColumnRenamed("_id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b"
         )
-        .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter")
-                / (F.size("sh_a") + F.size("sh_b") - F.col("inter")).cast("double"),
-                6,
-            ),
-        )
+        .select("id_a", "id_b", F.size(F.array_intersect("sh_a", "sh_b")).alias("inter"),
+                F.size("sh_a").alias("na"), F.size("sh_b").alias("nb"))
     )
-    return v.filter(F.col("jaccard") >= threshold).select("id_a", "id_b", "jaccard")
+    jac = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")).cast("double")
+    return v.filter(jac >= threshold).select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
+
+
+def jaccard_pairs(df: DataFrame, id_col: str, text_col: str, threshold: float) -> DataFrame:
+    """Exact word-3-gram jaccard self-join: (id_a, id_b, jaccard) with
+    id_a < id_b for every pair whose shingle-set jaccard is ≥ threshold
+    — the naive all-pairs result, with no LSH recall loss.
+
+    Candidates come from the PPJoin prefix filter (public literature):
+    under ANY common total order of shingles, two sets with jaccard ≥ t
+    must share at least one element within each other's first
+    n - ceil(t·n) + 1 shingles.  Rare-first ordering (global df asc,
+    then shingle) keeps the candidate join's key groups small — the
+    hot-shingle quadratic blowup of a naive shingle self-join cannot
+    happen.  A length filter and the PPJoin positional filter prune
+    further, and _verify_pairs checks every candidate with the EXACT
+    intersection over full shingle sets, so the output is identical to
+    the naive plan.
+
+    The shingle table is materialized ONCE (_shingle_table): it feeds
+    four consumers (the exploded stream's two exchange branches + both
+    verify sides), and each consuming exchange would otherwise recompute
+    the shingle HOF from the scan (measured ~2x of the whole query).
+    At scale this is PPJoin's standard "materialize the signature
+    table" step — corpus-shaped, built exactly once per run."""
+    t = threshold
+    sh = _shingle_table(df, id_col, text_col)
+    ex = sh.select("_id", F.explode("sh").alias("s"), F.size("sh").alias("n"))
+    dfreq = ex.groupBy("s").agg(F.count("*").alias("dfreq"))
+    w = Window.partitionBy("_id").orderBy(F.col("dfreq").asc(), F.col("s").asc())
+    # keep r (position in the global rare-first order) for the
+    # positional filter below
+    prefix = (
+        ex.join(dfreq, "s")
+        .withColumn("r", F.row_number().over(w))
+        .filter(F.col("r") <= F.col("n") - F.ceil(t * F.col("n")) + 1)
+        .select("_id", "s", "n", "r")
+    )
+    a, b = prefix.alias("a"), prefix.alias("b")
+    # PPJoin positional filter (Xiao et al. 2008): a shared element at
+    # rank (ra, rb) of the two ordered sets bounds the overlap by
+    # 1 + min(na - ra, nb - rb); a pair with jaccard ≥ t needs overlap
+    # ≥ ceil(t/(1+t)·(na+nb)).  For a true pair, its FIRST shared
+    # element (which the prefix theorem proves lies in both prefixes)
+    # always passes the bound, so this only prunes provably-impossible
+    # candidates — measured 596k -> 325k candidate pairs, output
+    # byte-identical.
+    alpha = F.ceil(F.lit(t) / (1.0 + t) * (F.col("a.n") + F.col("b.n")))
+    pos_ok = (1 + F.least(F.col("a.n") - F.col("a.r"), F.col("b.n") - F.col("b.r"))) >= alpha
+    cand = (
+        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a._id") < F.col("b._id")))
+        # length filter: |A| >= t*|B| is necessary for jaccard >= t
+        .filter(
+            (F.col("a.n") >= F.ceil(t * F.col("b.n")))
+            & (F.col("b.n") >= F.ceil(t * F.col("a.n")))
+        )
+        .filter(pos_ok)
+        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
+        .distinct()
+    )
+    return _verify_pairs(cand, sh, t)
 
 
 def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,

@@ -1,6 +1,10 @@
 """Training-data pipeline operators: dedup, similarity, text analysis,
 multimodal — registered into the same queries()/oracle_sql() registry.
 
+The deduplication section's ops are thin wrappers over
+operators/dedup.py — the exact ngram-jaccard join (dedup.jaccard_pairs)
+included — so callers outside the registry reach the same code.
+
 SQL-oracled where both engines provably compute identical values
 (integer/string derivations, element-order double folds rounded to 6);
 rows-only where the computation depends on xxhash64/numpy internals
@@ -10,7 +14,6 @@ DuckDB cannot reproduce — those are pytest-locked instead
 
 from __future__ import annotations
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from storm_focused_crawler_spark.operators import curation as CU
@@ -26,7 +29,7 @@ from storm_focused_crawler_spark.plans.queries import (
     _urls,
     op,
 )
-from storm_focused_crawler_spark.sources.session import checkpoint, persist
+from storm_focused_crawler_spark.sources.session import persist
 
 # ======================= deduplication ======================================
 
@@ -39,18 +42,11 @@ def dedup_exact(spark, sf_dir):
     return D.exact_dedup(_t(spark, sf_dir, "documents"), "doc_id", "text")
 
 
-@op(
-    "dedup_ngram_jaccard",
-    # Prefix-filtered exact jaccard (PPJoin-style, public literature):
-    # under ANY common total order of shingles, two sets with
-    # jaccard >= t must share at least one element within each other's
-    # first n - ceil(t*n) + 1 shingles.  Rare-first ordering (global df
-    # asc, then shingle) makes the candidate join's key groups small —
-    # the hot-shingle quadratic blowup of a naive shingle self-join
-    # cannot happen.  Candidates are then verified with the EXACT
-    # intersection over full shingle sets, so the output is identical
-    # to the naive plan.
-    """WITH sh AS (
+# word-3-gram jaccard >= 0.3 candidate pairs with their intersection
+# and set sizes — the CTE chain shared by the dedup_ngram_jaccard and
+# dedup_cluster_keeper oracles (the prefix filter of
+# operators/dedup.jaccard_pairs, without its positional filter)
+NGRAM_PAIR_CTES = """sh AS (
       SELECT doc_id,
              list_distinct(list_transform(generate_series(1, len(string_split(text,' ')) - 2),
                i -> array_to_string(list_slice(string_split(text,' '), i, i + 2), ' '))) AS shingles
@@ -70,77 +66,19 @@ def dedup_exact(spark, sf_dir):
       SELECT c.id_a, c.id_b,
              len(list_intersect(sa.shingles, sb.shingles)) AS inter,
              len(sa.shingles) AS na, len(sb.shingles) AS nb
-      FROM cand c JOIN sh sa ON sa.doc_id = c.id_a JOIN sh sb ON sb.doc_id = c.id_b)
+      FROM cand c JOIN sh sa ON sa.doc_id = c.id_a JOIN sh sb ON sb.doc_id = c.id_b)"""
+
+
+@op(
+    "dedup_ngram_jaccard",
+    f"""WITH {NGRAM_PAIR_CTES}
     SELECT id_a, id_b, round(inter / CAST(na + nb - inter AS DOUBLE), 6) AS jaccard
     FROM v WHERE inter / CAST(na + nb - inter AS DOUBLE) >= 0.3""",
 )
 def dedup_ngram_jaccard(spark, sf_dir):
-    t = 0.3
     # parallelism floor: the single-split fixture scan would run the
     # whole shingle pass in ONE task (guide §2.5); no-op at real scale
-    d = _spread(_t(spark, sf_dir, "documents"))
-    # pre-filter on the CHEAP token count (shingles non-empty ⟺ ≥ 3
-    # tokens) instead of size(shingles) >= 1: a filter on the derived
-    # column gets pushed below the exchange and re-evaluates the whole
-    # shingle HOF three times per row (measured 3.1s -> 0.4s for the
-    # exploded stream); same rows kept by construction
-    n_toks = F.size(F.filter(F.split("text", " "), lambda t: t != ""))
-    # materialize the shingle table ONCE: it feeds FOUR consumers (the
-    # exploded stream's two exchange branches + both verify sides), and
-    # each consuming exchange would otherwise recompute the shingle HOF
-    # from the scan (measured ~2x of the whole query).  At scale this
-    # is PPJoin's standard "materialize the signature table" step —
-    # executor-local storage of (id, shingles), corpus-shaped but built
-    # exactly once per run.
-    sh = (
-        d.filter(n_toks >= 3)
-        .select("doc_id", D.shingles_col(F.col("text")).alias("shingles"))
-        .transform(checkpoint)  # materialized by the first consumer
-    )
-    ex = sh.select(
-        "doc_id", F.explode("shingles").alias("s"), F.size("shingles").alias("n")
-    )
-    dfreq = ex.groupBy("s").agg(F.count("*").alias("dfreq"))
-    w = Window.partitionBy("doc_id").orderBy(F.col("dfreq").asc(), F.col("s").asc())
-    # keep r (position in the global rare-first order) for the PPJoin
-    # positional filter below
-    prefix = (
-        ex.join(dfreq, "s")
-        .withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= F.col("n") - F.ceil(t * F.col("n")) + 1)
-        .select("doc_id", "s", "n", "r")
-    )
-    a, b = prefix.alias("a"), prefix.alias("b")
-    # PPJoin positional filter (Xiao et al. 2008, public literature):
-    # a shared element at rank (ra, rb) of the two ordered sets bounds
-    # the overlap by 1 + min(na - ra, nb - rb); a pair with
-    # jaccard >= t needs overlap >= ceil(t/(1+t)·(na+nb)).  For a true
-    # pair, its FIRST shared element (which the prefix theorem proves
-    # lies in both prefixes) always passes the bound, so this only
-    # prunes provably-impossible candidates — measured 596k -> 325k
-    # candidate pairs, output byte-identical (still exact-verified).
-    alpha = F.ceil(F.lit(t) / (1.0 + t) * (F.col("a.n") + F.col("b.n")))
-    pos_ok = (1 + F.least(F.col("a.n") - F.col("a.r"), F.col("b.n") - F.col("b.r"))) >= alpha
-    cand = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        # length filter: |A| >= t*|B| is necessary for jaccard >= t
-        .filter(
-            (F.col("a.n") >= F.ceil(t * F.col("b.n")))
-            & (F.col("b.n") >= F.ceil(t * F.col("a.n")))
-        )
-        .filter(pos_ok)
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .distinct()
-    )
-    v = (
-        cand.join(sh.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sa")), "id_a")
-        .join(sh.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sb")), "id_b")
-        .withColumn("inter", F.size(F.array_intersect("sa", "sb")))
-        .withColumn("na", F.size("sa"))
-        .withColumn("nb", F.size("sb"))
-    )
-    jac = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")).cast("double")
-    return v.filter(jac >= t).select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
+    return D.jaccard_pairs(_spread(_t(spark, sf_dir, "documents")), "doc_id", "text", 0.3)
 
 
 @op(
@@ -148,27 +86,7 @@ def dedup_ngram_jaccard(spark, sf_dir):
     # same pairs CTEs as dedup_ngram_jaccard, then connected components
     # via a recursive transitive-closure CTE: keeper(u) = min id
     # reachable from u over the undirected pair edges (incl. u itself)
-    """WITH RECURSIVE sh AS (
-      SELECT doc_id,
-             list_distinct(list_transform(generate_series(1, len(string_split(text,' ')) - 2),
-               i -> array_to_string(list_slice(string_split(text,' '), i, i + 2), ' '))) AS shingles
-      FROM documents WHERE len(string_split(text,' ')) >= 3),
-    ex AS (SELECT doc_id, unnest(shingles) AS s, len(shingles) AS n FROM sh),
-    df AS (SELECT s, count(*) AS dfreq FROM ex GROUP BY s),
-    ranked AS (
-      SELECT ex.doc_id, ex.s, ex.n,
-             row_number() OVER (PARTITION BY ex.doc_id ORDER BY df.dfreq ASC, ex.s ASC) AS r
-      FROM ex JOIN df USING (s)),
-    prefix AS (SELECT doc_id, s, n FROM ranked WHERE r <= n - ceil(0.3 * n) + 1),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM prefix a JOIN prefix b ON a.s = b.s AND a.doc_id < b.doc_id
-      WHERE a.n >= ceil(0.3 * b.n) AND b.n >= ceil(0.3 * a.n)),
-    v AS (
-      SELECT c.id_a, c.id_b,
-             len(list_intersect(sa.shingles, sb.shingles)) AS inter,
-             len(sa.shingles) AS na, len(sb.shingles) AS nb
-      FROM cand c JOIN sh sa ON sa.doc_id = c.id_a JOIN sh sb ON sb.doc_id = c.id_b),
+    f"""WITH RECURSIVE {NGRAM_PAIR_CTES},
     pairs AS (
       SELECT id_a, id_b FROM v
       WHERE inter / CAST(na + nb - inter AS DOUBLE) >= 0.3),

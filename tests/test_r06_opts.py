@@ -2,9 +2,10 @@
 
 Each optimization that changed an operator's internals gets a direct
 behavioural lock here, independent of the broader oracle compares:
-  * PPJoin positional filter (dedup_ngram_jaccard) — losslessness on a
-    crafted corpus whose true pair's only shared prefix element sits
-    exactly at the positional bound;
+  * PPJoin positional filter (dedup_ngram_jaccard, dedup.jaccard_pairs)
+    — losslessness on a crafted corpus whose true pair's only shared
+    prefix element sits exactly at the positional bound; the exact
+    verify's threshold rule (unrounded ratio ≥ t);
   * cluster_keepers label-sum fixpoint — convergence on a long chain
     (the worst case for the fixpoint probe) equals naive CC;
   * pagerank folded dangling mass — bit-identical to pagerank_py on a
@@ -69,6 +70,50 @@ def test_ppjoin_positional_filter_lossless(spark, tmp_path):
     )
     assert got == _naive_jaccard_pairs(docs), got
     assert got, "fixture vacuous: no qualifying pair"
+
+
+# the boundary corpus of test_ppjoin_positional_filter_lossless, plus a
+# document too short to have a shingle
+_JACCARD_DOCS = {
+    1: "alpha beta gamma delta epsilon zeta eta theta iota kappa",
+    2: "alpha beta gamma delta epsilon zeta eta theta iota kappa",
+    3: "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu",
+    4: "alpha beta gamma nu xi omicron pi rho sigma tau",
+    5: "unrelated words entirely different from the others here now",
+    6: "unrelated words entirely French toast with maple syrup today",
+    7: "one shared alpha beta gamma rest is completely disjoint text",
+    8: "zz yy xx ww vv uu tt ss rr qq",
+    9: "alpha  beta",  # 2 tokens: no shingle, never in a pair
+}
+
+
+@pytest.mark.parametrize("t", [0.3, 0.5])
+def test_jaccard_pairs_operator_equals_naive(spark, t):
+    """dedup.jaccard_pairs called directly, on caller-named columns:
+    exactly the naive all-pairs result at either threshold."""
+    from storm_focused_crawler_spark.operators.dedup import jaccard_pairs
+
+    df = spark.createDataFrame(list(_JACCARD_DOCS.items()), "id long, body string")
+    got = sorted(
+        (r["id_a"], r["id_b"], r["jaccard"])
+        for r in jaccard_pairs(df, "id", "body", t).collect()
+    )
+    assert got == _naive_jaccard_pairs(_JACCARD_DOCS, t)
+    assert got, "fixture vacuous: no qualifying pair"
+
+
+def test_verify_pairs_compares_unrounded_jaccard(spark):
+    """Sets of 9 and 7 shingles sharing 7: jaccard 7/9 = 0.7777...78.
+    Just above it the pair is dropped (rounding to 6 places first would
+    keep it as 0.777778); at exactly 7/9 it is kept, reported rounded."""
+    from storm_focused_crawler_spark.operators.dedup import _verify_pairs
+
+    sh = [f"s{i}" for i in range(9)]
+    sh_tab = spark.createDataFrame([(1, sh), (2, sh[:7])], "_id long, sh array<string>")
+    cand = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+    assert _verify_pairs(cand, sh_tab, 0.7777779).collect() == []
+    got = [tuple(r) for r in _verify_pairs(cand, sh_tab, 7 / 9).collect()]
+    assert got == [(1, 2, 0.777778)]
 
 
 def test_cluster_keepers_chain_fixpoint(spark):

@@ -236,6 +236,43 @@ def test_recrawl_post_maintenance_round_exact_parity(
         assert vals[2:] == want_results[url][2:]
 
 
+def test_recrawl_keeps_host_quota_spend(spark, fixture_paths, tmp_path):
+    """crawl → recrawl → crawl under a cumulative per-host quota: the
+    maintenance commit carries every host's spend (host_used) forward,
+    so the rounds after it match the oracle driven through the same
+    lifecycle and no host is fetched more than the quota in total."""
+    from collections import Counter
+
+    from storm_focused_crawler_spark.oracle import seqcrawler as sq
+
+    quota = 3
+    wd = str(tmp_path / "recrawl_quota")
+    cfg = _cfg(capacity=32, max_pages_per_host=quota)
+    store = drv.run_crawl(spark, fixture_paths, cfg, wd)
+    victims = _link_discovered_urls(spark, store, fixture_paths)
+    vdf = spark.createDataFrame([(u,) for u in victims], "url string")
+    mnt = drv.recrawl(spark, store, cfg, vdf, rescore=2.0)
+    end = mnt + 1 + ROUNDS
+    store = drv.run_crawl(spark, fixture_paths, replace(cfg, rounds=end), wd)
+
+    pages, seeds, robots, budgets = sq.load_fixture_inputs(fixture_paths)
+    ocfg = sq.CrawlConfig(rounds=ROUNDS, capacity=32, keywords=cfg.keywords,
+                          max_pages_per_host=quota)
+    res = sq.crawl(pages, seeds, robots, budgets, ocfg)
+    sq.recrawl(res, victims, mnt_round=mnt, rescore=2.0)
+    sq.crawl_rounds(res, sq.latest_captures(pages), seeds, robots, budgets, ocfg,
+                    mnt + 1, end)
+
+    got = sorted(
+        (x["round"], x["seq"], x["url"])
+        for r in range(end) if r != mnt  # the maintenance round fetches nothing
+        for x in store.read(spark, r, "ordering").collect()
+    )
+    assert got == sorted(res.ordering)
+    per_host = Counter(u.split("://", 1)[1].partition("/")[0] for (_r, _s, u) in got)
+    assert max(per_host.values()) == quota  # binds, and is never exceeded
+
+
 def test_refresh_victims_age_policy(spark, fixture_paths, tmp_path):
     """Age-based refresh (driver.refresh_victims / CLI --recrawl-age):
     the victim set — urls whose last fetch is >= max_age rounds behind
