@@ -4,7 +4,7 @@ NOT part of the frozen driver bench (bench.py); used to
   * dump .explain("formatted") for named registry queries into
     plans/r06/<name>_{before,after}.txt
   * time individual queries with the noop sink: min, median, [q1, q3]
-    and n over 3 runs
+    and n over 3 runs, after one untimed warm-up run of the first name
 
 Per-layer attribution of the crawl and frontier paths is
 `perfbench/run.py --trace 1`, which reads Spark's own job telemetry
@@ -53,6 +53,10 @@ def time_queries(spark, sf_dir, names, n=3):
     from storm_focused_crawler_spark.sources.session import scope
 
     qs = entry.queries()
+    # untimed warm-up: the first job in a session pays worker start-up
+    # and codegen, which would otherwise land in the first op's samples
+    with scope():
+        qs[names[0]](spark, sf_dir).write.format("noop").mode("overwrite").save()
     for name in names:
         samples = []
         for _ in range(n):

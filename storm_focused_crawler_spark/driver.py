@@ -40,8 +40,7 @@ from pyspark.sql import functions as F
 from storm_focused_crawler_spark import spec
 from storm_focused_crawler_spark.functions.udfs import (
     canonicalize_udf,
-    extract_links_col,
-    extract_text_col,
+    fetch_extract,
     score_col,
 )
 from storm_focused_crawler_spark.operators import graph
@@ -207,20 +206,13 @@ def run_round(
 ) -> dict[str, DataFrame]:
     """Pure transformation: state-in → {ordering, results, frontier, seen, metrics}.
 
-    Per-stage lineage rides on Spark's Observation API — row/byte
-    counts are collected DURING the existing write actions, zero extra
-    jobs (north rule: "per-partition lineage + metrics"; the
-    per-partition breakdown is the ``metrics`` table, the per-stage
-    rollup lands in the round manifest via ``_observations``).  Its
-    persisted frames are released by the caller's ``session.scope()``.
+    A round's lineage (north rule: "per-partition lineage + metrics")
+    is the ``metrics`` table — rows per (stage, partition) for the
+    dequeued set, the discovered links and the next frontier — plus
+    the per-table row counts the commit writes into the round
+    manifest.  Its persisted frames are released by the caller's
+    ``session.scope()``.
     """
-    from pyspark.sql import Observation
-
-    obs = {
-        "dequeued": Observation("dequeued"),
-        "extracted": Observation("extracted"),
-        "links": Observation("links"),
-    }
     elig = eligible(frontier, seen, robots, bloom_probe)
     if host_ranks is not None:
         # §2.1-7 authority blend: EXACTLY spec.blended_priority's
@@ -246,7 +238,6 @@ def run_round(
                   host_cap=cfg.max_pages_per_host, host_used=host_used)
     deq = (
         deq.select("url", "url_hash", "score", "depth", "seq", "host", "sched_ms")
-        .observe(obs["dequeued"], F.count(F.lit(1)).alias("rows"))
         .transform(persist)
     )
 
@@ -290,33 +281,20 @@ def run_round(
             .select(F.col("final_url").alias("url"), "seq", "depth")
             .transform(persist)
         )
-    fetched = corpus.join(F.broadcast(fetch_keys), "url", "inner")
-    w_asof = Window.partitionBy("url").orderBy(F.col("warc_ts").desc())
-    latest = fetched.withColumn("_rn", F.row_number().over(w_asof)).filter(F.col("_rn") == 1)
-
     if cfg.scorer == "topic_nb":
         from storm_focused_crawler_spark.functions.topic_nb import score_nb_col
 
-        def _page_score():
-            return score_nb_col(F.col("text_x"), cfg.nb_target_topic)
+        page_score = score_nb_col(F.col("text_x"), cfg.nb_target_topic)
     elif cfg.scorer == "keywords":
-        def _page_score():
-            return score_col(F.col("text_x"), list(cfg.keywords))
+        page_score = score_col(F.col("text_x"), list(cfg.keywords))
     else:
         raise ValueError(f"unknown scorer {cfg.scorer!r}")
     ex = (
-        latest.withColumn("text_x", extract_text_col(F.col("html")))
-        .withColumn("links_raw", extract_links_col(F.col("html")))
-        .drop("html")  # html bytes never cross a shuffle (SURVEY §7.4-4)
-        .withColumn("page_score", _page_score())
+        fetch_extract(corpus, fetch_keys)
+        .withColumn("page_score", page_score)
         .withColumn("n_links", F.size("links_raw"))
-        .observe(
-            obs["extracted"],
-            F.count(F.lit(1)).alias("rows"),
-            F.sum(F.length("text_x")).alias("text_chars"),
-            F.sum("n_links").alias("outlinks"),
-        )
-    ).transform(persist)
+        .transform(persist)
+    )
 
     results = ex.select(
         F.lit(rnd).alias("round"),
@@ -347,7 +325,6 @@ def run_round(
         .withColumn("url_hash", F.xxhash64("url"))
         .withColumn("discovered_round", F.lit(rnd + 1))
         .select("_src_host", "url", "url_hash", "score", "depth", "discovered_round")
-        .observe(obs["links"], F.count(F.lit(1)).alias("rows"))
     ).transform(persist)  # feeds the seen anti-join; don't re-run the UDF chain
     host_edges = links.select(
         F.col("_src_host").alias("src"), host_col(F.col("url")).alias("dst")
@@ -408,19 +385,19 @@ def run_round(
     )
 
     # --- per-partition lineage metrics (north rule) -------------------------
-    # all three inputs are persisted, so these aggs scan the cache only
-    def _pp(df: DataFrame, stage: str) -> DataFrame:
-        return (
-            df.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count("*").alias("rows"))
-            .select(F.lit(rnd).alias("round"), F.lit(stage).alias("stage"),
-                    "partition_id", "rows")
-        )
+    # all three inputs are persisted, so the union scans the cache only,
+    # and one aggregation (one exchange) counts rows per stage and partition
+    def _part_ids(df: DataFrame, stage: str) -> DataFrame:
+        return df.select(F.lit(stage).alias("stage"),
+                         F.spark_partition_id().alias("partition_id"))
 
     metrics = (
-        _pp(frontier_next, "frontier_next")
-        .unionByName(_pp(deq, "dequeued"))
-        .unionByName(_pp(links, "links"))
+        _part_ids(frontier_next, "frontier_next")
+        .unionByName(_part_ids(deq, "dequeued"))
+        .unionByName(_part_ids(links, "links"))
+        .groupBy("stage", "partition_id")
+        .agg(F.count("*").alias("rows"))
+        .select(F.lit(rnd).alias("round"), "stage", "partition_id", "rows")
     )
 
     out_tables = {
@@ -456,7 +433,6 @@ def run_round(
         "frontier": frontier_next,
         "seen": seen_delta,
         "metrics": metrics,
-        "_observations": obs,  # stage → Observation; read AFTER the writes ran
     })
     if cfg.host_rank_weight > 0:
         # per-round edge DELTA off the cached links (append-only like
@@ -721,33 +697,8 @@ def run_crawl(
                     # would route their URLs past the anti-join as sure_new
                     full = seen.select("url_hash").unionByName(out["seen"].select("url_hash"))
                     out["bloom"] = filt.build_shards(full, cfg.bloom_shards, filt_param)
-            observations = out.pop("_observations", {})
             counts = store.write_round(rnd, out)
-            # stage-level lineage, collected by the Observation API during the
-            # writes above (no extra jobs); persisted next to the row counts.
-            # An empty round can have its CollectMetrics node eliminated by
-            # AQE empty-relation propagation — that stage's lineage is then
-            # definitionally all-zero, not an error.  Any OTHER failure
-            # (timeout, interrupted job, misnamed metric) is recorded in the
-            # manifest and logged, never silently zeroed.
-            round_is_empty = counts.get("ordering", 0) == 0
-            stage_metrics = {}
-            for name, o in observations.items():
-                try:
-                    stage_metrics[name] = {
-                        k: (int(v) if v is not None else 0) for k, v in o.get.items()
-                    }
-                except Exception as e:
-                    if round_is_empty:
-                        stage_metrics[name] = {"rows": 0}
-                    else:
-                        import logging
-
-                        logging.getLogger(__name__).warning(
-                            "observation %r failed on non-empty round %d: %r", name, rnd, e
-                        )
-                        stage_metrics[name] = {"rows": 0, "error": repr(e)}
-            amend = {"wall_sec": round(time.time() - t0, 3), "stages": stage_metrics}
+            amend = {"wall_sec": round(time.time() - t0, 3)}
             if filt is not None:
                 amend["bloom_cfg"] = filt_cfg
             store.amend_manifest(rnd, amend)

@@ -184,12 +184,6 @@ def _ngram_parts(lo):
     return F.concat(*parts)
 
 
-def doc_ngrams_col(text):
-    """Compat wrapper: 1-3-grams of lower(text).  Prefer classify()'s
-    project-then-explode plan on hot paths (see _ngram_parts)."""
-    return _ngram_parts(F.lower(text))
-
-
 CLASSIFY_MAX_CHARS = 512  # classical n-gram LID needs only a prefix; bounds
 #                           per-doc work at multi-KB web documents
 

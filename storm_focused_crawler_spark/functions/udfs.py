@@ -19,7 +19,7 @@ from __future__ import annotations
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -133,11 +133,6 @@ def rebalance_small_scan(df):
     return df
 
 
-def url_hash_col(url: Column) -> Column:
-    """§2.1-2: 64-bit xxhash64(canon_url), seed 42 (Spark default)."""
-    return F.xxhash64(url)
-
-
 def host_col(url: Column) -> Column:
     """authority = text between '://' and the first '/'."""
     return F.substring_index(F.substring_index(url, "://", -1), "/", 1)
@@ -195,6 +190,25 @@ def extract_links_col(html: Column) -> Column:
     return F.filter(
         arr,
         lambda u: u.startswith("http://") | u.startswith("https://"),
+    )
+
+
+def fetch_extract(corpus: DataFrame, keys: DataFrame) -> DataFrame:
+    """Fetch + extract, shared by the round driver and the live crawl:
+    broadcast-join the small *keys* frame (``url`` plus whatever the
+    caller carries) into the page corpus, keep each url's latest
+    capture (as-of ``warc_ts``), and add ``text_x`` / ``links_raw``.
+    ``html`` is dropped here, so its bytes never cross a shuffle
+    (SURVEY §7.4-4); the caller scores ``text_x``."""
+    fetched = corpus.join(F.broadcast(keys), "url", "inner")
+    w_asof = Window.partitionBy("url").orderBy(F.col("warc_ts").desc())
+    return (
+        fetched.withColumn("_rn", F.row_number().over(w_asof))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+        .withColumn("text_x", extract_text_col(F.col("html")))
+        .withColumn("links_raw", extract_links_col(F.col("html")))
+        .drop("html")
     )
 
 

@@ -1,12 +1,11 @@
 """Snapshot storage: Iceberg-shaped commit semantics on plain parquet.
 
 The north rule requires Iceberg tables with exact resume from
-checkpoint (BASELINE.json north_rule).  This sandbox has no Iceberg
-runtime jar and no network (SURVEY.md §7.1), so the default store
-reproduces the Iceberg properties that the engine actually relies on —
-atomic snapshot commit, time-travel by round, exact resume — with
-immutable parquet data files plus an atomically-renamed
-``manifest.json`` per round:
+checkpoint (BASELINE.json north_rule).  Without an Iceberg runtime jar
+(SURVEY.md §7.1), the store reproduces the Iceberg properties that the
+engine actually relies on — atomic snapshot commit, time-travel by
+round, exact resume — with immutable parquet data files plus an
+atomically-renamed ``manifest.json`` per round:
 
   <root>/round=<N>/<table>/  ... parquet files (written to a tmp dir)
   <root>/round=<N>/manifest.json   ← os.rename = the commit point
@@ -15,11 +14,7 @@ A round either has a manifest (fully committed, every table listed
 with its row count) or it doesn't (all its files are garbage to be
 ignored/overwritten).  ``latest_round()`` scans manifests only, so a
 killed run resumes from the last committed round with identical state
-— verified by tests/test_resume.py.
-
-On a real cluster, ``IcebergStore`` swaps in ``writeTo(...).append()``
-snapshot commits (activated when iceberg-spark-runtime is on the
-classpath); the engine only talks to the 4-method interface below.
+— verified by tests/test_parity.py::test_resume_exact.
 """
 
 from __future__ import annotations
@@ -30,7 +25,6 @@ import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 class ParquetSnapshotStore:
@@ -44,6 +38,13 @@ class ParquetSnapshotStore:
 
     def _manifest(self, rnd: int) -> str:
         return os.path.join(self._round_dir(rnd), "manifest.json")
+
+    def _write_manifest(self, rnd: int, m: dict) -> None:
+        """The one manifest writer: tmp-file + os.rename (atomic on POSIX)."""
+        mtmp = self._manifest(rnd) + ".tmp"
+        with open(mtmp, "w") as f:
+            json.dump(m, f)
+        os.rename(mtmp, self._manifest(rnd))
 
     # -- commit protocol -------------------------------------------------------
     def write_round(self, rnd: int, tables: dict[str, DataFrame]) -> dict[str, int]:
@@ -102,14 +103,9 @@ class ParquetSnapshotStore:
         for name in tables:
             if name.endswith("_full"):
                 compact[name[: -len("_full")]] = rnd
-        mtmp = self._manifest(rnd) + ".tmp"
-        with open(mtmp, "w") as f:
-            json.dump(
-                {"round": rnd, "tables": counts, "compact": compact,
-                 "write_sec": write_sec, "committed_at": time.time()},
-                f,
-            )
-        os.rename(mtmp, self._manifest(rnd))
+        self._write_manifest(rnd, {
+            "round": rnd, "tables": counts, "compact": compact,
+            "write_sec": write_sec, "committed_at": time.time()})
         return counts
 
     def read(self, spark: SparkSession, rnd: int, table: str) -> DataFrame:
@@ -132,16 +128,8 @@ class ParquetSnapshotStore:
         """
         if not os.path.exists(self._manifest(upto)):
             raise FileNotFoundError(f"round {upto} not committed in {self.root}")
-        top = self.manifest(upto)
-        if "compact" in top:
-            # O(1): the manifest carries the latest compaction round
-            base = top["compact"].get(table)
-        else:  # state dirs written before the pointer existed: full scan
-            base = None
-            for r in range(upto, -1, -1):
-                if f"{table}_full" in self.manifest(r)["tables"]:
-                    base = r
-                    break
+        # O(1): the manifest carries the latest compaction round
+        base = self.manifest(upto)["compact"].get(table)
         paths = []
         if base is not None:
             paths.append(os.path.join(self._round_dir(base), f"{table}_full"))
@@ -196,10 +184,7 @@ class ParquetSnapshotStore:
                 shutil.rmtree(p)
             rows = m["tables"].pop(table, None)
             m.setdefault("pruned", {})[table] = rows
-            mtmp = self._manifest(r) + ".tmp"
-            with open(mtmp, "w") as f:
-                json.dump(m, f)
-            os.rename(mtmp, self._manifest(r))
+            self._write_manifest(r, m)
             pruned.append(r)
         return sorted(pruned)
 
@@ -224,10 +209,7 @@ class ParquetSnapshotStore:
         """Merge *extra* into a committed round's manifest (atomic rename)."""
         m = self.manifest(rnd)
         m.update(extra)
-        mtmp = self._manifest(rnd) + ".tmp"
-        with open(mtmp, "w") as f:
-            json.dump(m, f)
-        os.rename(mtmp, self._manifest(rnd))
+        self._write_manifest(rnd, m)
 
 
 def _parquet_rows(path: str) -> int:
@@ -236,30 +218,3 @@ def _parquet_rows(path: str) -> int:
     ds = pq.ParquetDataset(path)
     return sum(f.metadata.num_rows for f in (pq.ParquetFile(p) for p in ds.files))
 
-
-class IcebergStore:
-    """Thin Iceberg twin of ParquetSnapshotStore for real clusters.
-
-    Requires iceberg-spark-runtime on the classpath (not present in
-    this sandbox — SURVEY.md §7.1); every round commit becomes an
-    Iceberg snapshot on <catalog>.<db>.<table>, with the round number
-    as a snapshot tag, giving the same resume/time-travel semantics.
-    """
-
-    def __init__(self, spark: SparkSession, namespace: str):
-        self.spark = spark
-        self.namespace = namespace
-        try:
-            spark._jvm.org.apache.iceberg.Table  # noqa: B018 — classpath probe
-        except Exception as e:  # pragma: no cover - sandbox has no jar
-            raise RuntimeError(
-                "iceberg-spark-runtime not on classpath; use ParquetSnapshotStore"
-            ) from e
-
-    def write_round(self, rnd: int, tables: dict[str, DataFrame]) -> dict[str, int]:  # pragma: no cover
-        counts = {}
-        for name, df in tables.items():
-            full = f"{self.namespace}.{name}"
-            df.withColumn("round", F.lit(rnd)).writeTo(full).append()
-            counts[name] = -1
-        return counts

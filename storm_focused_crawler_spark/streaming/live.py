@@ -36,7 +36,7 @@ from __future__ import annotations
 
 from typing import TYPE_CHECKING, Iterator
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -340,24 +340,14 @@ def make_fetch_batch(corpus: DataFrame, keywords: list[str],
 
     from storm_focused_crawler_spark.functions.udfs import (
         canonicalize_udf,
-        extract_links_col,
-        extract_text_col,
+        fetch_extract,
         score_col,
     )
 
     def fetch_batch(batch_df: DataFrame, batch_id: int) -> None:
         with scope():  # one per micro-batch: ex is released after both sinks
-            admitted = batch_df.select("url")
-            fetched = corpus.join(F.broadcast(admitted), "url", "inner")
-            w_asof = Window.partitionBy("url").orderBy(F.col("warc_ts").desc())
-            latest = (
-                fetched.withColumn("_rn", F.row_number().over(w_asof))
-                .filter(F.col("_rn") == 1)
-            )
             ex = (
-                latest.withColumn("text_x", extract_text_col(F.col("html")))
-                .withColumn("links_raw", extract_links_col(F.col("html")))
-                .drop("html")  # html never crosses a shuffle (SURVEY §7.4-4)
+                fetch_extract(corpus, batch_df.select("url"))
                 .withColumn("score", score_col(F.col("text_x"), list(keywords)))
                 .transform(persist)
             )

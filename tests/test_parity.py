@@ -72,6 +72,24 @@ def test_crawl_parity(spark, fixture_paths, oracle_result, tmp_path, parts):
         assert vals[1].encode() == omap[url][1].encode(), f"text mismatch {url}"
         assert vals[2:] == omap[url][2:]
 
+    # a round's record is its tables plus the manifest's row counts: the
+    # per-(stage, partition) metrics rows sum to the committed counts
+    for r in range(ROUNDS):
+        m = store.manifest(r)
+        assert "stages" not in m
+        metrics = store.read(spark, r, "metrics").collect()
+        keys = [(x["stage"], x["partition_id"]) for x in metrics]
+        assert len(keys) == len(set(keys)), f"round {r}: duplicate (stage, partition)"
+        per_stage: dict[str, int] = {}
+        for x in metrics:
+            assert x["round"] == r
+            per_stage[x["stage"]] = per_stage.get(x["stage"], 0) + x["rows"]
+        n_oracle = sum(1 for t in oracle_result.ordering if t[0] == r)
+        assert per_stage["dequeued"] == m["tables"]["ordering"] == n_oracle
+        assert per_stage["frontier_next"] == m["tables"]["frontier"]
+        n_links = sum(x["n_links"] for x in store.read(spark, r, "results").collect())
+        assert per_stage["links"] == n_links
+
 
 SEEN_FILTERS = {
     "bloom": dict(seen_filter="bloom", bloom_shards=4, bloom_bits_per_shard=1 << 16),
