@@ -41,7 +41,6 @@ def main() -> None:
 
 
 def write_plans() -> None:
-    import bench
     from pyspark.sql import functions as F
 
     from storm_focused_crawler_spark import spec
@@ -51,8 +50,9 @@ def write_plans() -> None:
     from storm_focused_crawler_spark.operators import bloom as B
     from storm_focused_crawler_spark.operators import robots as RB
     from storm_focused_crawler_spark.operators import seen_filter as SFL
+    from storm_focused_crawler_spark.sources.session import get_spark
 
-    spark = bench.build_session(8, app="gen_plans")
+    spark = get_spark(app="gen_plans", master="local[8]", shuffle_partitions=8)
     paths = gen_pages.ensure(SF)
 
     from storm_focused_crawler_spark.driver import (
@@ -122,8 +122,9 @@ def write_plans() -> None:
     sections: list[tuple[str, str, object]] = [
         ("Fetch join + extraction (crawl hot path)",
          "The dequeued set (≤ capacity rows) broadcasts INTO the page corpus "
-         "— the corpus is never exchanged; `html` is dropped before anything "
-         "shuffles (no Exchange carries html).",
+         "— the corpus is never exchanged.  The as-of window's Exchange "
+         "(hashpartitioning on url) still carries `html` (ROADMAP direction 1); "
+         "`html` is dropped at extraction, so no exchange after it carries html.",
          out["results"]),
         ("Per-host top-k politeness dequeue, host-authority blended",
          "One host exchange: the rank filter's literal bound plans a Partial "

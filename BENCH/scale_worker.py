@@ -103,10 +103,10 @@ def main() -> None:
     ap.add_argument("--capacity", type=int, default=100_000)
     args = ap.parse_args()
 
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
-    import bench
+    from storm_focused_crawler_spark.sources.session import get_spark
 
-    spark = bench.build_session(args.cpus, app=f"scale[{args.cpus}]")
+    spark = get_spark(app=f"scale[{args.cpus}]", master=f"local[{args.cpus}]",
+                      shuffle_partitions=args.cpus)
     try:
         # warmup: full pipeline at 1/8 size — pays python-worker spawn,
         # codegen, Arrow setup once, outside the timed window

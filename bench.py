@@ -70,26 +70,6 @@ BUDGET_BOOST = 50        # ... and relaxed politeness, so the measure is
                          # pipeline capacity, not the tiny fixture's host cap
 
 
-def build_session(cpus: int, app: str = "bench"):
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app)
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.default.parallelism", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    return spark
-
-
 def _exec(df) -> int:
     """Execute a DataFrame fully without collecting rows to the driver."""
     df.write.format("noop").mode("overwrite").save()
@@ -282,7 +262,9 @@ def run_bench(spark, sf_dir: str) -> dict:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = build_session(cpus)
+    from storm_focused_crawler_spark.sources.session import get_spark
+
+    spark = get_spark(app="bench", master=f"local[{cpus}]", shuffle_partitions=cpus)
     try:
         out = run_bench(spark, sf_dir)
     finally:

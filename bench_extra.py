@@ -24,7 +24,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-import bench  # noqa: E402  (frozen; reused for session + noop exec)
+from storm_focused_crawler_spark.sources.session import get_spark  # noqa: E402
 
 
 def _explain_str(df) -> str:
@@ -74,7 +74,8 @@ def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     cmd = sys.argv[1]
-    spark = bench.build_session(cpus, app=f"bench_extra:{cmd}")
+    spark = get_spark(app=f"bench_extra:{cmd}", master=f"local[{cpus}]",
+                      shuffle_partitions=cpus)
     try:
         if cmd == "plans":
             dump_plans(spark, sf_dir, sys.argv[2], sys.argv[3:])

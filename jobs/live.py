@@ -64,6 +64,9 @@ def main(argv=None) -> int:
 
     spark = SparkSession.builder.appName("focused-crawl-live").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # one state-store task per seen shard (Spark's default is 200); a
+    # restarted query keeps the count stored in its checkpoint
+    spark.conf.set("spark.sql.shuffle.partitions", str(args.n_shards))
 
     from storm_focused_crawler_spark import spec
     from storm_focused_crawler_spark.fixtures.gen_pages import ensure, topic_keywords

@@ -12,13 +12,14 @@ from the committed snapshot (so a 1000-round crawl never accumulates a
 Scale notes (the 100 TB story, graded against BASELINE.md):
   * the page corpus is prepared ONCE into a layout partitioned by
     ``url_bucket = pmod(xxhash64(url), B)`` — at cluster scale this is
-    the Iceberg ``bucket(url)`` layout; the per-round fetch join
-    broadcasts the (tiny, ≤ capacity rows) dequeued set, so dynamic
-    partition pruning skips every corpus partition that contains no
-    dequeued url instead of scanning 100 TB per round;
-  * the fat ``html`` column is projected ONLY inside the fetch join's
-    output and is extracted immediately; nothing downstream of
-    extraction shuffles html bytes (SURVEY.md §7.4-4);
+    the Iceberg ``bucket(url)`` layout.  The per-round fetch join
+    broadcasts the (tiny, ≤ capacity rows) dequeued set but keys on
+    ``url``, not ``url_bucket``, so nothing prunes buckets yet: each
+    round scans the whole corpus (ROADMAP direction 1);
+  * the fat ``html`` column is extracted right after the fetch join,
+    but the as-of window in udfs.fetch_extract shuffles the fetched
+    rows by url WITH their html (ROADMAP direction 1); nothing
+    downstream of extraction shuffles html bytes (SURVEY.md §7.4-4);
   * politeness runs one per-host top-k whose map-side partial limit
     (operators/frontier.py) keeps one hot host from skewing a task;
   * the seen-set probe is an exact anti-join on url_hash (with an
@@ -40,10 +41,13 @@ from pyspark.sql import functions as F
 from storm_focused_crawler_spark import spec
 from storm_focused_crawler_spark.functions.udfs import (
     canonicalize_udf,
+    close_mapping,
+    expand_urls,
     fetch_extract,
+    host_col,
     score_col,
 )
-from storm_focused_crawler_spark.operators import graph
+from storm_focused_crawler_spark.operators import graph, seen_filter
 from storm_focused_crawler_spark.operators.frontier import dequeue, eligible
 from storm_focused_crawler_spark.sources.session import persist, scope
 from storm_focused_crawler_spark.sources.storage import ParquetSnapshotStore
@@ -146,14 +150,13 @@ def _seen_filter(cfg: CrawlConfig) -> tuple:
 
 
 def _prev_filter(spark: SparkSession, store: ParquetSnapshotStore, rnd: int,
-                 filt_cfg: dict) -> DataFrame | None:
-    """Round *rnd*'s committed filter shards if they were built under
-    *filt_cfg*, else None (ADVICE r01: resuming with changed kind or
-    sizes must not merge incompatible shards; resuming with the filter
-    newly enabled must not treat a delta-only filter as the full
-    history)."""
-    m = store.manifest(rnd)
-    if "bloom" in m["tables"] and m.get("bloom_cfg") == filt_cfg:
+                 m: dict, filt_cfg: dict | None) -> DataFrame | None:
+    """Round *rnd*'s committed filter shards (*m* is its manifest) if
+    they were built under *filt_cfg*, else None (ADVICE r01: resuming
+    with changed kind or sizes must not merge incompatible shards;
+    resuming with the filter newly enabled must not treat a delta-only
+    filter as the full history)."""
+    if filt_cfg is not None and "bloom" in m["tables"] and m.get("bloom_cfg") == filt_cfg:
         return store.read(spark, rnd, "bloom")
     return None
 
@@ -197,14 +200,23 @@ def run_round(
     cfg: CrawlConfig,
     rnd: int,
     seed_hashes: list[int],
-    bloom_probe=None,
+    filter_shards: DataFrame | None = None,
     url_expansions: DataFrame | None = None,
     host_ranks: DataFrame | None = None,
-    host_carry: DataFrame | None = None,
+    host_sched: DataFrame | None = None,
     host_used: DataFrame | None = None,
     redirects: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
-    """Pure transformation: state-in → {ordering, results, frontier, seen, metrics}.
+    """Pure transformation: the previous round's state in, the complete
+    next state out — every table round *rnd* commits, in one dict.
+
+    In: *frontier*, the full *seen* set and the previous round's full
+    snapshots *filter_shards* (built under cfg's seen filter),
+    *host_sched* and *host_used*, each None when not committed.  Out:
+    ``ordering``, ``results``, ``frontier``, the ``seen`` delta,
+    ``metrics``; the full snapshots ``host_sched`` (host_budget has
+    delays), ``host_used`` (a quota) and ``bloom`` (a seen filter); the
+    ``host_edges`` / ``postings`` deltas when enabled.
 
     A round's lineage (north rule: "per-partition lineage + metrics")
     is the ``metrics`` table — rows per (stage, partition) for the
@@ -213,7 +225,14 @@ def run_round(
     manifest.  Its persisted frames are released by the caller's
     ``session.scope()``.
     """
-    elig = eligible(frontier, seen, robots, bloom_probe)
+    filt, filt_param, _ = _seen_filter(cfg)
+    probe = None
+    if filter_shards is not None:
+        # advisory only — eligible() re-checks positives exactly (§2.1-3)
+        probe = seen_filter.probe_transform(
+            spark, filt, filter_shards, cfg.bloom_shards, filt_param
+        )
+    elig = eligible(frontier, seen, robots, probe)
     if host_ranks is not None:
         # §2.1-7 authority blend: EXACTLY spec.blended_priority's
         # expression tree (add(score, mul(w, div(rank_i, SCALE)))) +
@@ -233,6 +252,25 @@ def run_round(
             )
             .drop("rank_i")
         )
+    delayed = host_carry = None
+    if "min_interval_ms" in host_budget.columns:
+        delayed = host_budget.filter(F.col("min_interval_ms") > 0).select(
+            "host", "min_interval_ms"
+        )
+        if host_sched is not None:
+            # cross-round crawl-delay continuity (VERDICT r04 #2): the
+            # politeness debt a delayed host starts this round with —
+            # its last fetch + interval, past this round's start.  Both
+            # tables are dim-sized; the whole computation broadcasts.
+            host_carry = (
+                host_sched.join(F.broadcast(delayed), "host", "inner")
+                .select(
+                    "host",
+                    (F.col("last_abs_ms") + F.col("min_interval_ms")
+                     - F.lit(rnd * cfg.round_ms).cast("long")).alias("carry_ms"),
+                )
+                .filter(F.col("carry_ms") > 0)
+            )
     deq = dequeue(elig, host_budget, cfg.capacity,
                   round_ms=cfg.round_ms, host_carry=host_carry,
                   host_cap=cfg.max_pages_per_host, host_used=host_used)
@@ -307,8 +345,6 @@ def run_round(
     )
 
     # --- link discovery → next frontier ------------------------------------
-    from storm_focused_crawler_spark.functions.udfs import host_col
-
     links = ex.select(
         host_col(F.col("url")).alias("_src_host"),  # for the host graph
         F.explode("links_raw").alias("link_raw"),
@@ -317,8 +353,6 @@ def run_round(
     )
     if url_expansions is not None:
         # shortener resolution BEFORE canonicalization ([R] URLExpanderBolt)
-        from storm_focused_crawler_spark.functions.udfs import expand_urls
-
         links = expand_urls(links, url_expansions, "link_raw")
     links = (
         links.withColumn("url", canonicalize_udf(F.col("link_raw")))
@@ -404,36 +438,44 @@ def run_round(
         "ordering": ordering,
         "results": results,
     }
-    if "min_interval_ms" in host_budget.columns:
-        # cross-round politeness clock ([R] fetcher wall-clock spacing;
-        # VERDICT r04 #2): per delayed host, the absolute ms of its last
-        # fetch this round (round start + max sched_ms).  Dim-sized —
-        # ≤ one row per delayed host that was dequeued (≤ capacity).
-        # run_crawl merges this delta into the checkpointed full
-        # ``host_sched`` snapshot and derives next round's carry.
-        delayed = host_budget.filter(
-            F.col("min_interval_ms").isNotNull() & (F.col("min_interval_ms") > 0)
-        ).select("host")
-        out_tables["host_sched"] = (
-            deq.join(F.broadcast(delayed), "host", "inner")
-            .groupBy("host")
-            .agg(
-                (F.lit(rnd * cfg.round_ms).cast("long") + F.max("sched_ms")).alias(
-                    "last_abs_ms"
-                )
-            )
+    if delayed is not None:
+        # cross-round politeness clock ([R] fetcher wall-clock spacing):
+        # per delayed host, the absolute ms of its last fetch — the
+        # previous snapshot's rows and this round's (round start +
+        # sched_ms) rows, max per host in one aggregation.  Dim-sized.
+        sched = deq.join(F.broadcast(delayed.select("host")), "host", "inner").select(
+            "host",
+            (F.lit(rnd * cfg.round_ms).cast("long") + F.col("sched_ms")).alias("last_abs_ms"),
+        )
+        if host_sched is not None:
+            sched = host_sched.select("host", "last_abs_ms").unionByName(sched)
+        out_tables["host_sched"] = sched.groupBy("host").agg(
+            F.max("last_abs_ms").alias("last_abs_ms")
         )
     if cfg.max_pages_per_host is not None:
-        # per-host quota spend THIS round (dim-sized, ≤ capacity rows);
-        # run_crawl merges it into the checkpointed full snapshot
-        out_tables["host_used"] = deq.groupBy("host").agg(
-            F.count("*").cast("long").alias("used")
-        )
+        # cumulative per-host quota spend: the previous snapshot's rows
+        # and one row per dequeued url, summed per host (dim-sized)
+        spent = deq.select("host", F.lit(1).cast("long").alias("used"))
+        if host_used is not None:
+            spent = host_used.select("host", "used").unionByName(spent)
+        out_tables["host_used"] = spent.groupBy("host").agg(F.sum("used").alias("used"))
     out_tables.update({
         "frontier": frontier_next,
         "seen": seen_delta,
         "metrics": metrics,
     })
+    if filt is not None:
+        if filter_shards is not None:
+            # incremental: hash only this round's delta, merge into prev
+            out_tables["bloom"] = filt.merge_shards(
+                filter_shards, filt.build_shards(seen_delta, cfg.bloom_shards, filt_param)
+            )
+        else:
+            # no usable prior filter (round 0, filter newly enabled
+            # mid-crawl, or config changed): build from the FULL seen
+            # set so earlier rounds stay covered — a delta-only filter
+            # would route their URLs past the anti-join as sure_new
+            out_tables["bloom"] = filt.build_shards(seen_next, cfg.bloom_shards, filt_param)
     if cfg.host_rank_weight > 0:
         # per-round edge DELTA off the cached links (append-only like
         # `seen`; next round's pagerank reads read_union('host_edges'))
@@ -464,7 +506,7 @@ def run_crawl(
     import time
 
     # rejects an unknown kind before any commit
-    filt, filt_param, filt_cfg = _seen_filter(cfg)
+    filt_cfg = _seen_filter(cfg)[2]
     store = ParquetSnapshotStore(os.path.join(workdir, "state"))
     corpus_path = prepare_corpus(spark, fixture_paths["pages"], workdir, cfg.url_buckets)
     corpus = spark.read.parquet(corpus_path)
@@ -501,14 +543,6 @@ def run_crawl(
             .withColumn("min_interval_ms", F.when(eff > 0, eff).cast("int"))
             .drop("_robots_delay_ms")
         )
-    has_interval = "min_interval_ms" in host_budget.columns
-    delayed_hosts = (
-        host_budget.filter(
-            F.col("min_interval_ms").isNotNull() & (F.col("min_interval_ms") > 0)
-        ).select("host", "min_interval_ms")
-        if has_interval
-        else None
-    )
     with open(fixture_paths["seeds"]) as f:
         seeds = [spec.canon(u) for u in json.load(f)]
     sitemap_entries: list[tuple[str, float]] = []
@@ -551,8 +585,6 @@ def run_crawl(
     if "url_expansions" in fixture_paths:
         # close shortener→shortener chains ONCE on the dim table so the
         # per-round broadcast join resolves any chain in one hop
-        from storm_focused_crawler_spark.functions.udfs import close_mapping
-
         url_expansions = close_mapping(
             spark.read.parquet(fixture_paths["url_expansions"])
         )
@@ -562,8 +594,6 @@ def run_crawl(
         # statuses only, canonicalize both endpoints, close chains once
         # (bounded, cycle-safe — close_mapping) so fetch-time resolution
         # is a single broadcast hop; oracle twin: seqcrawler.load_redirects
-        from storm_focused_crawler_spark.functions.udfs import close_mapping
-
         rd = spark.read.parquet(fixture_paths["redirects"])
         if "status" in rd.columns:
             rd = rd.filter((F.col("status") >= 300) & (F.col("status") < 400))
@@ -592,19 +622,17 @@ def run_crawl(
         seen = store.read_union(spark, last, "seen")
         start = last + 1
 
-    from storm_focused_crawler_spark.operators import seen_filter
-
     for rnd in range(start, cfg.rounds):
         with scope():  # releases the round's cached frames after its commit
             t0 = time.time()
-            prev_shards = probe = None
-            if filt is not None and rnd > 0:
-                prev_shards = _prev_filter(spark, store, rnd - 1, filt_cfg)
-            if prev_shards is not None:
-                # advisory only — eligible() re-checks positives exactly (§2.1-3)
-                probe = seen_filter.probe_transform(
-                    spark, filt, prev_shards, cfg.bloom_shards, filt_param
-                )
+            # the previous round's full snapshots this round carries
+            # forward, found through one manifest read
+            prev: dict[str, DataFrame | None] = {}
+            if rnd > 0:
+                pm = store.manifest(rnd - 1)
+                prev = {t: store.read(spark, rnd - 1, t)
+                        for t in ("host_sched", "host_used") if t in pm["tables"]}
+                prev["filter_shards"] = _prev_filter(spark, store, rnd - 1, pm, filt_cfg)
             host_ranks = None
             if cfg.host_rank_weight > 0 and rnd > 0:
                 try:
@@ -614,59 +642,14 @@ def run_crawl(
                 if pr_edges is not None:
                     ranks = graph.pagerank(pr_edges, cfg.host_rank_iters)
                     host_ranks = ranks.select(F.col("node").alias("host"), "rank_i")
-            # cross-round crawl-delay continuity (VERDICT r04 #2): the
-            # checkpointed host_sched snapshot (host → absolute ms of its
-            # last fetch) becomes this round's carry — the politeness debt
-            # a delayed host starts the round with.  Both tables are
-            # dim-sized; the whole computation broadcasts.
-            prev_sched = host_carry = None
-            if has_interval and rnd > 0:
-                pm = store.manifest(rnd - 1)
-                if "host_sched" in pm["tables"]:
-                    prev_sched = store.read(spark, rnd - 1, "host_sched")
-                    host_carry = (
-                        prev_sched.join(F.broadcast(delayed_hosts), "host", "inner")
-                        .select(
-                            "host",
-                            F.greatest(
-                                F.lit(0).cast("long"),
-                                F.col("last_abs_ms")
-                                + F.col("min_interval_ms")
-                                - F.lit(rnd * cfg.round_ms).cast("long"),
-                            ).alias("carry_ms"),
-                        )
-                        .filter(F.col("carry_ms") > 0)
-                    )
-            prev_used = host_used = None
-            if cfg.max_pages_per_host is not None and rnd > 0:
-                pm = store.manifest(rnd - 1)
-                if "host_used" in pm["tables"]:
-                    prev_used = host_used = store.read(spark, rnd - 1, "host_used")
             compact_now = cfg.compact_every > 0 and (rnd + 1) % cfg.compact_every == 0
             out = run_round(
                 spark, corpus, frontier, seen, robots, host_budget, cfg, rnd, seed_hashes,
-                bloom_probe=probe,
                 url_expansions=url_expansions,
                 host_ranks=host_ranks,
-                host_carry=host_carry,
-                host_used=host_used,
                 redirects=redirects,
+                **prev,
             )
-            if "host_used" in out and prev_used is not None:
-                # full snapshot = prior spend ∪ this round's delta, summed
-                out["host_used"] = (
-                    prev_used.unionByName(out["host_used"])
-                    .groupBy("host")
-                    .agg(F.sum("used").alias("used"))
-                )
-            if "host_sched" in out and prev_sched is not None:
-                # full snapshot = prior clock ∪ this round's delta, latest
-                # fetch per host — only the newest snapshot is ever read
-                out["host_sched"] = (
-                    prev_sched.unionByName(out["host_sched"])
-                    .groupBy("host")
-                    .agg(F.max("last_abs_ms").alias("last_abs_ms"))
-                )
             if compact_now:
                 # a 1000-round crawl otherwise pays an unbounded multi-path
                 # fan-in on read_union of every delta table each round.
@@ -684,22 +667,9 @@ def run_crawl(
                     out[f"{tbl}_full"] = (
                         out[tbl] if prior is None else prior.unionByName(out[tbl])
                     )
-            if filt is not None:
-                if prev_shards is not None:
-                    # incremental: hash only this round's delta, merge into prev
-                    out["bloom"] = filt.merge_shards(
-                        prev_shards, filt.build_shards(out["seen"], cfg.bloom_shards, filt_param)
-                    )
-                else:
-                    # no usable prior filter (filter newly enabled mid-crawl,
-                    # or config changed): rebuild from the FULL seen set so
-                    # pre-filter rounds stay covered — a delta-only filter
-                    # would route their URLs past the anti-join as sure_new
-                    full = seen.select("url_hash").unionByName(out["seen"].select("url_hash"))
-                    out["bloom"] = filt.build_shards(full, cfg.bloom_shards, filt_param)
             counts = store.write_round(rnd, out)
             amend = {"wall_sec": round(time.time() - t0, 3)}
-            if filt is not None:
+            if filt_cfg is not None:
                 amend["bloom_cfg"] = filt_cfg
             store.amend_manifest(rnd, amend)
             if compact_now:
@@ -821,14 +791,14 @@ def recrawl(
     # (host_used) must survive a maintenance commit: the next round
     # reads them from this round only.  The filter sidecar is the one
     # snapshot this commit rewrites (below).
-    prev_tables = store.manifest(last)["tables"]
+    pm = store.manifest(last)
     for tbl in SNAPSHOT_TABLES:
-        if tbl != "bloom" and tbl in prev_tables:
+        if tbl != "bloom" and tbl in pm["tables"]:
             tables[tbl] = store.read(spark, last, tbl)
 
     amend: dict = {"maintenance": "recrawl"}
     if filt is not None:
-        prev_shards = _prev_filter(spark, store, last, filt_cfg)
+        prev_shards = _prev_filter(spark, store, last, pm, filt_cfg)
         if prev_shards is not None and hasattr(filt, "delete_from_shards"):
             # cuckoo: targeted deletion, each victim touches one shard
             tables["bloom"] = filt.delete_from_shards(

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from storm_focused_crawler_spark.functions.udfs import tokens_col
 from storm_focused_crawler_spark.sources.session import checkpoint
 
 END = "</w>"
@@ -34,11 +35,8 @@ END = "</w>"
 
 def word_histogram(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(word, cnt): the one corpus-wide aggregation BPE needs."""
-    toks = F.filter(
-        F.split(F.lower(text_col), "[^a-z0-9]+"), lambda x: x != ""
-    )
     return (
-        docs.select(F.explode(toks).alias("word"))
+        docs.select(F.explode(tokens_col(F.col(text_col))).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))
     )
@@ -156,8 +154,7 @@ def segment_docs(docs: DataFrame, merges: list[tuple],
     count and character count — the sequence-length accounting an LLM
     data pipeline does before packing.  One explode + chained per-row
     regexp merges + one hash agg; python twin segment_word."""
-    toks = F.filter(F.split(F.lower(text_col), "[^a-z0-9]+"), lambda x: x != "")
-    w = docs.select(F.col(id_col), F.explode(toks).alias("word"))
+    w = docs.select(F.col(id_col), F.explode(tokens_col(F.col(text_col))).alias("word"))
     segd = w.select(id_col, F.size(segment_expr(F.col("word"), merges)).alias("n_sub"))
     return segd.groupBy(id_col).agg(
         F.count("*").alias("n_words"),

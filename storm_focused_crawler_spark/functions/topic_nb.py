@@ -123,14 +123,14 @@ def classify(docs: "DataFrame", id_col: str = "doc_id",
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
+    from storm_focused_crawler_spark.functions.udfs import tokens_col
+
     spark = docs.sparkSession
     weights, defaults = train()
     wdf = spark.createDataFrame(weights, "topic string, tok string, w long")
     tdf = spark.createDataFrame(defaults, "topic string, dflt long")
 
-    toks_arr = F.filter(F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"),
-                        lambda x: x != "")
-    base = docs.select(F.col(id_col).alias("_id"), toks_arr.alias("_toks"))
+    base = docs.select(F.col(id_col).alias("_id"), tokens_col(F.col(text_col)).alias("_toks"))
     toks = base.select("_id", F.explode("_toks").alias("tok"))
     matched = (
         toks.join(F.broadcast(wdf), "tok")

@@ -198,8 +198,9 @@ def fetch_extract(corpus: DataFrame, keys: DataFrame) -> DataFrame:
     broadcast-join the small *keys* frame (``url`` plus whatever the
     caller carries) into the page corpus, keep each url's latest
     capture (as-of ``warc_ts``), and add ``text_x`` / ``links_raw``.
-    ``html`` is dropped here, so its bytes never cross a shuffle
-    (SURVEY §7.4-4); the caller scores ``text_x``."""
+    ``html`` is dropped here, so no shuffle downstream carries it
+    (SURVEY §7.4-4) — but the as-of window's own exchange
+    (hashpartitioning on url) does; the caller scores ``text_x``."""
     fetched = corpus.join(F.broadcast(keys), "url", "inner")
     w_asof = Window.partitionBy("url").orderBy(F.col("warc_ts").desc())
     return (
@@ -218,6 +219,8 @@ def fetch_extract(corpus: DataFrame, keys: DataFrame) -> DataFrame:
 
 
 def tokens_col(text: Column) -> Column:
+    """The package's one JVM-side tokenizer, twin of spec.tokenize:
+    lowercase, split on runs of non-[a-z0-9], drop empty tokens."""
     return F.filter(F.split(F.lower(text), "[^a-z0-9]+"), lambda t: t != "")
 
 

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from storm_focused_crawler_spark.functions.udfs import tokens_col
 from storm_focused_crawler_spark.operators import curation as CU
 from storm_focused_crawler_spark.operators import dedup as D
 from storm_focused_crawler_spark.operators import multimodal as MM
@@ -332,8 +333,8 @@ def text_quality_score(spark, sf_dir):
 def text_token_count(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     ws = F.filter(F.split("text", " "), lambda x: x != "")
-    re_ = F.filter(F.split(F.lower("text"), "[^a-z0-9]+"), lambda x: x != "")
-    return d.select("doc_id", F.size(ws).alias("ws_tokens"), F.size(re_).alias("re_tokens"))
+    return d.select("doc_id", F.size(ws).alias("ws_tokens"),
+                    F.size(tokens_col(F.col("text"))).alias("re_tokens"))
 
 
 @op(
@@ -1400,8 +1401,7 @@ def corpus_stats_report(spark, sf_dir):
     because groups are few — at petabyte scale swap percentile() for
     percentile_approx (agg_quantile_latency is the sketch-path twin)."""
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), "[^a-z0-9]+"), lambda x: x != "")
-    t = d.select("lang", "source", "n_chars", F.size(toks).alias("n_tok"))
+    t = d.select("lang", "source", "n_chars", F.size(tokens_col(F.col("text"))).alias("n_tok"))
     return t.groupBy("lang", "source").agg(
         F.count("*").alias("n_docs"),
         F.sum("n_tok").cast("bigint").alias("sum_tokens"),

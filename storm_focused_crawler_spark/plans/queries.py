@@ -49,8 +49,8 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # DOCUMENTED SESSION OVERRIDE: timestamp semantics (date_trunc,
     # date_format) must match the DuckDB oracle regardless of the host
     # session's default timezone, so these ops pin the session to UTC.
-    # Our own sessions (sources/session.get_spark, bench.build_session,
-    # tests/conftest) are built UTC already — this only fires when the
+    # Our own sessions (sources/session.get_spark, which bench.py and
+    # tests/conftest use) are built UTC already — this only fires when the
     # driver harness hands us a non-UTC session, and it is intentional
     # for every query in this registry (the correctness contract is
     # "identical values to the oracle", which requires one timezone).

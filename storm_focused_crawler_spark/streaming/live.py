@@ -111,39 +111,63 @@ def session_counts_stream(events: DataFrame, gap: str = "30 minutes",
 
 
 # ---------------------------------------------------------------------------
-# stateful URL-seen filter — the Redis SISMEMBER/SADD loop as stream state
+# first-seen stream state — the URL-seen filter (the Redis SISMEMBER/SADD
+# loop) and exact document dedup share one sharded state function
 # ---------------------------------------------------------------------------
 
-SEEN_OUT_SCHEMA = "url string, url_hash long, shard int"
 SEEN_STATE_SCHEMA = "hashes binary"
 N_SHARDS_DEFAULT = 32
 
 
-def _seen_filter_fn(key, pdf_iter: "Iterator[pd.DataFrame]", state) -> "Iterator[pd.DataFrame]":
-    """Emit only first-ever-seen urls of this shard; state = sorted
-    int64 hash array (numpy bytes — bounded, vectorized probes)."""
-    import numpy as np
+def _first_seen_fn(hash_col: str):
+    """applyInPandasWithState body: emit only the rows whose *hash_col*
+    this shard has never seen (within a batch, the first occurrence in
+    input order); state = sorted int64 hash array (numpy bytes —
+    bounded, vectorized probes)."""
 
-    seen = (
-        np.frombuffer(state.get[0], dtype=np.int64)
-        if state.exists
-        else np.empty(0, dtype=np.int64)
+    def fn(key, pdf_iter: "Iterator[pd.DataFrame]", state) -> "Iterator[pd.DataFrame]":
+        import numpy as np
+
+        seen = (
+            np.frombuffer(state.get[0], dtype=np.int64)
+            if state.exists
+            else np.empty(0, dtype=np.int64)
+        )
+        for pdf in pdf_iter:
+            h = pdf[hash_col].to_numpy(dtype=np.int64)
+            # within-batch first occurrence, then against accumulated state
+            first_ix = ~pdf[hash_col].duplicated().to_numpy()
+            if len(seen):
+                idx = np.clip(np.searchsorted(seen, h), 0, len(seen) - 1)
+                unseen = seen[idx] != h
+            else:
+                unseen = np.ones(len(h), dtype=bool)
+            keep = first_ix & unseen
+            if keep.any():
+                seen = np.unique(np.concatenate([seen, h[keep]]))
+                yield pdf.loc[keep]
+        state.update((seen.tobytes(),))
+
+    return fn
+
+
+def _first_seen_stream(df: DataFrame, id_col: str, value_col: str, hash_col: str,
+                       n_shards: int) -> DataFrame:
+    """(id_col, hash_col = xxhash64(value_col), shard) rows of *df* whose
+    value was never seen before, exactly once across all micro-batches.
+    State is keyed by ``shard = pmod(hash, n_shards)``, so its size per
+    group is |distinct|/n_shards and parallelism scales with shards."""
+    h = F.xxhash64(value_col)
+    keyed = df.select(id_col, h.alias(hash_col),
+                      F.pmod(h, F.lit(n_shards)).cast("int").alias("shard"))
+    return keyed.groupBy("shard").applyInPandasWithState(
+        _first_seen_fn(hash_col),
+        outputStructType=T.StructType(
+            [T.StructField(f.name, f.dataType) for f in keyed.schema]),
+        stateStructType=SEEN_STATE_SCHEMA,
+        outputMode="append",
+        timeoutConf="NoTimeout",
     )
-    for pdf in pdf_iter:
-        h = pdf["url_hash"].to_numpy(dtype=np.int64)
-        # within-batch first occurrence, then against accumulated state
-        first_ix = ~pdf["url_hash"].duplicated().to_numpy()
-        if len(seen):
-            idx = np.clip(np.searchsorted(seen, h), 0, len(seen) - 1)
-            unseen = seen[idx] != h
-        else:
-            unseen = np.ones(len(h), dtype=bool)
-        keep = first_ix & unseen
-        if keep.any():
-            out = pdf.loc[keep, ["url", "url_hash", "shard"]]
-            seen = np.unique(np.concatenate([seen, h[keep]]))
-            yield out
-    state.update((seen.tobytes(),))
 
 
 BUDGET_OUT_SCHEMA = "url string, host string, n_used long, sched_ms long"
@@ -230,85 +254,24 @@ def politeness_limit_stream(urls: DataFrame, budget: int,
 
 
 def seen_filter_stream(urls: DataFrame, n_shards: int = N_SHARDS_DEFAULT) -> DataFrame:
-    """Streaming URL-seen dedup: sharded applyInPandasWithState.
-
-    Input: streaming DataFrame with a ``url`` column.  Output: rows the
-    crawl has never seen before, exactly once across all micro-batches.
-    State is keyed by ``shard = pmod(url_hash, n_shards)`` so its size
-    per group is |seen|/n_shards and parallelism scales with shards —
-    the same sharding discipline as the batch seen tables.
-    """
-    keyed = urls.select(
-        "url",
-        F.xxhash64("url").alias("url_hash"),
-        F.pmod(F.xxhash64("url"), F.lit(n_shards)).cast("int").alias("shard"),
-    )
-    return keyed.groupBy("shard").applyInPandasWithState(
-        _seen_filter_fn,
-        outputStructType=SEEN_OUT_SCHEMA,
-        stateStructType=SEEN_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
-
-
-# ---------------------------------------------------------------------------
-# stateful DOCUMENT dedup — streaming curation ingestion (the curation
-# pipeline's exact-dedup stage as stream state; the doc twin of the
-# URL-seen filter above, kept separate so the crawl path stays pinned)
-# ---------------------------------------------------------------------------
-
-DOC_DEDUP_OUT_SCHEMA = "doc_id long, text_hash long, shard int"
-
-
-def _doc_dedup_fn(key, pdf_iter: "Iterator[pd.DataFrame]", state) -> "Iterator[pd.DataFrame]":
-    """Emit only first-ever-seen text hashes of this shard; state =
-    sorted int64 hash array (numpy bytes — bounded, vectorized)."""
-    import numpy as np
-
-    seen = (
-        np.frombuffer(state.get[0], dtype=np.int64)
-        if state.exists
-        else np.empty(0, dtype=np.int64)
-    )
-    for pdf in pdf_iter:
-        h = pdf["text_hash"].to_numpy(dtype=np.int64)
-        first_ix = ~pdf["text_hash"].duplicated().to_numpy()
-        if len(seen):
-            idx = np.clip(np.searchsorted(seen, h), 0, len(seen) - 1)
-            unseen = seen[idx] != h
-        else:
-            unseen = np.ones(len(h), dtype=bool)
-        keep = first_ix & unseen
-        if keep.any():
-            out = pdf.loc[keep, ["doc_id", "text_hash", "shard"]]
-            seen = np.unique(np.concatenate([seen, h[keep]]))
-            yield out
-    state.update((seen.tobytes(),))
+    """Streaming URL-seen dedup — the Redis SISMEMBER/SADD loop as
+    sharded stream state, the same sharding discipline as the batch
+    seen tables.  Input: streaming DataFrame with a ``url`` column.
+    Output: (url, url_hash, shard) rows the crawl has never seen
+    before, exactly once across all micro-batches."""
+    return _first_seen_stream(urls, "url", "url", "url_hash", n_shards)
 
 
 def doc_dedup_stream(docs: DataFrame, n_shards: int = N_SHARDS_DEFAULT) -> DataFrame:
     """Streaming exact document dedup for continuous curation
-    ingestion: each distinct text is emitted exactly once across all
+    ingestion (the curation pipeline's exact-dedup stage as stream
+    state): each distinct text is emitted exactly once across all
     micro-batches (survivor = first arrival; within a batch, input
-    order).  Input: streaming frame with (doc_id, text).  State is
-    keyed by shard = pmod(xxhash64(text), n_shards), so per-group state
-    is |distinct|/n_shards and parallelism scales with shards — the
-    same discipline as the batch seen tables and the URL filter above.
-    Downstream batch stages (near-dup, decontam) run per landing
-    partition via jobs/pipeline.py --dedup-against."""
-    keyed = docs.select(
-        "doc_id",
-        F.xxhash64("text").alias("text_hash"),
-        F.pmod(F.xxhash64("text"), F.lit(n_shards)).cast("int").alias("shard"),
-    )
-    return keyed.groupBy("shard").applyInPandasWithState(
-        _doc_dedup_fn,
-        outputStructType=DOC_DEDUP_OUT_SCHEMA,
-        stateStructType=SEEN_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
+    order).  Input: streaming frame with (doc_id, text).  Output:
+    (doc_id, text_hash, shard).  Downstream batch stages (near-dup,
+    decontam) run per landing partition via jobs/pipeline.py
+    --dedup-against."""
+    return _first_seen_stream(docs, "doc_id", "text", "text_hash", n_shards)
 
 
 # ---------------------------------------------------------------------------

@@ -340,6 +340,21 @@ def test_crawl_delay_continuity_across_rounds(spark, tmp_path):
     assert got == sorted(res.ordering)
     assert res.host_last_abs == {"slow.ex": 150_000}
 
+    # resume: stop after round 1 and resume to round 4 — the debt
+    # crosses the restart only through the committed host_sched
+    # snapshot, so orderings and the round-3 clock match the
+    # uninterrupted run
+    wd_resume = str(tmp_path / "wd_resume")
+    drv.run_crawl(spark, paths, drv.CrawlConfig(rounds=2, capacity=8, keywords=()),
+                  wd_resume)
+    resumed = drv.run_crawl(spark, paths, cfg, wd_resume)
+    for r in range(4):
+        assert sorted(map(tuple, resumed.read(spark, r, "ordering").collect())) == sorted(
+            map(tuple, store.read(spark, r, "ordering").collect())
+        )
+    assert {r["host"]: r["last_abs_ms"]
+            for r in resumed.read(spark, 3, "host_sched").collect()} == clock
+
 
 def test_streaming_sched_ms_matches_batch_dequeue(spark, tmp_path):
     """VERDICT r04 #7: the streaming bucket emits sched_ms from the
