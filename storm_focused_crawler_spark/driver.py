@@ -35,8 +35,9 @@ import json
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from storm_focused_crawler_spark import spec
 from storm_focused_crawler_spark.functions.udfs import (
@@ -49,7 +50,8 @@ from storm_focused_crawler_spark.functions.udfs import (
 )
 from storm_focused_crawler_spark.operators import graph, seen_filter
 from storm_focused_crawler_spark.operators.frontier import dequeue, eligible
-from storm_focused_crawler_spark.sources.session import persist, scope
+from storm_focused_crawler_spark.operators.robots import rules_by_host
+from storm_focused_crawler_spark.sources.session import column_tree, persist, scope
 from storm_focused_crawler_spark.sources.storage import ParquetSnapshotStore
 
 FRONTIER_SCHEMA = "url string, url_hash long, score double, depth int, discovered_round int"
@@ -161,13 +163,27 @@ def _prev_filter(spark: SparkSession, store: ParquetSnapshotStore, rnd: int,
     return None
 
 
+def _page_score(scorer: str, keywords: tuple[str, ...], nb_target_topic: str) -> Column:
+    """The page relevance score over ``text_x`` (CrawlConfig.scorer)."""
+    if scorer == "topic_nb":
+        from storm_focused_crawler_spark.functions.topic_nb import score_nb_col
+
+        return score_nb_col(F.col("text_x"), nb_target_topic)
+    if scorer == "keywords":
+        return score_col(F.col("text_x"), list(keywords))
+    raise ValueError(f"unknown scorer {scorer!r}")
+
+
 # --------------------------------------------------------------------------
 # corpus preparation (one-time; = building the bucketed Iceberg table)
 # --------------------------------------------------------------------------
 
 
 def prepare_corpus(spark: SparkSession, pages_path: str, out_dir: str, n_buckets: int) -> str:
-    """Bucket the raw pages corpus by url hash for prunable fetch joins."""
+    """Bucket the raw pages corpus by url hash for prunable fetch joins.
+
+    The ``_PREPARED`` marker holds the layout's schema (StructType
+    JSON), so :func:`_read_corpus` runs no schema-inference job."""
     out = os.path.join(out_dir, "corpus")
     marker = os.path.join(out, "_PREPARED")
     if os.path.exists(marker):
@@ -181,8 +197,17 @@ def prepare_corpus(spark: SparkSession, pages_path: str, out_dir: str, n_buckets
         .parquet(out)
     )
     with open(marker, "w") as f:
-        f.write("ok")
+        f.write(spark.read.parquet(out).schema.json())
     return out
+
+
+def _read_corpus(spark: SparkSession, corpus_path: str) -> DataFrame:
+    with open(os.path.join(corpus_path, "_PREPARED")) as f:
+        marker = f.read()
+    reader = spark.read
+    if marker.startswith("{"):  # older markers hold "ok", not the schema
+        reader = reader.schema(StructType.fromJson(json.loads(marker)))
+    return reader.parquet(corpus_path)
 
 
 # --------------------------------------------------------------------------
@@ -224,6 +249,8 @@ def run_round(
     the per-table row counts the commit writes into the round
     manifest.  Its persisted frames are released by the caller's
     ``session.scope()``.
+
+    *robots* may already be host-grouped (``robots.rules_by_host``).
     """
     filt, filt_param, _ = _seen_filter(cfg)
     probe = None
@@ -319,17 +346,10 @@ def run_round(
             .select(F.col("final_url").alias("url"), "seq", "depth")
             .transform(persist)
         )
-    if cfg.scorer == "topic_nb":
-        from storm_focused_crawler_spark.functions.topic_nb import score_nb_col
-
-        page_score = score_nb_col(F.col("text_x"), cfg.nb_target_topic)
-    elif cfg.scorer == "keywords":
-        page_score = score_col(F.col("text_x"), list(cfg.keywords))
-    else:
-        raise ValueError(f"unknown scorer {cfg.scorer!r}")
     ex = (
         fetch_extract(corpus, fetch_keys)
-        .withColumn("page_score", page_score)
+        .withColumn("page_score", column_tree(_page_score, cfg.scorer, tuple(cfg.keywords),
+                                              cfg.nb_target_topic))
         .withColumn("n_links", F.size("links_raw"))
         .transform(persist)
     )
@@ -389,7 +409,9 @@ def run_round(
         # observed every extracted edge, like the oracle
         enqueueable = links.filter(F.col("depth") <= cfg.max_depth)
     new_unseen = enqueueable.join(seen_next, "url_hash", "left_anti")
-    rest = frontier.join(emitted, "url_hash", "left_anti")
+    # emitted is ≤ capacity rows: broadcast it, so the frontier is not
+    # shuffled by url_hash for this anti-join
+    rest = frontier.join(F.broadcast(emitted), "url_hash", "left_anti")
     merged = rest.unionByName(new_unseen)
     # per-url best entry by (max score, min depth, min discovered_round):
     # a hash AGGREGATE with map-side partial combine, not a sort window —
@@ -503,16 +525,34 @@ def run_crawl(
     workdir: str,
     resume: bool = True,
 ) -> ParquetSnapshotStore:
+    """Crawl rounds up to ``cfg.rounds`` into ``<workdir>/state``; with
+    *resume*, continue after the last committed round.
+
+    What does not change during a crawl is built once, before the first
+    round: the host-grouped robots rules and the crawl-delay-merged
+    host_budget (persisted when parsed from raw robots bodies, inside
+    one outer ``session.scope()`` that releases them when the crawl
+    returns) and the closed url-expansion and redirect maps; the REP
+    verdict, extraction and page-score Column trees are built once per
+    driver JVM (``session.column_tree``).  Seeds and sitemaps are read,
+    canonicalized and hashed only when the crawl starts at round 0.
+    Each round reads the previous round's committed state at its top
+    (a resume takes the same path), runs :func:`run_round` and commits
+    its tables in one ``write_round``; nothing is read after the last
+    commit.
+    """
     import time
 
     # rejects an unknown kind before any commit
     filt_cfg = _seen_filter(cfg)[2]
     store = ParquetSnapshotStore(os.path.join(workdir, "state"))
+    last = store.latest_round() if resume else None
+    start = 0 if last is None else last + 1
     corpus_path = prepare_corpus(spark, fixture_paths["pages"], workdir, cfg.url_buckets)
-    corpus = spark.read.parquet(corpus_path)
+    corpus = _read_corpus(spark, corpus_path)
     robots = spark.read.parquet(fixture_paths["robots"])
     host_budget = spark.read.parquet(fixture_paths["host_budget"])
-    robots_bodies = None  # raw bodies, kept for sitemap discovery below
+    robots_bodies = None  # raw bodies, kept for sitemap discovery
     if "content" in robots.columns:
         robots_bodies = robots
         # raw robots.txt bodies: RFC 9309 §2.2.1 user-agent group
@@ -543,6 +583,108 @@ def run_crawl(
             .withColumn("min_interval_ms", F.when(eff > 0, eff).cast("int"))
             .drop("_robots_delay_ms")
         )
+    seed_frontier, seed_hashes = None, []
+    if start == 0:
+        seed_frontier, seed_hashes = _seed_frontier(spark, fixture_paths, robots_bodies)
+    url_expansions = None
+    if "url_expansions" in fixture_paths:
+        # close shortener→shortener chains ONCE on the dim table so the
+        # per-round broadcast join resolves any chain in one hop
+        url_expansions = close_mapping(
+            spark.read.parquet(fixture_paths["url_expansions"])
+        )
+    redirects = None
+    if "redirects" in fixture_paths:
+        # (url, final_url[, status]) 3xx hop table: keep redirect
+        # statuses only, canonicalize both endpoints, close chains once
+        # (bounded, cycle-safe — close_mapping) so fetch-time resolution
+        # is a single broadcast hop; oracle twin: seqcrawler.load_redirects
+        rd = spark.read.parquet(fixture_paths["redirects"])
+        if "status" in rd.columns:
+            rd = rd.filter((F.col("status") >= 300) & (F.col("status") < 400))
+        rd = rd.select(
+            canonicalize_udf(F.col("url")).alias("short_url"),
+            canonicalize_udf(F.col("final_url")).alias("long_url"),
+        )
+        redirects = close_mapping(rd).select(
+            F.col("short_url").alias("url"), F.col("long_url").alias("final_url")
+        )
+
+    with scope():  # the crawl-invariant frames, released when the crawl returns
+        robots = rules_by_host(robots)
+        if robots_bodies is not None:
+            # parsed from raw bodies: parse once, not once per round
+            robots, host_budget = persist(robots), persist(host_budget)
+        for rnd in range(start, cfg.rounds):
+            with scope():  # releases the round's cached frames after its commit
+                t0 = time.time()
+                # the previous round's state: its frontier, the seen set
+                # up to it and the full snapshots this round carries
+                # forward, found through one manifest read
+                prev: dict[str, DataFrame | None] = {}
+                if rnd == 0:
+                    frontier = seed_frontier
+                    seen = spark.createDataFrame([], SEEN_SCHEMA)
+                else:
+                    pm = store.manifest(rnd - 1)
+                    frontier = store.read(spark, rnd - 1, "frontier")
+                    seen = store.read_union(spark, rnd - 1, "seen")
+                    prev = {t: store.read(spark, rnd - 1, t)
+                            for t in ("host_sched", "host_used") if t in pm["tables"]}
+                    prev["filter_shards"] = _prev_filter(spark, store, rnd - 1, pm, filt_cfg)
+                host_ranks = None
+                if cfg.host_rank_weight > 0 and rnd > 0:
+                    try:
+                        pr_edges = store.read_union(spark, rnd - 1, "host_edges")
+                    except FileNotFoundError:
+                        pr_edges = None  # flag enabled mid-crawl on resume: no graph yet
+                    if pr_edges is not None:
+                        ranks = graph.pagerank(pr_edges, cfg.host_rank_iters)
+                        host_ranks = ranks.select(F.col("node").alias("host"), "rank_i")
+                compact_now = cfg.compact_every > 0 and (rnd + 1) % cfg.compact_every == 0
+                out = run_round(
+                    spark, corpus, frontier, seen, robots, host_budget, cfg, rnd, seed_hashes,
+                    url_expansions=url_expansions,
+                    host_ranks=host_ranks,
+                    redirects=redirects,
+                    **prev,
+                )
+                if compact_now:
+                    # a 1000-round crawl otherwise pays an unbounded multi-path
+                    # fan-in on read_union of every delta table each round.
+                    # <table>_full in this round's atomic commit + the manifest
+                    # pointer resolve the read in O(1).  The _full set must
+                    # include THIS round's delta (read_union starts deltas at
+                    # base+1).
+                    for tbl in DELTA_TABLES:
+                        if tbl not in out:
+                            continue
+                        try:
+                            prior = store.read_union(spark, rnd - 1, tbl) if rnd > 0 else None
+                        except FileNotFoundError:
+                            prior = None  # table joined the crawl this round
+                        out[f"{tbl}_full"] = (
+                            out[tbl] if prior is None else prior.unionByName(out[tbl])
+                        )
+                counts = store.write_round(rnd, out)
+                amend = {"wall_sec": round(time.time() - t0, 3)}
+                if filt_cfg is not None:
+                    amend["bloom_cfg"] = filt_cfg
+                store.amend_manifest(rnd, amend)
+                if compact_now:
+                    # only the latest snapshot is ever read, so the state dir
+                    # holds O(compact_every) of each on a 1000-round crawl
+                    for tbl in SNAPSHOT_TABLES:
+                        if tbl in counts:
+                            store.prune_table(tbl, rnd)
+    return store
+
+
+def _seed_frontier(spark: SparkSession, fixture_paths: dict[str, str],
+                   robots_bodies: DataFrame | None) -> tuple[DataFrame, list[int]]:
+    """The round-0 frontier and the url hashes round 0 marks seen: the
+    canonical seeds (score 0.0) and, with a ``sitemaps`` fixture, the
+    sitemap-discovered urls."""
     with open(fixture_paths["seeds"]) as f:
         seeds = [spec.canon(u) for u in json.load(f)]
     sitemap_entries: list[tuple[str, float]] = []
@@ -578,110 +720,15 @@ def run_crawl(
             if _agg.get(u, -1.0) < r["priority"]:
                 _agg[u] = r["priority"]
         sitemap_entries = sorted(_agg.items())
-    seed_hashes = [spec.xxh64(u) for u in seeds] + [
-        spec.xxh64(u) for u, _pr in sitemap_entries
-    ]
-    url_expansions = None
-    if "url_expansions" in fixture_paths:
-        # close shortener→shortener chains ONCE on the dim table so the
-        # per-round broadcast join resolves any chain in one hop
-        url_expansions = close_mapping(
-            spark.read.parquet(fixture_paths["url_expansions"])
-        )
-    redirects = None
-    if "redirects" in fixture_paths:
-        # (url, final_url[, status]) 3xx hop table: keep redirect
-        # statuses only, canonicalize both endpoints, close chains once
-        # (bounded, cycle-safe — close_mapping) so fetch-time resolution
-        # is a single broadcast hop; oracle twin: seqcrawler.load_redirects
-        rd = spark.read.parquet(fixture_paths["redirects"])
-        if "status" in rd.columns:
-            rd = rd.filter((F.col("status") >= 300) & (F.col("status") < 400))
-        rd = rd.select(
-            canonicalize_udf(F.col("url")).alias("short_url"),
-            canonicalize_udf(F.col("final_url")).alias("long_url"),
-        )
-        redirects = close_mapping(rd).select(
-            F.col("short_url").alias("url"), F.col("long_url").alias("final_url")
-        )
-
-    last = store.latest_round() if resume else None
-    if last is None:
-        init: dict[str, float] = {u: 0.0 for u in seeds}
-        for u, pr in sitemap_entries:  # _better twin: higher score wins
-            if pr > init.get(u, -1.0):
-                init[u] = pr
-        frontier = spark.createDataFrame(
-            [(u, spec.xxh64(u), sc, 0, 0) for u, sc in sorted(init.items())],
-            FRONTIER_SCHEMA,
-        )
-        seen = spark.createDataFrame([], SEEN_SCHEMA)
-        start = 0
-    else:
-        frontier = store.read(spark, last, "frontier")
-        seen = store.read_union(spark, last, "seen")
-        start = last + 1
-
-    for rnd in range(start, cfg.rounds):
-        with scope():  # releases the round's cached frames after its commit
-            t0 = time.time()
-            # the previous round's full snapshots this round carries
-            # forward, found through one manifest read
-            prev: dict[str, DataFrame | None] = {}
-            if rnd > 0:
-                pm = store.manifest(rnd - 1)
-                prev = {t: store.read(spark, rnd - 1, t)
-                        for t in ("host_sched", "host_used") if t in pm["tables"]}
-                prev["filter_shards"] = _prev_filter(spark, store, rnd - 1, pm, filt_cfg)
-            host_ranks = None
-            if cfg.host_rank_weight > 0 and rnd > 0:
-                try:
-                    pr_edges = store.read_union(spark, rnd - 1, "host_edges")
-                except FileNotFoundError:
-                    pr_edges = None  # flag enabled mid-crawl on resume: no graph yet
-                if pr_edges is not None:
-                    ranks = graph.pagerank(pr_edges, cfg.host_rank_iters)
-                    host_ranks = ranks.select(F.col("node").alias("host"), "rank_i")
-            compact_now = cfg.compact_every > 0 and (rnd + 1) % cfg.compact_every == 0
-            out = run_round(
-                spark, corpus, frontier, seen, robots, host_budget, cfg, rnd, seed_hashes,
-                url_expansions=url_expansions,
-                host_ranks=host_ranks,
-                redirects=redirects,
-                **prev,
-            )
-            if compact_now:
-                # a 1000-round crawl otherwise pays an unbounded multi-path
-                # fan-in on read_union of every delta table each round.
-                # <table>_full in this round's atomic commit + the manifest
-                # pointer resolve the read in O(1).  The _full set must
-                # include THIS round's delta (read_union starts deltas at
-                # base+1).
-                for tbl in DELTA_TABLES:
-                    if tbl not in out:
-                        continue
-                    try:
-                        prior = store.read_union(spark, rnd - 1, tbl) if rnd > 0 else None
-                    except FileNotFoundError:
-                        prior = None  # table joined the crawl this round
-                    out[f"{tbl}_full"] = (
-                        out[tbl] if prior is None else prior.unionByName(out[tbl])
-                    )
-            counts = store.write_round(rnd, out)
-            amend = {"wall_sec": round(time.time() - t0, 3)}
-            if filt_cfg is not None:
-                amend["bloom_cfg"] = filt_cfg
-            store.amend_manifest(rnd, amend)
-            if compact_now:
-                # only the latest snapshot is ever read, so the state dir
-                # holds O(compact_every) of each on a 1000-round crawl
-                for tbl in SNAPSHOT_TABLES:
-                    if tbl in counts:
-                        store.prune_table(tbl, rnd)
-            # cut lineage: next round reads the committed snapshot
-            frontier = store.read(spark, rnd, "frontier")
-            seen = store.read_union(spark, rnd, "seen")
-    return store
+    init: dict[str, float] = {u: 0.0 for u in seeds}
+    for u, pr in sitemap_entries:  # _better twin: higher score wins
+        if pr > init.get(u, -1.0):
+            init[u] = pr
+    h = {u: spec.xxh64(u) for u in init}
+    frontier = spark.createDataFrame(
+        [(u, h[u], sc, 0, 0) for u, sc in sorted(init.items())], FRONTIER_SCHEMA
+    )
+    return frontier, [h[u] for u in seeds] + [h[u] for u, _pr in sitemap_entries]
 
 
 # --------------------------------------------------------------------------

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from storm_focused_crawler_spark import spec
+from storm_focused_crawler_spark.sources.session import column_tree
 
 # --------------------------------------------------------------------------
 # URL canonicalization — the one genuine Python UDF
@@ -203,14 +204,20 @@ def fetch_extract(corpus: DataFrame, keys: DataFrame) -> DataFrame:
     (hashpartitioning on url) does; the caller scores ``text_x``."""
     fetched = corpus.join(F.broadcast(keys), "url", "inner")
     w_asof = Window.partitionBy("url").orderBy(F.col("warc_ts").desc())
+    text_x, links_raw = column_tree(_html_extracts)
     return (
         fetched.withColumn("_rn", F.row_number().over(w_asof))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
-        .withColumn("text_x", extract_text_col(F.col("html")))
-        .withColumn("links_raw", extract_links_col(F.col("html")))
+        .withColumn("text_x", text_x)
+        .withColumn("links_raw", links_raw)
         .drop("html")
     )
+
+
+def _html_extracts() -> tuple[Column, Column]:
+    html = F.col("html")
+    return extract_text_col(html), extract_links_col(html)
 
 
 # --------------------------------------------------------------------------

@@ -25,13 +25,22 @@ already pruned to ≤ Σ budgets rows (a few rows per host), so at a
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from storm_focused_crawler_spark.functions.udfs import host_col, path_col
+from storm_focused_crawler_spark.sources.session import column_tree
 
 DEFAULT_BUDGET = 2  # hosts missing from host_budget (oracle twin: seqcrawler)
 _WGL_THRESHOLD = "spark.sql.optimizer.windowGroupLimitThreshold"
+
+
+def _rep_verdict() -> Column:
+    """The robots verdict over a row's url path: ``robots.rep_allowed``
+    on the host-grouped ``rules`` column (~1,000 py4j calls to build)."""
+    from storm_focused_crawler_spark.operators.robots import rep_allowed
+
+    return rep_allowed(path_col(F.col("url")), F.col("rules"))
 
 
 def eligible(
@@ -55,6 +64,8 @@ def eligible(
     longest-match, RFC 9309); legacy (host, disallow_prefix) tables are
     adapted to Disallow-only rules — identical verdicts when each host
     has one Disallow rule, which is what the old filter supported.
+    *robots* may already be host-grouped (``robots.rules_by_host``); the
+    verdict Column is built once per driver JVM (session.column_tree).
     """
     from storm_focused_crawler_spark.operators.robots import rep_filter
 
@@ -68,7 +79,7 @@ def eligible(
     else:
         e = frontier.join(seen.select("url_hash"), "url_hash", "left_anti")
     e = e.withColumn("host", host_col(F.col("url")))
-    return rep_filter(e, robots, path_col(F.col("url")))
+    return rep_filter(e, robots, allowed=column_tree(_rep_verdict))
 
 
 def _check_wgl_bound(df: DataFrame, max_budget: int) -> None:
@@ -126,8 +137,11 @@ def dequeue(
     """
     if max_budget is not None:
         _check_wgl_bound(elig, max_budget)  # before any job
-    # one scalar off a broadcast-sized dim table, computed at plan build
-    row = host_budget.agg(F.max("budget")).collect()[0][0]
+    # one scalar off a broadcast-sized dim table, computed at plan build:
+    # a top-1 runs one job, agg(max) a shuffle stage and a result stage
+    top = (host_budget.select("budget")
+           .orderBy(F.col("budget").desc_nulls_last()).limit(1).collect())
+    row = top[0][0] if top else None
     table_max = max(int(row or 0), DEFAULT_BUDGET)
     if max_budget is None:
         max_budget = table_max

@@ -221,7 +221,11 @@ def rules_by_host(rules: DataFrame) -> DataFrame:
     """(host, rules array<struct<prefix,allow>>) — one row per host.
 
     Input (host, prefix, allow); legacy single-Disallow tables
-    (host, disallow_prefix) are adapted to (prefix, allow=false)."""
+    (host, disallow_prefix) are adapted to (prefix, allow=false).  A
+    frame that already has ``rules`` (this function's output) passes
+    through, so a caller can group once and persist the result."""
+    if "rules" in rules.columns:
+        return rules
     if "disallow_prefix" in rules.columns and "prefix" not in rules.columns:
         rules = rules.select(
             "host",
@@ -331,12 +335,18 @@ def rep_allowed(path: Column, rules: Column) -> Column:
     return rules.isNull() | (best["al"] == 1)
 
 
-def rep_filter(urls: DataFrame, rules: DataFrame, path: Column,
-               host_col: str = "host") -> DataFrame:
-    """Keep the allowed rows of *urls*; adds nothing to the schema."""
+def rep_filter(urls: DataFrame, rules: DataFrame, path: Column | None = None,
+               host_col: str = "host", allowed: Column | None = None) -> DataFrame:
+    """Keep the allowed rows of *urls*; adds nothing to the schema.
+
+    The verdict is ``rep_allowed(path, F.col("rules"))``; a caller that
+    filters many frames passes it prebuilt as *allowed* instead of
+    *path*."""
     grouped = rules_by_host(rules)
+    if allowed is None:
+        allowed = rep_allowed(path, F.col("rules"))
     joined = urls.join(F.broadcast(grouped), host_col, "left")
-    return joined.filter(rep_allowed(path, F.col("rules"))).drop("rules")
+    return joined.filter(allowed).drop("rules")
 
 
 def extract_sitemaps(df: DataFrame, host_col: str = "host",

@@ -13,10 +13,13 @@ and a driver heap sized to the machine (``SPARK_DRIVER_MEM`` overrides).
 from __future__ import annotations
 
 import contextlib
+import functools
 import os
 import threading
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Hashable, Iterator
+from typing import Any
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
 _scopes = threading.local()  # foreachBatch runs on the query's own thread
@@ -99,3 +102,19 @@ def checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
     out = df.localCheckpoint(eager=eager)
     rdd = out._jdf.queryExecution().analyzed().rdd()
     return _scoped(out, lambda: rdd.unpersist(False))
+
+
+def column_tree(build: Callable[..., Any], *args: Hashable) -> Any:
+    """``build(*args)`` — a Column or a tuple of Columns — built once per
+    driver JVM.  A Column is an immutable, unresolved expression tree
+    that belongs to no session, but building one from Python costs a
+    py4j round trip per node, so the trees every crawl round applies
+    (the robots verdict, the extraction, the page score) are built once
+    and shared.  The memo is keyed on everything the tree depends on:
+    *build*, *args* and the py4j gateway that holds the JVM objects."""
+    return _column_tree(build, SparkContext._gateway, args)
+
+
+@functools.lru_cache(maxsize=64)
+def _column_tree(build, _gateway, args):
+    return build(*args)

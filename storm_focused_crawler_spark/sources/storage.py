@@ -15,6 +15,12 @@ with its row count) or it doesn't (all its files are garbage to be
 ignored/overwritten).  ``latest_round()`` scans manifests only, so a
 killed run resumes from the last committed round with identical state
 — verified by tests/test_parity.py::test_resume_exact.
+
+The manifest's ``schemas`` key maps each table to its Spark schema
+(``StructType`` JSON).  ``read`` and ``read_union`` hand it to the
+reader, so reading committed state runs no schema-inference job; a
+manifest without the key (written before it existed) falls back to
+inference.
 """
 
 from __future__ import annotations
@@ -25,6 +31,7 @@ import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class ParquetSnapshotStore:
@@ -53,7 +60,8 @@ class ParquetSnapshotStore:
         Data files land under round=N/_tmp/<table>; the directory is
         renamed into place and manifest.json is written last via
         tmp-file + os.rename (atomic on POSIX).  Row counts come from
-        the writes themselves (parquet footers), no extra job.
+        the writes themselves (parquet footers), no extra job; each
+        table's schema goes into the manifest's ``schemas`` key.
         """
         rdir = self._round_dir(rnd)
         if os.path.exists(rdir):
@@ -61,6 +69,7 @@ class ParquetSnapshotStore:
         tmp = os.path.join(rdir, "_tmp")
         counts: dict[str, int] = {}
         write_sec: dict[str, float] = {}
+        schemas: dict[str, dict] = {}
 
         # The per-table writes are INDEPENDENT Spark jobs sharing
         # persisted upstream state (run_round persists deq/ex/links),
@@ -79,15 +88,16 @@ class ParquetSnapshotStore:
             path = os.path.join(tmp, name)
             t0 = time.time()
             df.write.mode("overwrite").parquet(path)
-            return name, round(time.time() - t0, 3), _parquet_rows(path)
+            return name, round(time.time() - t0, 3), _parquet_rows(path), df.schema.jsonValue()
 
         from concurrent.futures import ThreadPoolExecutor
 
         n_workers = min(3, max(1, len(tables)))
         with ThreadPoolExecutor(max_workers=n_workers) as pool:
-            for name, sec, rows in pool.map(_write_one, list(tables.items())):
+            for name, sec, rows, schema in pool.map(_write_one, list(tables.items())):
                 write_sec[name] = sec
                 counts[name] = rows
+                schemas[name] = schema
         for name in tables:
             os.rename(os.path.join(tmp, name), os.path.join(rdir, name))
         os.rmdir(tmp)
@@ -104,14 +114,18 @@ class ParquetSnapshotStore:
             if name.endswith("_full"):
                 compact[name[: -len("_full")]] = rnd
         self._write_manifest(rnd, {
-            "round": rnd, "tables": counts, "compact": compact,
+            "round": rnd, "tables": counts, "compact": compact, "schemas": schemas,
             "write_sec": write_sec, "committed_at": time.time()})
         return counts
 
-    def read(self, spark: SparkSession, rnd: int, table: str) -> DataFrame:
+    def _committed(self, rnd: int) -> dict:
         if not os.path.exists(self._manifest(rnd)):
             raise FileNotFoundError(f"round {rnd} not committed in {self.root}")
-        return spark.read.parquet(os.path.join(self._round_dir(rnd), table))
+        return self.manifest(rnd)
+
+    def read(self, spark: SparkSession, rnd: int, table: str) -> DataFrame:
+        schema = self._committed(rnd).get("schemas", {}).get(table)
+        return _scan(spark, [os.path.join(self._round_dir(rnd), table)], [schema])
 
     def read_union(self, spark: SparkSession, upto: int, table: str) -> DataFrame:
         """Union of *table* across rounds 0..upto — ONE multi-path scan.
@@ -126,30 +140,27 @@ class ParquetSnapshotStore:
         unions only the deltas after it — bounding file-listing cost
         for arbitrarily long crawls.
         """
-        if not os.path.exists(self._manifest(upto)):
-            raise FileNotFoundError(f"round {upto} not committed in {self.root}")
         # O(1): the manifest carries the latest compaction round
-        base = self.manifest(upto)["compact"].get(table)
-        paths = []
-        if base is not None:
-            paths.append(os.path.join(self._round_dir(base), f"{table}_full"))
-            start = base + 1
-        else:
-            start = 0
+        base = self._committed(upto)["compact"].get(table)
+        first = 0 if base is None else base + 1
+        manifests = {r: self.manifest(r) for r in range(first, upto + 1)}
         # only rounds whose manifest actually lists the table: a table can
         # join the crawl mid-run (e.g. postings when --text-index is
         # enabled on resume) and a path for a round that never wrote it
         # would fail the whole multi-path scan
-        paths += [
-            os.path.join(self._round_dir(r), table)
-            for r in range(start, upto + 1)
-            if table in self.manifest(r)["tables"]
-        ]
-        if not paths:
+        parts = [(r, table) for r, m in manifests.items() if table in m["tables"]]
+        if base is not None:
+            manifests[base] = self.manifest(base)
+            parts.insert(0, (base, f"{table}_full"))
+        if not parts:
             raise FileNotFoundError(
                 f"table {table!r} not committed in any round <= {upto} of {self.root}"
             )
-        return spark.read.parquet(*paths)
+        return _scan(
+            spark,
+            [os.path.join(self._round_dir(r), t) for r, t in parts],
+            [manifests[r].get("schemas", {}).get(t) for r, t in parts],
+        )
 
     def prune_table(self, table: str, keep_from: int) -> list[int]:
         """Delete *table*'s data files for committed rounds < keep_from
@@ -210,6 +221,15 @@ class ParquetSnapshotStore:
         m = self.manifest(rnd)
         m.update(extra)
         self._write_manifest(rnd, m)
+
+
+def _scan(spark: SparkSession, paths: list[str], schemas: list[dict | None]) -> DataFrame:
+    """One parquet scan of *paths*.  When every path's manifest recorded
+    the same schema, the reader takes it and no inference job runs."""
+    reader = spark.read
+    if schemas[0] is not None and all(s == schemas[0] for s in schemas):
+        reader = reader.schema(StructType.fromJson(schemas[0]))
+    return reader.parquet(*paths)
 
 
 def _parquet_rows(path: str) -> int:

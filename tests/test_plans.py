@@ -171,3 +171,120 @@ def test_no_html_through_round_shuffles(spark, fixture_paths, tmp_path):
     for ln in plan.splitlines():
         if "Exchange" in ln and "html" in ln:
             raise AssertionError(f"html bytes cross a shuffle: {ln}")
+
+
+def _ancestors(lines: list[str], i: int) -> list[str]:
+    """The operator lines above line *i* in an explain tree."""
+    out, depth = [], _indent(lines[i])
+    for ln in reversed(lines[:i]):
+        if _indent(ln) < depth:
+            out.append(ln)
+            depth = _indent(ln)
+    return out
+
+
+def test_round_frontier_not_shuffled_by_url_hash(spark, fixture_paths, tmp_path):
+    """Carrying the frontier forward removes this round's dequeued urls
+    with an anti-join against the ≤ capacity emitted hashes: that side
+    broadcasts, so the frontier scan reaches the next-frontier
+    aggregation without an Exchange on url_hash.  The size estimate of
+    the persisted dequeue is kept out of the decision by turning the
+    broadcast threshold off, as at crawl scale."""
+    from storm_focused_crawler_spark import driver as drv
+    from storm_focused_crawler_spark.sources.session import scope
+
+    cfg = drv.CrawlConfig(rounds=1, capacity=64, keywords=("data",))
+    store = drv.run_crawl(spark, fixture_paths, cfg, str(tmp_path / "wd"))
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        with scope():
+            out = drv.run_round(
+                spark, spark.read.parquet(fixture_paths["pages"]),
+                store.read(spark, 0, "frontier"), store.read_union(spark, 0, "seen"),
+                spark.read.parquet(fixture_paths["robots"]),
+                spark.read.parquet(fixture_paths["host_budget"]), cfg, 1, [],
+            )
+            lines = _plan(out["frontier"], "simple").splitlines()
+    finally:
+        spark.conf.set(key, old)
+    # the carried frontier's scan is the one that reads discovered_round;
+    # the dequeue's own scan of the frontier is pruned to four columns
+    scans = [i for i, ln in enumerate(lines) if "FileScan" in ln and "discovered_round" in ln]
+    assert scans, "\n".join(lines)
+    for i in scans:
+        above = _ancestors(lines, i)
+        assert not [a for a in above if "Exchange hashpartitioning(url_hash" in a], above
+
+
+def test_store_reads_run_no_job(spark, tmp_path):
+    """write_round records each table's schema in the manifest, so
+    read / read_union of committed state run no schema-inference job
+    and give the schema inference would; a manifest without the
+    ``schemas`` key still reads, by inference."""
+    import json
+
+    from storm_focused_crawler_spark.sources.storage import ParquetSnapshotStore
+
+    store = ParquetSnapshotStore(str(tmp_path / "state"))
+    for rnd in (0, 1):
+        store.write_round(rnd, {
+            "frontier": spark.range(3).select(
+                F.concat(F.lit("https://h.ex/"), F.col("id").cast("string")).alias("url"),
+                F.xxhash64("id").alias("url_hash"), F.lit(rnd).alias("discovered_round")),
+            "seen": spark.range(rnd * 5, rnd * 5 + 5).select(F.col("id").alias("url_hash")),
+        })
+    assert set(store.manifest(1)["schemas"]) == {"frontier", "seen"}
+    sc = spark.sparkContext
+    sc.setJobGroup("store-read", "must run no job")
+    try:
+        frontier = store.read(spark, 1, "frontier")
+        seen = store.read_union(spark, 1, "seen")
+        got = (frontier.schema, seen.schema)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("store-read") == []
+    root = str(tmp_path / "state")
+    assert got == (spark.read.parquet(f"{root}/round=1/frontier").schema,
+                   spark.read.parquet(f"{root}/round=1/seen").schema)
+    assert seen.count() == 10
+
+    # a manifest written before the schemas key existed
+    m = store.manifest(0)
+    del m["schemas"]
+    with open(f"{root}/round=0/manifest.json", "w") as f:
+        json.dump(m, f)
+    assert store.read(spark, 0, "frontier").schema == got[0]
+    assert sorted(r[0] for r in store.read_union(spark, 1, "seen").collect()) == list(range(10))
+
+
+def test_resume_from_manifests_without_schemas(spark, fixture_paths, tmp_path):
+    """A crawl committed by a store that wrote no ``schemas`` key
+    resumes to the same orderings and seen set as an uninterrupted
+    crawl."""
+    import json
+
+    from storm_focused_crawler_spark import driver as drv
+
+    kw = tuple(gen_pages.topic_keywords())
+    full = drv.run_crawl(spark, fixture_paths,
+                         drv.CrawlConfig(rounds=3, capacity=32, keywords=kw),
+                         str(tmp_path / "full"))
+    wd = str(tmp_path / "resumed")
+    first = drv.run_crawl(spark, fixture_paths,
+                          drv.CrawlConfig(rounds=1, capacity=32, keywords=kw), wd)
+    m = first.manifest(0)
+    del m["schemas"]
+    with open(f"{first.root}/round=0/manifest.json", "w") as f:
+        json.dump(m, f)
+    resumed = drv.run_crawl(spark, fixture_paths,
+                            drv.CrawlConfig(rounds=3, capacity=32, keywords=kw),
+                            wd, resume=True)
+    for r in range(3):
+        a = sorted(map(tuple, full.read(spark, r, "ordering").collect()))
+        b = sorted(map(tuple, resumed.read(spark, r, "ordering").collect()))
+        assert a == b, f"round {r} diverged across resume"
+    sa = {x["url_hash"] for x in full.read_union(spark, 2, "seen").collect()}
+    sb = {x["url_hash"] for x in resumed.read_union(spark, 2, "seen").collect()}
+    assert sa == sb

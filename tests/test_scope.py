@@ -92,16 +92,41 @@ def test_scope_stack_is_per_thread(spark):
     _assert_released(spark, base)
 
 
-@pytest.mark.parametrize("extra", [{}, {"host_rank_weight": 0.25}], ids=["default", "host_rank"])
-def test_crawl_leaves_no_materialized_state(spark, fixture_paths, tmp_path, extra):
+def _raw_robots(fixture_paths, tmp_path) -> dict[str, str]:
+    """The fixture with its robots rules rewritten as raw robots.txt
+    bodies that also declare a Crawl-delay."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    legacy = pq.read_table(fixture_paths["robots"])
+    bodies = [f"User-agent: *\nDisallow: {p}\nCrawl-delay: 25\n"
+              for p in legacy.column("disallow_prefix").to_pylist()]
+    path = str(tmp_path / "robots_raw.parquet")
+    pq.write_table(pa.table({"host": legacy.column("host"),
+                             "content": pa.array(bodies, pa.string())}), path)
+    return dict(fixture_paths, robots=path)
+
+
+@pytest.mark.parametrize(
+    "extra,raw_robots",
+    [({}, False), ({"host_rank_weight": 0.25}, False), ({}, True)],
+    ids=["default", "host_rank", "raw_robots"],
+)
+def test_crawl_leaves_no_materialized_state(spark, fixture_paths, tmp_path, extra,
+                                            raw_robots):
     """A 3-round run_crawl returns the session to its pre-crawl
     persistent-RDD count and cache-manager state (each round's
-    deq/ex/links/frontier caches and, with the host-rank blend, the
-    pagerank checkpoints)."""
+    deq/ex/links/frontier caches; with the host-rank blend, the
+    pagerank checkpoints; with raw robots bodies, the parsed rules and
+    the crawl-delay-merged host_budget persisted for the whole crawl)."""
+    paths = _raw_robots(fixture_paths, tmp_path) if raw_robots else fixture_paths
     base = _baseline(spark)
     cfg = drv.CrawlConfig(rounds=3, keywords=tuple(gen_pages.topic_keywords()), **extra)
-    store = drv.run_crawl(spark, fixture_paths, cfg, str(tmp_path / "crawl"))
+    store = drv.run_crawl(spark, paths, cfg, str(tmp_path / "crawl"))
     assert store.latest_round() == 2
+    # the crawl-delay merge took effect: only a host_budget with
+    # min_interval_ms commits the host_sched politeness clock
+    assert ("host_sched" in store.manifest(2)["tables"]) == raw_robots
     _assert_released(spark, base)
 
 
