@@ -88,7 +88,7 @@ def write_plans(work: str) -> None:
     corpus = spark.read.parquet(prepare_corpus(spark, paths["pages"], work, cfg.url_buckets))
     out = run_round(
         spark, corpus, frontier, empty_seen,
-        robots, budgets, cfg, 0, [spec.xxh64(u) for u in seeds],
+        robots, budgets, cfg, 0,
         host_ranks=ranks,
     )
 

@@ -24,9 +24,11 @@ Scale notes (the 100 TB story, graded against BASELINE.md):
     (operators/frontier.py) keeps one hot host from skewing a task;
   * the seen-set probe is an exact anti-join on url_hash (with an
     optional Bloom or cuckoo pre-filter, ``CrawlConfig.seen_filter``,
-    probed broadcast or shard-routed by operators/seen_filter.py) — the
-    frontier and seen tables are both hash-distributed on url_hash so
-    the anti-join co-partitions.
+    probed broadcast or shard-routed by operators/seen_filter.py).
+    Hash partitioning does not survive the parquet commit, so the
+    frontier and seen scans are both shuffled by url_hash for it (AQE
+    may broadcast seen instead while it is small); with a seen filter,
+    only the filter-positive frontier rows enter that join.
 """
 
 from __future__ import annotations
@@ -224,7 +226,6 @@ def run_round(
     host_budget: DataFrame,
     cfg: CrawlConfig,
     rnd: int,
-    seed_hashes: list[int],
     filter_shards: DataFrame | None = None,
     url_expansions: DataFrame | None = None,
     host_ranks: DataFrame | None = None,
@@ -235,9 +236,10 @@ def run_round(
     """Pure transformation: the previous round's state in, the complete
     next state out — every table round *rnd* commits, in one dict.
 
-    In: *frontier*, the full *seen* set and the previous round's full
-    snapshots *filter_shards* (built under cfg's seen filter),
-    *host_sched* and *host_used*, each None when not committed.  Out:
+    In: *frontier* (round 0 also marks it seen), the full *seen* set
+    and the previous round's full snapshots *filter_shards* (built
+    under cfg's seen filter), *host_sched* and *host_used*, each None
+    when not committed.  Out:
     ``ordering``, ``results``, ``frontier``, the ``seen`` delta,
     ``metrics``; the full snapshots ``host_sched`` (host_budget has
     delays), ``host_used`` (a quota) and ``bloom`` (a seen filter); the
@@ -398,9 +400,9 @@ def run_round(
             fetch_keys.select(F.xxhash64("url").alias("url_hash"))
         ).distinct()
     if rnd == 0:
-        seeds_df = spark.createDataFrame([(h,) for h in seed_hashes], SEEN_SCHEMA)
-        # delta is tiny (≤ capacity + |seeds| rows) — distinct is cheap here
-        seen_delta = seen_delta.unionByName(seeds_df).distinct()
+        # round 0 marks its input frontier (seeds + sitemap urls) seen;
+        # the delta is ≤ capacity + |seeds| rows, so distinct is cheap
+        seen_delta = seen_delta.unionByName(frontier.select("url_hash")).distinct()
     seen_next = seen.select("url_hash").unionByName(seen_delta)
 
     enqueueable = links
@@ -583,9 +585,9 @@ def run_crawl(
             .withColumn("min_interval_ms", F.when(eff > 0, eff).cast("int"))
             .drop("_robots_delay_ms")
         )
-    seed_frontier, seed_hashes = None, []
+    seed_frontier = None
     if start == 0:
-        seed_frontier, seed_hashes = _seed_frontier(spark, fixture_paths, robots_bodies)
+        seed_frontier = _seed_frontier(spark, fixture_paths, robots_bodies)
     url_expansions = None
     if "url_expansions" in fixture_paths:
         # close shortener→shortener chains ONCE on the dim table so the
@@ -643,7 +645,7 @@ def run_crawl(
                         host_ranks = ranks.select(F.col("node").alias("host"), "rank_i")
                 compact_now = cfg.compact_every > 0 and (rnd + 1) % cfg.compact_every == 0
                 out = run_round(
-                    spark, corpus, frontier, seen, robots, host_budget, cfg, rnd, seed_hashes,
+                    spark, corpus, frontier, seen, robots, host_budget, cfg, rnd,
                     url_expansions=url_expansions,
                     host_ranks=host_ranks,
                     redirects=redirects,
@@ -681,8 +683,8 @@ def run_crawl(
 
 
 def _seed_frontier(spark: SparkSession, fixture_paths: dict[str, str],
-                   robots_bodies: DataFrame | None) -> tuple[DataFrame, list[int]]:
-    """The round-0 frontier and the url hashes round 0 marks seen: the
+                   robots_bodies: DataFrame | None) -> DataFrame:
+    """The round-0 frontier, which round 0 also marks seen: the
     canonical seeds (score 0.0) and, with a ``sitemaps`` fixture, the
     sitemap-discovered urls."""
     with open(fixture_paths["seeds"]) as f:
@@ -724,11 +726,9 @@ def _seed_frontier(spark: SparkSession, fixture_paths: dict[str, str],
     for u, pr in sitemap_entries:  # _better twin: higher score wins
         if pr > init.get(u, -1.0):
             init[u] = pr
-    h = {u: spec.xxh64(u) for u in init}
-    frontier = spark.createDataFrame(
-        [(u, h[u], sc, 0, 0) for u, sc in sorted(init.items())], FRONTIER_SCHEMA
+    return spark.createDataFrame(
+        [(u, spec.xxh64(u), sc, 0, 0) for u, sc in sorted(init.items())], FRONTIER_SCHEMA
     )
-    return frontier, [h[u] for u in seeds] + [h[u] for u, _pr in sitemap_entries]
 
 
 # --------------------------------------------------------------------------

@@ -18,8 +18,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-PLANES_SEED = 42
-
 
 def cosine_col(a, b):
     """Exact cosine in doubles, element-order summation (oracle-stable)."""

@@ -24,6 +24,7 @@ from storm_focused_crawler_spark.functions.udfs import (
 )
 from storm_focused_crawler_spark.operators import bloom as B
 from storm_focused_crawler_spark.plans.queries import _t, _urls, op
+from storm_focused_crawler_spark.sources.session import tempdir
 
 
 def _pages(spark, sf_dir):
@@ -177,9 +178,7 @@ def agg_round_metrics(spark, sf_dir):
 
 @op("sink_results", None)
 def sink_results(spark, sf_dir):
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="sfc_sink_") + "/results"
+    out = tempdir("sfc_sink_") + "/results"
     df = _urls(spark, sf_dir).select("url", "score")
     df.write.mode("overwrite").parquet(out)
     return spark.read.parquet(out)
@@ -187,11 +186,9 @@ def sink_results(spark, sf_dir):
 
 @op("sink_checkpoint", None)
 def sink_checkpoint(spark, sf_dir):
-    import tempfile
-
     from storm_focused_crawler_spark.sources.storage import ParquetSnapshotStore
 
-    store = ParquetSnapshotStore(tempfile.mkdtemp(prefix="sfc_ckpt_"))
+    store = ParquetSnapshotStore(tempdir("sfc_ckpt_"))
     df = _urls(spark, sf_dir).select("url", "score")
     counts = store.write_round(0, {"frontier": df})
     assert store.latest_round() == 0

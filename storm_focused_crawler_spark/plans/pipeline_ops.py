@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from storm_focused_crawler_spark.functions.udfs import tokens_col
+from storm_focused_crawler_spark.functions.udfs import rebalance_small_scan, tokens_col
 from storm_focused_crawler_spark.operators import curation as CU
 from storm_focused_crawler_spark.operators import dedup as D
 from storm_focused_crawler_spark.operators import multimodal as MM
@@ -25,12 +25,12 @@ from storm_focused_crawler_spark.operators import similarity as S
 from storm_focused_crawler_spark.plans.queries import (
     REGISTRY,
     URLS_CTE,
-    _spread,
+    _drain,
     _t,
     _urls,
     op,
 )
-from storm_focused_crawler_spark.sources.session import persist
+from storm_focused_crawler_spark.sources.session import persist, tempdir
 
 # ======================= deduplication ======================================
 
@@ -79,7 +79,8 @@ NGRAM_PAIR_CTES = """sh AS (
 def dedup_ngram_jaccard(spark, sf_dir):
     # parallelism floor: the single-split fixture scan would run the
     # whole shingle pass in ONE task (guide §2.5); no-op at real scale
-    return D.jaccard_pairs(_spread(_t(spark, sf_dir, "documents")), "doc_id", "text", 0.3)
+    d = rebalance_small_scan(_t(spark, sf_dir, "documents"))
+    return D.jaccard_pairs(d, "doc_id", "text", 0.3)
 
 
 @op(
@@ -136,20 +137,21 @@ def dedup_substring_exact(spark, sf_dir):
     """ExactSubstr spans (Lee et al. 2021) at window=20 tokens over the
     documents corpus — see operators/dedup.exact_substring_spans for
     the slim-hash candidate + text-verify scale design."""
-    return D.exact_substring_spans(_spread(_t(spark, sf_dir, "documents")), window=20)
+    d = rebalance_small_scan(_t(spark, sf_dir, "documents"))
+    return D.exact_substring_spans(d, window=20)
 
 
 @op("dedup_minhash_lsh", None)  # xxhash64-based sig — pytest-locked, rows-only here
 def dedup_minhash_lsh(spark, sf_dir):
     return D.minhash_lsh_pairs(
-        _spread(_t(spark, sf_dir, "documents")), "doc_id", "text", threshold=0.3
+        rebalance_small_scan(_t(spark, sf_dir, "documents")), "doc_id", "text", threshold=0.3
     )
 
 
 @op("dedup_simhash", None)  # pytest-locked (hamming property), rows-only here
 def dedup_simhash(spark, sf_dir):
     return D.simhash_near_pairs(
-        _spread(_t(spark, sf_dir, "documents")), "doc_id", "text", max_hamming=12
+        rebalance_small_scan(_t(spark, sf_dir, "documents")), "doc_id", "text", max_hamming=12
     )
 
 
@@ -169,7 +171,7 @@ def dedup_embedding_cosine(spark, sf_dir):
     # fact (pytest locks pair-for-pair equality with the all-pairs plan
     # = the oracle above); production callers omit the geometry and get
     # the threshold-derived one — see operators/dedup.lsh_geometry
-    e = _spread(_t(spark, sf_dir, "embeddings")).select("vec_id", "embedding")
+    e = rebalance_small_scan(_t(spark, sf_dir, "embeddings")).select("vec_id", "embedding")
     return D.embedding_near_pairs(
         e, threshold=0.4, dim=64,
         n_bands=D.EMB_BANDS, planes_per_band=D.EMB_PLANES_PER_BAND,
@@ -194,7 +196,7 @@ def dedup_embedding_cosine(spark, sf_dir):
     SELECT query_id, neighbor_id, cos FROM rk WHERE r <= 5""",
 )
 def sim_knn_cosine(spark, sf_dir):
-    e = _spread(_t(spark, sf_dir, "embeddings"))
+    e = rebalance_small_scan(_t(spark, sf_dir, "embeddings"))
     q = e.filter(F.col("vec_id") % 100 == 0)
     return S.brute_force_knn(e, q, k=5)
 
@@ -279,7 +281,7 @@ engine-vs-oracle value equality, not label accuracy."""
 from storm_focused_crawler_spark.functions import topic_nb as TN
 
 REGISTRY["topic_classify_nb"] = (
-    # not _spread: measured slower with the rebalance exchange (one
+    # no rebalance_small_scan: measured slower with its exchange (one
     # broadcast join + agg; exchange cost > single-task compute here)
     lambda spark, sf_dir: TN.classify(_t(spark, sf_dir, "documents")),
     TN.classify_sql("documents"),
@@ -356,7 +358,7 @@ def text_index_postings(spark, sf_dir):
 
     from storm_focused_crawler_spark.operators import text_index as TI
 
-    # not _spread: measured slower with the rebalance exchange (one
+    # no rebalance_small_scan: measured slower with its exchange (one
     # explode + hash agg; the agg exchange already parallelizes it)
     p = TI.postings(_t(spark, sf_dir, "documents"), "doc_id", "text")
     return p.select(
@@ -372,13 +374,11 @@ def sink_text_index(spark, sf_dir):
     """Round-trip the index through the snapshot store, then serve a
     deterministic tf-idf lookup off the committed tables (rows-only;
     the postings math itself is oracled by text_index_postings)."""
-    import tempfile
-
     from storm_focused_crawler_spark.operators import text_index as TI
     from storm_focused_crawler_spark.sources.storage import ParquetSnapshotStore
 
     d = _t(spark, sf_dir, "documents")
-    store = ParquetSnapshotStore(tempfile.mkdtemp(prefix="sfc_tidx_"))
+    store = ParquetSnapshotStore(tempdir("sfc_tidx_"))
     store.write_round(0, {"postings": TI.postings(d, "doc_id", "text")})
     post = store.read(spark, 0, "postings")
     n_docs = d.count()
@@ -424,7 +424,7 @@ def rank_bm25(spark, sf_dir):
     from storm_focused_crawler_spark.operators import text_index as TI
 
     d0 = _t(spark, sf_dir, "documents")
-    d = _spread(d0)
+    d = rebalance_small_scan(d0)
     # ONE corpus tokenize pass: postings persist; dl and df both derive
     # from the persisted aggregate, never from the text again
     post = persist(TI.postings(d, "doc_id", "text"))
@@ -651,7 +651,7 @@ def decontam_ngram(spark, sf_dir):
     per-row gram array (a doc's grams live in its own input row), so no
     global distinct shuffle exists; the only corpus shuffle is the
     final per-doc count over contamination-sized hits."""
-    d = _spread(_t(spark, sf_dir, "documents"))
+    d = rebalance_small_scan(_t(spark, sf_dir, "documents"))
     return CU.decontam_hits(
         corpus=d.filter(F.col("doc_id") % 29 != 0),
         bench=d.filter(F.col("doc_id") % 29 == 0),
@@ -1107,7 +1107,6 @@ def source_warc_lite(spark, sf_dir):
     real archive arrives pre-written), then parse it back through the
     splittable lineSep text read.  Output is the parsed record table."""
     import os
-    import tempfile
 
     import pandas as pd
 
@@ -1124,7 +1123,7 @@ def source_warc_lite(spark, sf_dir):
         )
         for d, t in zip(pdf["doc_id"], pdf["text"])
     ]
-    path = os.path.join(tempfile.mkdtemp(prefix="sfc_warc_"), "part0.warc")
+    path = os.path.join(tempdir("sfc_warc_"), "part0.warc")
     WR.write_warc_lite(rows, path)
     return WR.read_warc_lite(spark, path)
 
@@ -1359,14 +1358,12 @@ def dedup_minhash_incremental(spark, sf_dir):
     batch = doc_id%4==0 arriving later.  Emits every verified pair
     touching the batch — pytest-locked equal to the full-corpus run
     restricted to batch-touching pairs (tests/test_pipeline_ops.py)."""
-    import tempfile
-
     from storm_focused_crawler_spark.sources.storage import ParquetSnapshotStore
 
-    d = _spread(_t(spark, sf_dir, "documents"))
+    d = rebalance_small_scan(_t(spark, sf_dir, "documents"))
     corpus = d.filter(F.col("doc_id") % 4 != 0)
     batch = d.filter(F.col("doc_id") % 4 == 0)
-    store = ParquetSnapshotStore(tempfile.mkdtemp(prefix="sfc_minc_"))
+    store = ParquetSnapshotStore(tempdir("sfc_minc_"))
     store.write_round(0, {"minhash_sigs": D.minhash_signature(corpus, "doc_id", "text")})
     sigs = store.read(spark, 0, "minhash_sigs")
     return D.incremental_minhash_pairs(batch, corpus, sigs, threshold=0.5)
@@ -1416,43 +1413,13 @@ def stateful_doc_dedup(spark, sf_dir):
     live.doc_dedup_stream): sharded applyInPandasWithState over a
     file-streamed document feed — each distinct text emitted exactly
     once across micro-batches (pytest: tests/test_streaming.py).
-    Rows-only oracle; memory-sink harness shim like stateful_seen_set."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
+    Rows-only oracle; drained through queries._drain."""
+    from storm_focused_crawler_spark.streaming.live import doc_dedup_stream
 
-    feed = tempfile.mkdtemp(prefix="docfeed_")
-    try:
-        d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-        ranked = d.orderBy("doc_id").limit(400)
-        ranked.limit(250).write.mode("overwrite").parquet(os.path.join(feed, "b0"))
-        ranked.write.mode("overwrite").parquet(os.path.join(feed, "b1"))
-
-        from storm_focused_crawler_spark.streaming.live import doc_dedup_stream
-
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed + "/*")
-        )
-        name = f"dd_{uuid.uuid4().hex[:8]}"
-        q = (
-            doc_dedup_stream(stream, n_shards=8)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        finished = q.awaitTermination(120)
-        assert finished, "stateful_doc_dedup stream did not drain within 120s"
-        rows = spark.sql(f"SELECT doc_id, text_hash, shard FROM {name} ORDER BY doc_id")
-        out = spark.createDataFrame(rows.collect(), rows.schema)
-        spark.catalog.dropTempView(name)
-        return out
-    finally:
-        shutil.rmtree(feed, ignore_errors=True)
+    ranked = _t(spark, sf_dir, "documents").select("doc_id", "text").orderBy("doc_id").limit(400)
+    return _drain(spark, [ranked.limit(250), ranked],
+                  lambda s: doc_dedup_stream(s, n_shards=8),
+                  "doc_id, text_hash, shard", "doc_id")
 
 
 # ======================= BPE merge learning (tokenizer training) ============
@@ -1469,7 +1436,7 @@ def bpe_learn_merges(spark, sf_dir):
     sequence is locked to the exact python twin."""
     from storm_focused_crawler_spark.functions import bpe as B
 
-    hist = B.word_histogram(_spread(_t(spark, sf_dir, "documents")))
+    hist = B.word_histogram(rebalance_small_scan(_t(spark, sf_dir, "documents")))
     merges = B.learn_merges(spark, hist, BPE_N_MERGES)
     return spark.createDataFrame(
         merges, "rank int, left string, right string, merged string, pair_count long"
@@ -1483,6 +1450,6 @@ def bpe_segment_docs(spark, sf_dir):
     (functions/bpe.segment_docs)."""
     from storm_focused_crawler_spark.functions import bpe as B
 
-    d = _spread(_t(spark, sf_dir, "documents"))
+    d = rebalance_small_scan(_t(spark, sf_dir, "documents"))
     merges = B.learn_merges(spark, B.word_histogram(d), BPE_N_MERGES)
     return B.segment_docs(d, merges)

@@ -21,8 +21,14 @@ Determinism rules applied throughout (SURVEY.md §7.4):
 
 from __future__ import annotations
 
+import os
+import uuid
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from storm_focused_crawler_spark.sources.session import scope, tempdir
 
 # --------------------------------------------------------------------------
 # shared derivations
@@ -57,16 +63,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if spark.conf.get("spark.sql.session.timeZone", None) != "UTC":
         spark.conf.set("spark.sql.session.timeZone", "UTC")
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Scale-adaptive parallelism floor for single-split fixture scans
-    — measured 4-8x of several dedup queries' wall time (see
-    functions/udfs.rebalance_small_scan, the canonical implementation
-    shared with the operators)."""
-    from storm_focused_crawler_spark.functions.udfs import rebalance_small_scan
-
-    return rebalance_small_scan(df)
 
 
 def _urls(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -749,52 +745,57 @@ def stream_session_host(spark, sf_dir):
     )
 
 
+def _drain(spark: SparkSession, batches: list[DataFrame],
+           stream_op: Callable[[DataFrame], DataFrame], cols: str, order: str) -> DataFrame:
+    """Run the stateful *stream_op* over *batches* fed as a file stream,
+    one micro-batch per batch in list order, to a memory sink, and
+    return its *cols* ordered by *order* as a driver-side frame.
+    The feed directory belongs to a scope opened here, so it is removed
+    once the rows are collected whether or not the caller has a scope
+    open."""
+    with scope():
+        feed = tempdir("sfc_feed_")
+        for i, b in enumerate(batches):
+            b.write.parquet(os.path.join(feed, f"b{i}"))
+        stream = (
+            spark.readStream.schema(batches[0].schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(feed + "/*")
+        )
+        name = f"drain_{uuid.uuid4().hex[:8]}"
+        q = (
+            stream_op(stream).writeStream.format("memory")
+            .queryName(name)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            if not q.awaitTermination(120):
+                raise TimeoutError(f"{name} did not drain within 120s")
+            out = spark.sql(f"SELECT {cols} FROM {name} ORDER BY {order}")
+            return spark.createDataFrame(out.collect(), out.schema)
+        finally:
+            q.stop()
+            spark.catalog.dropTempView(name)
+
+
 @op("stateful_seen_set", None)
 def stateful_seen_set(spark, sf_dir):
     """Live Structured-Streaming twin of the URL-seen set (SURVEY §2.2
     'stateful_seen_set'): sharded applyInPandasWithState dedup over a
     file-streamed URL feed derived from documents.  Rows-only oracle —
     pytest locks exactly-once emission (tests/test_streaming.py)."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
+    from storm_focused_crawler_spark.streaming.live import seen_filter_stream
 
-    feed = tempfile.mkdtemp(prefix="seenfeed_")
-    try:
-        # deterministic overlapping micro-batches: Spark's bare limit()
-        # picks partition-layout-dependent rows, so rank by a total
-        # order first (hash, url) — the locked row set cannot drift
-        u = _urls(spark, sf_dir).select("url")
-        ranked = u.orderBy(F.xxhash64("url"), F.col("url")).limit(500)
-        ranked.limit(300).write.mode("overwrite").parquet(os.path.join(feed, "b0"))
-        ranked.write.mode("overwrite").parquet(os.path.join(feed, "b1"))
-
-        from storm_focused_crawler_spark.streaming.live import seen_filter_stream
-
-        stream = (
-            spark.readStream.schema("url string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed + "/*")
-        )
-        name = f"seen_{uuid.uuid4().hex[:8]}"
-        q = (
-            seen_filter_stream(stream, n_shards=8)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        finished = q.awaitTermination(120)
-        assert finished, "stateful_seen_set stream did not drain within 120s"
-        # materialize off the memory sink before the feed dir is removed
-        rows = spark.sql(f"SELECT url, url_hash, shard FROM {name} ORDER BY url")
-        out = spark.createDataFrame(rows.collect(), rows.schema)
-        spark.catalog.dropTempView(name)
-        return out
-    finally:
-        shutil.rmtree(feed, ignore_errors=True)
+    # deterministic overlapping micro-batches: Spark's bare limit()
+    # picks partition-layout-dependent rows, so rank by a total
+    # order first (hash, url) — the locked row set cannot drift
+    u = _urls(spark, sf_dir).select("url")
+    ranked = u.orderBy(F.xxhash64("url"), F.col("url")).limit(500)
+    return _drain(spark, [ranked.limit(300), ranked],
+                  lambda s: seen_filter_stream(s, n_shards=8),
+                  "url, url_hash, shard", "url")
 
 
 @op("stateful_host_budget", None)
@@ -803,48 +804,16 @@ def stateful_host_budget(spark, sf_dir):
     politeness_limit_stream): token-bucket state per host across
     micro-batches.  Rows-only; budget-never-exceeded + determinism are
     pytest-locked (tests/test_streaming.py)."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
+    from storm_focused_crawler_spark.streaming.live import politeness_limit_stream
 
-    feed = tempfile.mkdtemp(prefix="budgetfeed_")
-    try:
-        u = _urls(spark, sf_dir).select("url")
-        w = Window.orderBy(F.xxhash64("url"), F.col("url"))
-        ranked = u.withColumn("rn", F.row_number().over(w))
-        # two DISJOINT deterministic micro-batches
-        ranked.filter(F.col("rn") <= 300).select("url").write.mode("overwrite").parquet(
-            os.path.join(feed, "b0")
-        )
-        ranked.filter((F.col("rn") > 300) & (F.col("rn") <= 500)).select(
-            "url"
-        ).write.mode("overwrite").parquet(os.path.join(feed, "b1"))
-
-        from storm_focused_crawler_spark.streaming.live import politeness_limit_stream
-
-        stream = (
-            spark.readStream.schema("url string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed + "/*")
-        )
-        name = f"budget_{uuid.uuid4().hex[:8]}"
-        q = (
-            politeness_limit_stream(stream, budget=3)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        finished = q.awaitTermination(120)
-        assert finished, "stateful_host_budget stream did not drain within 120s"
-        rows = spark.sql(f"SELECT url, host, n_used FROM {name} ORDER BY host, n_used")
-        out = spark.createDataFrame(rows.collect(), rows.schema)
-        spark.catalog.dropTempView(name)
-        return out
-    finally:
-        shutil.rmtree(feed, ignore_errors=True)
+    w = Window.orderBy(F.xxhash64("url"), F.col("url"))
+    rn = F.row_number().over(w)
+    ranked = _urls(spark, sf_dir).select("url", rn.alias("rn"))
+    # two DISJOINT deterministic micro-batches
+    return _drain(spark, [ranked.filter(F.col("rn") <= 300).select("url"),
+                          ranked.filter(F.col("rn").between(301, 500)).select("url")],
+                  lambda s: politeness_limit_stream(s, budget=3),
+                  "url, host, n_used", "host, n_used")
 
 
 @op(

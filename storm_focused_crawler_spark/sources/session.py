@@ -15,6 +15,8 @@ from __future__ import annotations
 import contextlib
 import functools
 import os
+import shutil
+import tempfile
 import threading
 from collections.abc import Callable, Hashable, Iterator
 from typing import Any
@@ -70,11 +72,11 @@ def get_spark(
 
 @contextlib.contextmanager
 def scope() -> Iterator[None]:
-    """Release every frame this thread materializes through
-    :func:`persist` / :func:`checkpoint` (the package's only
-    materialization path) while this scope is the innermost one.  The
-    code that runs the action opens it; outside any scope nothing is
-    released (the caller owns its actions)."""
+    """Release every resource this thread creates through :func:`persist`,
+    :func:`checkpoint` or :func:`tempdir` (the package's only paths to
+    cached blocks and temporary directories) while this scope is the
+    innermost one.  The code that runs the action opens it; outside any
+    scope nothing is released (the caller owns its actions)."""
     stack = vars(_scopes).setdefault("stack", [])
     stack.append([])
     try:
@@ -84,16 +86,16 @@ def scope() -> Iterator[None]:
             release()
 
 
-def _scoped(out: DataFrame, release: Callable[[], None]) -> DataFrame:
+def _on_close(release: Callable[[], None]) -> None:
     stack = vars(_scopes).get("stack")
     if stack:
         stack[-1].append(release)
-    return out
 
 
 def persist(df: DataFrame) -> DataFrame:
     """``df.persist()``, unpersisted when the innermost scope closes."""
-    return _scoped(df.persist(), df.unpersist)  # persist() returns df itself
+    _on_close(df.unpersist)
+    return df.persist()  # persist() returns df itself
 
 
 def checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
@@ -101,7 +103,17 @@ def checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
     its ``LogicalRDD`` (``unpersist()`` on the frame itself is a no-op)."""
     out = df.localCheckpoint(eager=eager)
     rdd = out._jdf.queryExecution().analyzed().rdd()
-    return _scoped(out, lambda: rdd.unpersist(False))
+    _on_close(lambda: rdd.unpersist(False))
+    return out
+
+
+def tempdir(prefix: str) -> str:
+    """``tempfile.mkdtemp(prefix=prefix)``, removed with everything in it
+    when the innermost scope closes — so a frame read from it must be
+    consumed inside that scope."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    _on_close(functools.partial(shutil.rmtree, path, ignore_errors=True))
+    return path
 
 
 def column_tree(build: Callable[..., Any], *args: Hashable) -> Any:

@@ -73,13 +73,16 @@ class ParquetSnapshotStore:
 
         # The per-table writes are INDEPENDENT Spark jobs sharing
         # persisted upstream state (run_round persists deq/ex/links),
-        # and each one is far too small to fill the executor on its
-        # own — running them from a small thread pool lets the next
-        # job's tasks back-fill the current job's straggler tail
-        # (optimization guide §2.6 "overlap independent jobs").  Cached
-        # partitions are computed under block-level locks, so shared
-        # inputs are still computed exactly once; commit order below is
-        # unchanged (rename + manifest happen after ALL writes finish).
+        # each too small to fill the executors on its own, so they run
+        # from a small thread pool: the next job's tasks back-fill the
+        # current job's straggler tail.  Tables that share a cache not
+        # yet built submit duplicate jobs that wait on its block locks
+        # (the cache is still computed once), and the overlap is worth
+        # more than that wait: writing the tables one at a time made
+        # the perfbench crawl round slower in 4 of 4 alternating pairs
+        # (local[4], 4-core host; step_p50_s 5.3-6.3 s pooled, 6.6-8.1 s
+        # sequential).  Commit order below is unchanged (rename +
+        # manifest happen after ALL writes finish).
         # write_sec stays the drift-attribution signal but is now a
         # CONCURRENT wall per table (overlaps may double-bill a shared
         # input's first computation).

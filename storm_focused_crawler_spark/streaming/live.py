@@ -6,9 +6,6 @@ URL-seen state).  Our engine is round-batched (SURVEY.md §2.2
 "streaming-equivalent operators"), but every streaming-shaped semantics
 has a live twin here for deployments that want a continuous crawl:
 
-  * pages_stream            — readStream over the page-corpus directory
-                              (file source; Kafka swaps in by config on
-                              a real cluster)
   * tumbling_counts_stream  — watermarked tumbling-window counts
                               (batch twin: queries.stream_tumbling_rounds)
   * session_counts_stream   — session windows per key, 30 min gap
@@ -45,16 +42,6 @@ from storm_focused_crawler_spark.sources.session import persist, scope
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
 
-PAGES_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("warc_ts", T.TimestampType()),
-        T.StructField("html", T.BinaryType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-    ]
-)
-
 EVENTS_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -65,15 +52,6 @@ EVENTS_SCHEMA = T.StructType(
         T.StructField("props", T.StringType()),
     ]
 )
-
-
-def pages_stream(spark: SparkSession, path: str) -> DataFrame:
-    """File-source stream of Common-Crawl-style pages (input_hint schema)."""
-    return (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(path)
-    )
 
 
 def events_stream(spark: SparkSession, path: str) -> DataFrame:

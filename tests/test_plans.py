@@ -165,7 +165,6 @@ def test_no_html_through_round_shuffles(spark, fixture_paths, tmp_path):
             spark.read.parquet(fixture_paths["host_budget"]),
             CrawlConfig(rounds=1, capacity=64, keywords=("data",)),
             0,
-            [spec.xxh64(u) for u in seeds],
         )
         plan = _plan(out["frontier"])
     for ln in plan.splitlines():
@@ -204,7 +203,7 @@ def test_round_frontier_not_shuffled_by_url_hash(spark, fixture_paths, tmp_path)
                 spark, spark.read.parquet(fixture_paths["pages"]),
                 store.read(spark, 0, "frontier"), store.read_union(spark, 0, "seen"),
                 spark.read.parquet(fixture_paths["robots"]),
-                spark.read.parquet(fixture_paths["host_budget"]), cfg, 1, [],
+                spark.read.parquet(fixture_paths["host_budget"]), cfg, 1,
             )
             lines = _plan(out["frontier"], "simple").splitlines()
     finally:

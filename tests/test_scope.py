@@ -1,12 +1,14 @@
-"""Materialization scope (sources/session.scope): every persist and
-localCheckpoint in the package is released by the scope that runs the
-action, so a long-lived session returns to its baseline of persistent
-RDDs and cache-manager entries after each crawl round and each query."""
+"""Resource scope (sources/session.scope): every persist,
+localCheckpoint and temporary directory in the package is released by
+the scope that runs the action, so a long-lived session returns to its
+baseline of persistent RDDs, cache-manager entries and temp dirs after
+each crawl round and each query."""
 
 from __future__ import annotations
 
 import os
 import re
+import tempfile
 import threading
 
 import pytest
@@ -39,14 +41,25 @@ def _new_rdds(spark, base) -> set[int]:
     return _state(spark)[0] - base[0]
 
 
+@pytest.fixture(autouse=True)
+def py_tempdir(tmp_path, monkeypatch):
+    """Python's temp dir, pointed at an empty directory of this test's
+    own, so :func:`_assert_released` sees every temp dir a run leaves."""
+    d = tmp_path / "pytmp"
+    d.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(d))
+
+
 def _assert_released(spark, base) -> None:
-    """No persistent RDD beyond *base* and the same cache entries.  RDD
-    ids are compared, not counts: RDDs that earlier tests materialized
-    outside a scope may be unpersisted meanwhile by Spark's
-    ContextCleaner once their frames are garbage collected."""
+    """No persistent RDD beyond *base*, the same cache entries and an
+    empty Python temp dir.  RDD ids are compared, not counts: RDDs that
+    earlier tests materialized outside a scope may be unpersisted
+    meanwhile by Spark's ContextCleaner once their frames are garbage
+    collected."""
     rdds, entries = _state(spark)
     assert rdds <= base[0], f"left behind: {sorted(rdds - base[0])}"
     assert entries == base[1]
+    assert os.listdir(tempfile.gettempdir()) == []
 
 
 @pytest.fixture(scope="module")
@@ -59,20 +72,27 @@ def test_scope_releases_innermost_handles_only(spark):
     base = _baseline(spark)
     with session.scope():
         outer = session.persist(df.filter("id > 3"))
+        outer_dir = session.tempdir("outer_")
         with session.scope():
             session.checkpoint(df.filter("id > 5"), eager=True)
             session.persist(df.filter("id > 7")).count()
+            inner_dir = session.tempdir("inner_")
+            with open(os.path.join(inner_dir, "f"), "w") as fh:
+                fh.write("x")
             assert len(_new_rdds(spark, base)) == 2
             assert _state(spark)[1] == base[1] + 2  # outer + inner persist
         assert not _new_rdds(spark, base)  # inner checkpoint + persist released
         assert _state(spark)[1] == base[1] + 1
         assert outer.count() == 46 and outer.storageLevel != StorageLevel.NONE
+        assert not os.path.exists(inner_dir) and os.path.isdir(outer_dir)
     _assert_released(spark, base)
 
     # outside any scope nothing is released: the caller owns the action
     kept = session.checkpoint(df, eager=True)
-    assert len(_new_rdds(spark, base)) == 1
+    kept_dir = session.tempdir("kept_")
+    assert len(_new_rdds(spark, base)) == 1 and os.path.isdir(kept_dir)
     kept._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    os.rmdir(kept_dir)
     _assert_released(spark, base)
 
 
@@ -131,6 +151,10 @@ def test_crawl_leaves_no_materialized_state(spark, fixture_paths, tmp_path, extr
 
 
 OPS = [
+    "sink_results",
+    "sink_checkpoint",
+    "sink_text_index",
+    "source_warc_lite",
     "dedup_minhash_lsh",
     "dedup_minhash_incremental",
     "dedup_cluster_keeper",
@@ -146,9 +170,10 @@ OPS = [
 @pytest.mark.parametrize("name", OPS)
 def test_op_releases_materialized_state(spark, sf_dir, name):
     """Each op run inside a scope (noop write + collect) leaves no
-    persistent RDD or cache entry behind, and a second run in a fresh
-    scope returns the same rows."""
-    from storm_focused_crawler_spark.plans import pipeline_ops  # noqa: F401 — registers ops
+    persistent RDD, cache entry or temp dir behind, and a second run in
+    a fresh scope returns the same rows."""
+    # importing the plan modules registers their ops
+    from storm_focused_crawler_spark.plans import crawl_ops, pipeline_ops  # noqa: F401
     from storm_focused_crawler_spark.plans.queries import REGISTRY
 
     fn, _ = REGISTRY[name]
@@ -163,11 +188,17 @@ def test_op_releases_materialized_state(spark, sf_dir, name):
     assert runs[0] == runs[1] and runs[0]
 
 
-def test_one_materialization_idiom():
-    """Only sources/session.py calls persist / cache / localCheckpoint;
-    everything else goes through session.persist / session.checkpoint
-    so a scope can release it."""
-    pat = re.compile(r"\.(persist|cache|localCheckpoint)\(")
+def test_drain_removes_its_feed_without_a_caller_scope(spark, sf_dir):
+    """The stateful stream ops drain their file feed inside a scope of
+    their own: run with no scope open, they still leave no temp dir."""
+    from storm_focused_crawler_spark.plans.queries import REGISTRY
+
+    base = _baseline(spark)
+    assert REGISTRY["stateful_seen_set"][0](spark, sf_dir).count() > 0
+    _assert_released(spark, base)
+
+
+def _calls_outside_session(pat: re.Pattern) -> list[str]:
     hits = []
     for root, _dirs, files in os.walk(PKG):
         for f in files:
@@ -176,4 +207,18 @@ def test_one_materialization_idiom():
                 continue
             with open(path) as fh:
                 hits += [f"{path}:{i}" for i, ln in enumerate(fh, 1) if pat.search(ln)]
-    assert hits == []
+    return hits
+
+
+def test_one_materialization_idiom():
+    """Only sources/session.py calls persist / cache / localCheckpoint;
+    everything else goes through session.persist / session.checkpoint
+    so a scope can release it."""
+    assert _calls_outside_session(re.compile(r"\.(persist|cache|localCheckpoint)\(")) == []
+
+
+def test_one_temp_dir_idiom():
+    """Only sources/session.py creates temporary files or directories;
+    everything else takes a scope-owned one from session.tempdir."""
+    pat = re.compile(r"\b(mkdtemp|mkstemp|TemporaryDirectory|NamedTemporaryFile)\(")
+    assert _calls_outside_session(pat) == []
