@@ -84,8 +84,8 @@ def write_plans(work: str) -> None:
     ranks = spark.createDataFrame(
         [("site-0.example", 10_000_000)], "host string, rank_i long"
     )
-    # the crawl's own corpus: the url_bucket layout run_crawl fetches from
-    corpus = spark.read.parquet(prepare_corpus(spark, paths["pages"], work, cfg.url_buckets))
+    # the crawl's own corpus: the pages table, read as run_crawl reads it
+    corpus = prepare_corpus(spark, paths["pages"], work)
     out = run_round(
         spark, corpus, frontier, empty_seen,
         robots, budgets, cfg, 0,
@@ -132,12 +132,11 @@ def write_plans(work: str) -> None:
     sections: list[tuple[str, str, object]] = [
         ("Fetch join + extraction (crawl hot path)",
          "The dequeued set (≤ capacity rows) broadcasts INTO the page corpus "
-         "— the corpus is never exchanged.  The corpus is the url_bucket "
-         "layout driver.prepare_corpus writes, and its scan carries no "
-         "PartitionFilters line: every round scans every bucket (ROADMAP "
-         "direction 1).  The as-of window's Exchange "
-         "(hashpartitioning on url) still carries `html` (ROADMAP direction 1); "
-         "`html` is dropped at extraction, so no exchange after it carries html.",
+         "— the corpus is never exchanged.  The corpus is the pages table "
+         "as given: every round scans all of it.  The as-of window's Exchange "
+         "(hashpartitioning on url) still carries `html` but not the corpus "
+         "`text` column; `html` is dropped at extraction, so no exchange after "
+         "it carries html.",
          out["results"]),
         ("Per-host top-k politeness dequeue, host-authority blended",
          "One host exchange: the rank filter's literal bound plans a Partial "

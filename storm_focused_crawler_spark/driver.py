@@ -10,16 +10,15 @@ from the committed snapshot (so a 1000-round crawl never accumulates a
 1000-round plan).
 
 Scale notes (the 100 TB story, graded against BASELINE.md):
-  * the page corpus is prepared ONCE into a layout partitioned by
-    ``url_bucket = pmod(xxhash64(url), B)`` — at cluster scale this is
-    the Iceberg ``bucket(url)`` layout.  The per-round fetch join
-    broadcasts the (tiny, ≤ capacity rows) dequeued set but keys on
-    ``url``, not ``url_bucket``, so nothing prunes buckets yet: each
-    round scans the whole corpus (ROADMAP direction 1);
+  * the crawl reads every input where it lies.  The per-round fetch
+    join broadcasts the (tiny, ≤ capacity rows) dequeued set into the
+    page corpus as given, so the corpus is never exchanged by the
+    join; a bucketed copy would buy nothing, since a round of C urls
+    hits nearly every bucket (ROADMAP direction 6);
   * the fat ``html`` column is extracted right after the fetch join,
     but the as-of window in udfs.fetch_extract shuffles the fetched
-    rows by url WITH their html (ROADMAP direction 1); nothing
-    downstream of extraction shuffles html bytes (SURVEY.md §7.4-4);
+    rows by url WITH their html; nothing downstream of extraction
+    shuffles html bytes (SURVEY.md §7.4-4);
   * politeness runs one per-host top-k whose map-side partial limit
     (operators/frontier.py) keeps one hot host from skewing a task;
   * the seen-set probe is an exact anti-join on url_hash (with an
@@ -71,8 +70,9 @@ class CrawlConfig:
     rounds: int = 3
     capacity: int = 64
     keywords: tuple[str, ...] = ()
-    n_salts: int = 8  # ignored: frontier.dequeue bounds host skew map-side
-    url_buckets: int = 16
+    # not fields: ignored, kept only for perfbench/workloads.py to read
+    n_salts = 8
+    url_buckets = 16
     # advisory seen-filter sidecar in front of the exact seen anti-join:
     # None (off), "bloom" (bitset OR-merge, operators/bloom.py) or
     # "cuckoo" (fingerprint table with deletion support,
@@ -177,39 +177,38 @@ def _page_score(scorer: str, keywords: tuple[str, ...], nb_target_topic: str) ->
 
 
 # --------------------------------------------------------------------------
-# corpus preparation (one-time; = building the bucketed Iceberg table)
+# crawl inputs, read where they lie
 # --------------------------------------------------------------------------
 
+def _read_input(spark: SparkSession, path: str, workdir: str) -> DataFrame:
+    """The parquet input at *path*, read with the schema recorded for
+    it in *workdir*.  Only the first read of a path in a workdir runs
+    Spark's schema-inference job; it records the result by tmp file +
+    rename, so a killed run leaves the old record or the new one.  An
+    input must keep its schema for the life of the workdir."""
+    record = os.path.join(workdir, "input_schemas.json")  # {path: schema JSON}
+    try:
+        with open(record) as f:
+            schemas = json.load(f)
+    except FileNotFoundError:
+        schemas = {}
+    if path in schemas:
+        return spark.read.schema(StructType.fromJson(schemas[path])).parquet(path)
+    df = spark.read.parquet(path)
+    schemas[path] = df.schema.jsonValue()
+    os.makedirs(workdir, exist_ok=True)
+    with open(record + ".tmp", "w") as f:
+        json.dump(schemas, f)
+    os.replace(record + ".tmp", record)
+    return df
 
-def prepare_corpus(spark: SparkSession, pages_path: str, out_dir: str, n_buckets: int) -> str:
-    """Bucket the raw pages corpus by url hash for prunable fetch joins.
 
-    The ``_PREPARED`` marker holds the layout's schema (StructType
-    JSON), so :func:`_read_corpus` runs no schema-inference job."""
-    out = os.path.join(out_dir, "corpus")
-    marker = os.path.join(out, "_PREPARED")
-    if os.path.exists(marker):
-        return out
-    pages = spark.read.parquet(pages_path)
-    (
-        pages.withColumn("url_bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)))
-        .repartition(n_buckets, "url_bucket")
-        .write.mode("overwrite")
-        .partitionBy("url_bucket")
-        .parquet(out)
-    )
-    with open(marker, "w") as f:
-        f.write(spark.read.parquet(out).schema.json())
-    return out
-
-
-def _read_corpus(spark: SparkSession, corpus_path: str) -> DataFrame:
-    with open(os.path.join(corpus_path, "_PREPARED")) as f:
-        marker = f.read()
-    reader = spark.read
-    if marker.startswith("{"):  # older markers hold "ok", not the schema
-        reader = reader.schema(StructType.fromJson(json.loads(marker)))
-    return reader.parquet(corpus_path)
+def prepare_corpus(spark: SparkSession, pages_path: str, out_dir: str,
+                   n_buckets: int | None = None) -> DataFrame:
+    """The page corpus a crawl in *out_dir* fetches from: *pages_path*
+    as given.  Writes no data; records the pages schema, so the
+    crawl's own read of it runs no job.  *n_buckets* is ignored."""
+    return _read_input(spark, pages_path, out_dir)
 
 
 # --------------------------------------------------------------------------
@@ -541,7 +540,8 @@ def run_crawl(
     Each round reads the previous round's committed state at its top
     (a resume takes the same path), runs :func:`run_round` and commits
     its tables in one ``write_round``; nothing is read after the last
-    commit.
+    commit.  Inputs are read where they lie, with the schemas recorded
+    in *workdir* (:func:`_read_input`): a resume infers none.
     """
     import time
 
@@ -550,10 +550,13 @@ def run_crawl(
     store = ParquetSnapshotStore(os.path.join(workdir, "state"))
     last = store.latest_round() if resume else None
     start = 0 if last is None else last + 1
-    corpus_path = prepare_corpus(spark, fixture_paths["pages"], workdir, cfg.url_buckets)
-    corpus = _read_corpus(spark, corpus_path)
-    robots = spark.read.parquet(fixture_paths["robots"])
-    host_budget = spark.read.parquet(fixture_paths["host_budget"])
+
+    def read(name: str) -> DataFrame:
+        return _read_input(spark, fixture_paths[name], workdir)
+
+    corpus = read("pages")
+    robots = read("robots")
+    host_budget = read("host_budget")
     robots_bodies = None  # raw bodies, kept for sitemap discovery
     if "content" in robots.columns:
         robots_bodies = robots
@@ -587,21 +590,19 @@ def run_crawl(
         )
     seed_frontier = None
     if start == 0:
-        seed_frontier = _seed_frontier(spark, fixture_paths, robots_bodies)
+        seed_frontier = _seed_frontier(spark, fixture_paths, workdir, robots_bodies)
     url_expansions = None
     if "url_expansions" in fixture_paths:
         # close shortener→shortener chains ONCE on the dim table so the
         # per-round broadcast join resolves any chain in one hop
-        url_expansions = close_mapping(
-            spark.read.parquet(fixture_paths["url_expansions"])
-        )
+        url_expansions = close_mapping(read("url_expansions"))
     redirects = None
     if "redirects" in fixture_paths:
         # (url, final_url[, status]) 3xx hop table: keep redirect
         # statuses only, canonicalize both endpoints, close chains once
         # (bounded, cycle-safe — close_mapping) so fetch-time resolution
         # is a single broadcast hop; oracle twin: seqcrawler.load_redirects
-        rd = spark.read.parquet(fixture_paths["redirects"])
+        rd = read("redirects")
         if "status" in rd.columns:
             rd = rd.filter((F.col("status") >= 300) & (F.col("status") < 400))
         rd = rd.select(
@@ -682,7 +683,7 @@ def run_crawl(
     return store
 
 
-def _seed_frontier(spark: SparkSession, fixture_paths: dict[str, str],
+def _seed_frontier(spark: SparkSession, fixture_paths: dict[str, str], workdir: str,
                    robots_bodies: DataFrame | None) -> DataFrame:
     """The round-0 frontier, which round 0 also marks seen: the
     canonical seeds (score 0.0) and, with a ``sitemaps`` fixture, the
@@ -702,7 +703,7 @@ def _seed_frontier(spark: SparkSession, fixture_paths: dict[str, str],
         # seqcrawler.load_sitemaps + crawl(sitemap_entries=...).
         from storm_focused_crawler_spark.operators import sitemap as SM
 
-        sm_raw = spark.read.parquet(fixture_paths["sitemaps"])
+        sm_raw = _read_input(spark, fixture_paths["sitemaps"], workdir)
         if "sitemap_url" in sm_raw.columns and robots_bodies is not None:
             # full discovery chain: crawl only the sitemaps DECLARED by
             # a robots body's `Sitemap:` directive (group-independent,

@@ -16,7 +16,6 @@ extract_links_col), RankerBolt (score_col).
 
 from __future__ import annotations
 
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
@@ -177,14 +176,6 @@ def extract_text_col(html: Column) -> Column:
     return F.when(raw.rlike(r"(?s)<article>.*?</article>"), article).otherwise(fb)
 
 
-@F.pandas_udf(T.StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    """Pandas-UDF twin (pluggable-extractor path, e.g. a real boilerpipe
-    port on a cluster with the lib installed); tests lock it to the
-    codegen twin."""
-    return html.map(lambda b: spec.extract_text(b) if b is not None else None)
-
-
 def extract_links_col(html: Column) -> Column:
     """Outlink hrefs in document order, http(s) only — array<string>."""
     arr = F.regexp_extract_all(F.decode(html, "UTF-8"), F.lit(r'<a href="([^"]*)"'), F.lit(1))
@@ -201,7 +192,9 @@ def fetch_extract(corpus: DataFrame, keys: DataFrame) -> DataFrame:
     capture (as-of ``warc_ts``), and add ``text_x`` / ``links_raw``.
     ``html`` is dropped here, so no shuffle downstream carries it
     (SURVEY §7.4-4) — but the as-of window's own exchange
-    (hashpartitioning on url) does; the caller scores ``text_x``."""
+    (hashpartitioning on url) does; the corpus ``text`` column does
+    not (nothing reads it: the caller scores ``text_x``)."""
+    corpus = corpus.select("url", "warc_ts", "html", "lang")
     fetched = corpus.join(F.broadcast(keys), "url", "inner")
     w_asof = Window.partitionBy("url").orderBy(F.col("warc_ts").desc())
     text_x, links_raw = column_tree(_html_extracts)

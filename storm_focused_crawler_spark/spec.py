@@ -256,7 +256,7 @@ def extract_text(html_bytes: bytes) -> str:
     """Boilerplate-stripping extraction: payload text, byte-identical.
 
     Pure function shared verbatim between corpus synthesis, the Spark
-    engine (JVM regexp twin + pandas-UDF twin, locked by tests) and the
+    engine (its JVM regexp twin, locked by tests) and the
     sequential oracle.
 
     Primary path: pages with an ``<article>`` element (the synthetic

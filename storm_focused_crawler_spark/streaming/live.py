@@ -371,8 +371,8 @@ def live_crawl_generation(
 
     Scale: state per group is |seen|/n_shards (seen filter) and one
     counter (politeness); the fetch join broadcasts ≤ Σ budgets rows
-    into the bucketed corpus — the same plan shape as the batch
-    driver's fetch; html never leaves the batch function.
+    into the page corpus — the same plan shape as the batch driver's
+    fetch; html never leaves the batch function.
     """
     import os
 

@@ -163,16 +163,20 @@ def test_extracted_text_matches_corpus(spark, fixture_paths, tmp_path):
     """extract_text(html) must equal the corpus text column, byte-identical."""
     from pyspark.sql import functions as F
 
-    from storm_focused_crawler_spark.functions.udfs import extract_text_col, extract_text_udf
+    from storm_focused_crawler_spark import spec
+    from storm_focused_crawler_spark.functions.udfs import extract_text_col
 
     pages = spark.read.parquet(fixture_paths["pages"])
     bad = (
         pages.withColumn("jvm", extract_text_col(F.col("html")))
-        .withColumn("py", extract_text_udf(F.col("html")))
-        .filter((F.col("jvm") != F.col("text")) | (F.col("py") != F.col("text")))
+        .filter(F.col("jvm") != F.col("text"))
         .count()
     )
     assert bad == 0
+    rows = pages.select("html", "text").collect()
+    assert rows
+    for r in rows:
+        assert spec.extract_text(r["html"]) == r["text"]
 
 
 def test_resume_exact(spark, fixture_paths, oracle_result, tmp_path):

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from storm_focused_crawler_spark.operators import dedup as D
 from storm_focused_crawler_spark.operators import multimodal as MM
 from storm_focused_crawler_spark.operators import similarity as S
+from storm_focused_crawler_spark.sources.session import scope
 
 
 @pytest.fixture(scope="module")
@@ -216,10 +217,11 @@ def test_incremental_minhash_equals_full_run_restricted(spark, sf_dir):
         for r in D.minhash_lsh_pairs(d, "doc_id", "text", 0.5).collect()
     }
     want = {(a, b, j) for a, b, j in full if a % 4 == 0 or b % 4 == 0}
-    got = {
-        (r["id_a"], r["id_b"], r["jaccard"])
-        for r in dedup_minhash_incremental(spark, sf_dir).collect()
-    }
+    with scope():  # the op reads its signatures back from a temp dir
+        got = {
+            (r["id_a"], r["id_b"], r["jaccard"])
+            for r in dedup_minhash_incremental(spark, sf_dir).collect()
+        }
     assert got == want
     assert want, "no batch-touching near-dup pair at this sf — vacuous"
     # both cross and within-batch pairs are exercised
@@ -235,10 +237,11 @@ def test_incremental_minhash_plan_broadcasts_batch_bands(spark, sf_dir):
         dedup_minhash_incremental,
     )
 
-    plan = (
-        dedup_minhash_incremental(spark, sf_dir)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    with scope():  # the op writes its signatures to a temp dir
+        plan = (
+            dedup_minhash_incremental(spark, sf_dir)
+            ._jdf.queryExecution().executedPlan().toString()
+        )
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

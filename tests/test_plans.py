@@ -9,6 +9,8 @@ broadcast of dimension tables, and rank→top-k pruning
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -135,10 +137,24 @@ def test_dequeue_rejects_budget_above_window_group_limit_threshold(spark, fixtur
         spark.conf.set(conf, old)
 
 
+def _exchanges(plan: str) -> list[tuple[list[str], str]]:
+    """(input column names, arguments) of every Exchange node in a
+    formatted plan; a node's columns are on the ``Input`` line under
+    its ``(n) Exchange`` header."""
+    out = []
+    for m in re.finditer(r"^\(\d+\) \w*Exchange\n(.*?)(?:\n\n|\Z)", plan, re.M | re.S):
+        inp = re.search(r"^Input \[\d+\]: \[(.*)\]$", m.group(1), re.M)
+        args = re.search(r"^Arguments: (.*)$", m.group(1), re.M)
+        cols = [c.split("#")[0] for c in inp.group(1).split(", ")] if inp else []
+        out.append((cols, args.group(1) if args else ""))
+    return out
+
+
 def test_no_html_through_round_shuffles(spark, fixture_paths, tmp_path):
-    """In the crawl round DAG, html may appear ONLY below the first
-    projection after the corpus scan — never in an Exchange's output
-    (SURVEY.md §7.4-4)."""
+    """In the crawl round DAG, html crosses exactly one Exchange: the
+    as-of window of udfs.fetch_extract (hashpartitioning on url, before
+    extraction), and the corpus ``text`` column, which nothing reads,
+    does not cross it (SURVEY.md §7.4-4)."""
     import json
 
     from storm_focused_crawler_spark import spec
@@ -166,10 +182,15 @@ def test_no_html_through_round_shuffles(spark, fixture_paths, tmp_path):
             CrawlConfig(rounds=1, capacity=64, keywords=("data",)),
             0,
         )
-        plan = _plan(out["frontier"])
-    for ln in plan.splitlines():
-        if "Exchange" in ln and "html" in ln:
-            raise AssertionError(f"html bytes cross a shuffle: {ln}")
+        plans = {t: _plan(out[t]) for t in ("frontier", "results")}
+    for t, plan in plans.items():
+        exchanges = _exchanges(plan)
+        assert exchanges, plan
+        with_html = [(cols, args) for cols, args in exchanges if "html" in cols]
+        assert len(with_html) == 1, f"{t}: html bytes cross {len(with_html)} shuffles: {with_html}"
+        cols, args = with_html[0]
+        assert args.startswith("hashpartitioning(url#") and "warc_ts" in cols, (t, cols, args)
+        assert "text" not in cols, f"{t}: corpus text crosses the as-of exchange: {cols}"
 
 
 def _ancestors(lines: list[str], i: int) -> list[str]:
@@ -256,6 +277,37 @@ def test_store_reads_run_no_job(spark, tmp_path):
         json.dump(m, f)
     assert store.read(spark, 0, "frontier").schema == got[0]
     assert sorted(r[0] for r in store.read_union(spark, 1, "seen").collect()) == list(range(10))
+
+
+def test_resumed_crawl_runs_no_job_before_its_first_round(spark, fixture_paths, tmp_path,
+                                                          monkeypatch):
+    """run_crawl reads its fixture inputs with the schemas recorded in
+    the workdir, so a resume reaches its first run_round without a
+    Spark job (no schema inference of robots or host_budget)."""
+    from storm_focused_crawler_spark import driver as drv
+
+    kw = tuple(gen_pages.topic_keywords())
+    wd = str(tmp_path / "wd")
+    drv.run_crawl(spark, fixture_paths, drv.CrawlConfig(rounds=1, capacity=32, keywords=kw), wd)
+    sc = spark.sparkContext
+    run_round, jobs = drv.run_round, []
+
+    def first_round_jobs(*a, **k):
+        if not jobs:
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs.append(list(sc.statusTracker().getJobIdsForGroup("resume-prelude")))
+        return run_round(*a, **k)
+
+    monkeypatch.setattr(drv, "run_round", first_round_jobs)
+    sc.setJobGroup("resume-prelude", "must run no job before the first round")
+    try:
+        store = drv.run_crawl(spark, fixture_paths,
+                              drv.CrawlConfig(rounds=2, capacity=32, keywords=kw), wd,
+                              resume=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == [[]]
+    assert store.latest_round() == 1
 
 
 def test_resume_from_manifests_without_schemas(spark, fixture_paths, tmp_path):

@@ -13,6 +13,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
+from storm_focused_crawler_spark.sources.session import scope
 
 REGISTRY = entrymod._registry()
 
@@ -96,10 +97,12 @@ def test_displaced_op_matches_duckdb(spark, sf_dir, ddb, name):
 def test_rows_only_operator_runs(spark, sf_dir, name):
     """Rows-only ops: run, stable schema, deterministic across two runs."""
     fn, _ = REGISTRY[name]
-    df1 = fn(spark, sf_dir)
-    rows1 = sorted(map(repr, df1.collect()))
-    df2 = fn(spark, sf_dir)
-    rows2 = sorted(map(repr, df2.collect()))
+    with scope():  # releases what an op persists or writes to a temp dir
+        df1 = fn(spark, sf_dir)
+        rows1 = sorted(map(repr, df1.collect()))
+    with scope():
+        df2 = fn(spark, sf_dir)
+        rows2 = sorted(map(repr, df2.collect()))
     assert df1.columns == df2.columns
     if name not in ("agg_round_metrics",):  # partition layout ties to session
         assert rows1 == rows2, f"{name}: nondeterministic output"

@@ -10,13 +10,15 @@ import pytest
 
 from storm_focused_crawler_spark.plans.pipeline_ops import source_warc_lite
 from storm_focused_crawler_spark.sources import warc as WR
+from storm_focused_crawler_spark.sources.session import scope
 
 
 def test_warc_roundtrip_byte_identity(spark, sf_dir):
     """Every document's text survives render→parse byte-identically,
     with Content-Length honored."""
     pdf = pd.read_parquet(f"{sf_dir}/documents.parquet")[["doc_id", "text"]]
-    got = {r["url"]: r for r in source_warc_lite(spark, sf_dir).collect()}
+    with scope():  # the op writes its archive to a temp dir
+        got = {r["url"]: r for r in source_warc_lite(spark, sf_dir).collect()}
     assert len(got) == len(pdf)
     for row in pdf.itertuples():
         url = f"https://h{row.doc_id % 40:03d}.example-warc/d{row.doc_id}"
