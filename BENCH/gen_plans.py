@@ -40,7 +40,7 @@ def main() -> None:
 
     work = tempfile.mkdtemp(prefix="gen_plans-")
     try:
-        # the round's persisted frames stay cached until every plan is explained
+        # the round's checkpoints and caches stay built until every plan is explained
         with scope():
             write_plans(work)
     finally:
@@ -62,6 +62,7 @@ def write_plans(work: str) -> None:
     spark = get_spark(app="gen_plans", master="local[8]", shuffle_partitions=8)
     paths = gen_pages.ensure(SF)
 
+    from storm_focused_crawler_spark import driver as drv
     from storm_focused_crawler_spark.driver import (
         FRONTIER_SCHEMA,
         SEEN_SCHEMA,
@@ -86,11 +87,25 @@ def write_plans(work: str) -> None:
     )
     # the crawl's own corpus: the pages table, read as run_crawl reads it
     corpus = prepare_corpus(spark, paths["pages"], work)
-    out = run_round(
-        spark, corpus, frontier, empty_seen,
-        robots, budgets, cfg, 0,
-        host_ranks=ranks,
-    )
+    # run_round builds the dequeued set and the fetched pages as
+    # checkpoints, which cut their lineage out of every table it
+    # returns: explain each frame before its checkpoint runs it
+    checkpoint, built = drv.checkpoint, []
+
+    def keep(df, eager=False):
+        built.append(tree_of(df))
+        return checkpoint(df, eager)
+
+    drv.checkpoint = keep
+    try:
+        run_round(
+            spark, corpus, frontier, empty_seen,
+            robots, budgets, cfg, 0,
+            host_ranks=ranks,
+        )
+    finally:
+        drv.checkpoint = checkpoint
+    deq, ex = built
 
     from storm_focused_crawler_spark.plans import crawl_ops  # noqa: F401
     from storm_focused_crawler_spark.plans import pipeline_ops  # noqa: F401
@@ -129,21 +144,26 @@ def write_plans(work: str) -> None:
         [("https://h.ex/a/b/c", "h.ex", "/a/b/c")], "url string, host string, path string"
     )
 
+    # (title, blurb, frame or its plan already explained)
     sections: list[tuple[str, str, object]] = [
         ("Fetch join + extraction (crawl hot path)",
-         "The dequeued set (≤ capacity rows) broadcasts INTO the page corpus "
-         "— the corpus is never exchanged.  The corpus is the pages table "
-         "as given: every round scans all of it.  The as-of window's Exchange "
-         "(hashpartitioning on url) still carries `html` but not the corpus "
-         "`text` column; `html` is dropped at extraction, so no exchange after "
-         "it carries html.",
-         out["results"]),
+         "The dequeued set (≤ capacity rows, here its checkpoint) broadcasts "
+         "INTO the page corpus — the corpus is never exchanged.  The corpus "
+         "is the pages table as given: every round scans all of it.  The "
+         "as-of window's Exchange (hashpartitioning on url) still carries "
+         "`html` but not the corpus `text` column; `html` is dropped at "
+         "extraction, so no exchange after it carries html.  run_round "
+         "checkpoints this frame eagerly, before the commit, so the tables "
+         "it feeds plan over the checkpoint, not over this tree.",
+         ex),
         ("Per-host top-k politeness dequeue, host-authority blended",
          "One host exchange: the rank filter's literal bound plans a Partial "
          "WindowGroupLimit below it (≤ max_budget rows per host per map task) "
          "and a Final one above it, BEFORE the window sort; the budget dim "
-         "and the §2.1-7 host-rank table both join broadcast.",
-         out["frontier"]),
+         "and the §2.1-7 host-rank table both join broadcast.  run_round "
+         "checkpoints the dequeued set eagerly, before the commit, so no "
+         "committed table re-plans this tree.",
+         deq),
         ("REP robots filter (longest-match + Allow)",
          "Rules group into ONE array per host (broadcast); the verdict is an "
          "order-independent fold — no row multiplication of the frontier, no "
@@ -285,7 +305,8 @@ def write_plans(work: str) -> None:
         "",
     ]
     for title, blurb, df in sections:
-        lines += [f"## {title}", "", blurb, "", "```", tree_of(df), "```", ""]
+        plan = df if isinstance(df, str) else tree_of(df)
+        lines += [f"## {title}", "", blurb, "", "```", plan, "```", ""]
 
     with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(lines))

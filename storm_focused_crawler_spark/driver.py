@@ -3,11 +3,12 @@
 The reference wires RedisSpout → URLExpanderBolt → WebPageFetcherBolt →
 ArticleExtractionBolt → RankerBolt → UpdaterBolt as a continuously
 running topology with Redis as mutable shared state ([R], SURVEY.md
-§3).  Here each crawl round is ONE lazy DataFrame DAG (SURVEY.md §3
-entry point 1) over immutable snapshot tables, committed atomically per
+§3).  Here each crawl round is ONE DataFrame DAG (SURVEY.md §3 entry
+point 1) over immutable snapshot tables, committed atomically per
 round, with lineage cut at every round boundary by reading state back
 from the committed snapshot (so a 1000-round crawl never accumulates a
-1000-round plan).
+1000-round plan).  Inside a round, the dequeued set and the fetched
+pages are built once, as eager local checkpoints, before the commit.
 
 Scale notes (the 100 TB story, graded against BASELINE.md):
   * the crawl reads every input where it lies.  The per-round fetch
@@ -52,7 +53,12 @@ from storm_focused_crawler_spark.functions.udfs import (
 from storm_focused_crawler_spark.operators import graph, seen_filter
 from storm_focused_crawler_spark.operators.frontier import dequeue, eligible
 from storm_focused_crawler_spark.operators.robots import rules_by_host
-from storm_focused_crawler_spark.sources.session import column_tree, persist, scope
+from storm_focused_crawler_spark.sources.session import (
+    checkpoint,
+    column_tree,
+    persist,
+    scope,
+)
 from storm_focused_crawler_spark.sources.storage import ParquetSnapshotStore
 
 FRONTIER_SCHEMA = "url string, url_hash long, score double, depth int, discovered_round int"
@@ -232,8 +238,16 @@ def run_round(
     host_used: DataFrame | None = None,
     redirects: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
-    """Pure transformation: the previous round's state in, the complete
-    next state out — every table round *rnd* commits, in one dict.
+    """The previous round's state in, the complete next state out —
+    every table round *rnd* commits, in one dict.
+
+    Two frames are built here, before the commit, as eager local
+    checkpoints: ``deq``, the dequeued set (≤ capacity rows), and
+    ``ex``, the fetched pages with their extraction and page score.
+    Every committed table reads one of them, so the commit plans over
+    their small checkpointed leaves and recomputes nothing upstream of
+    them.  The other tables stay lazy; ``links`` and the next frontier
+    are persisted and built by the commit's first writes.
 
     In: *frontier* (round 0 also marks it seen), the full *seen* set
     and the previous round's full snapshots *filter_shards* (built
@@ -248,8 +262,10 @@ def run_round(
     is the ``metrics`` table — rows per (stage, partition) for the
     dequeued set, the discovered links and the next frontier — plus
     the per-table row counts the commit writes into the round
-    manifest.  Its persisted frames are released by the caller's
-    ``session.scope()``.
+    manifest.  Its checkpointed and persisted frames are released by
+    the caller's ``session.scope()``; a lost executor fails the round
+    (local checkpoints are not recomputed), and the crawl resumes from
+    the last committed manifest.
 
     *robots* may already be host-grouped (``robots.rules_by_host``).
     """
@@ -302,12 +318,21 @@ def run_round(
     deq = dequeue(elig, host_budget, cfg.capacity,
                   round_ms=cfg.round_ms, host_carry=host_carry,
                   host_cap=cfg.max_pages_per_host, host_used=host_used)
-    deq = (
-        deq.select("url", "url_hash", "score", "depth", "seq", "host", "sched_ms")
-        .transform(persist)
+    # built here, before the commit: every committed table reads the
+    # dequeued set, and a checkpoint cuts the eligible -> dequeue
+    # lineage out of each table's plan
+    deq = checkpoint(
+        deq.select("url", "url_hash", "score", "depth", "seq", "host", "sched_ms"),
+        eager=True,
     )
 
-    ordering = deq.select(F.lit(rnd).alias("round"), "seq", "url").orderBy("seq")
+    # ≤ capacity rows: one partition sorted in place, no range-partition
+    # sampling job
+    ordering = (
+        deq.select(F.lit(rnd).alias("round"), "seq", "url")
+        .coalesce(1)
+        .sortWithinPartitions("seq")
+    )
 
     # --- fetch = broadcast-join the tiny dequeued set into the corpus ------
     fetch_keys = deq.select("url", "seq", "depth")
@@ -347,12 +372,14 @@ def run_round(
             .select(F.col("final_url").alias("url"), "seq", "depth")
             .transform(persist)
         )
-    ex = (
+    # the fetched pages, built here like deq: results, links, postings
+    # and (through links) the next frontier all read them
+    ex = checkpoint(
         fetch_extract(corpus, fetch_keys)
         .withColumn("page_score", column_tree(_page_score, cfg.scorer, tuple(cfg.keywords),
                                               cfg.nb_target_topic))
-        .withColumn("n_links", F.size("links_raw"))
-        .transform(persist)
+        .withColumn("n_links", F.size("links_raw")),
+        eager=True,
     )
 
     results = ex.select(
@@ -442,7 +469,8 @@ def run_round(
     )
 
     # --- per-partition lineage metrics (north rule) -------------------------
-    # all three inputs are persisted, so the union scans the cache only,
+    # all three inputs are materialized (deq checkpointed, links and
+    # frontier_next persisted), so the union scans the cache only,
     # and one aggregation (one exchange) counts rows per stage and partition
     def _part_ids(df: DataFrame, stage: str) -> DataFrame:
         return df.select(F.lit(stage).alias("stage"),

@@ -71,21 +71,23 @@ class ParquetSnapshotStore:
         write_sec: dict[str, float] = {}
         schemas: dict[str, dict] = {}
 
-        # The per-table writes are INDEPENDENT Spark jobs sharing
-        # persisted upstream state (run_round persists deq/ex/links),
-        # each too small to fill the executors on its own, so they run
-        # from a small thread pool: the next job's tasks back-fill the
-        # current job's straggler tail.  Tables that share a cache not
-        # yet built submit duplicate jobs that wait on its block locks
-        # (the cache is still computed once), and the overlap is worth
-        # more than that wait: writing the tables one at a time made
+        # The per-table writes are INDEPENDENT Spark jobs, each too
+        # small to fill the executors on its own, so they run from a
+        # small thread pool: the next job's tasks back-fill the current
+        # job's straggler tail.  run_round has already built the frames
+        # every table shares (the dequeued set and the fetched pages,
+        # as checkpoints), so the writes plan over those small leaves.
+        # Only run_round's persisted links and next frontier are built
+        # here, by whichever write reaches them first; another table
+        # reading one meanwhile waits on its block locks (the cache is
+        # still computed once).  Writing the tables one at a time made
         # the perfbench crawl round slower in 4 of 4 alternating pairs
         # (local[4], 4-core host; step_p50_s 5.3-6.3 s pooled, 6.6-8.1 s
         # sequential).  Commit order below is unchanged (rename +
         # manifest happen after ALL writes finish).
-        # write_sec stays the drift-attribution signal but is now a
-        # CONCURRENT wall per table (overlaps may double-bill a shared
-        # input's first computation).
+        # write_sec is a CONCURRENT wall per table: the first build of
+        # links or the next frontier is billed to every table that
+        # waited on it.
         def _write_one(item):
             name, df = item
             path = os.path.join(tmp, name)

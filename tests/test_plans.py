@@ -150,47 +150,74 @@ def _exchanges(plan: str) -> list[tuple[list[str], str]]:
     return out
 
 
-def test_no_html_through_round_shuffles(spark, fixture_paths, tmp_path):
-    """In the crawl round DAG, html crosses exactly one Exchange: the
-    as-of window of udfs.fetch_extract (hashpartitioning on url, before
-    extraction), and the corpus ``text`` column, which nothing reads,
-    does not cross it (SURVEY.md §7.4-4)."""
+def _round_plans(spark, fixture_paths, monkeypatch, mode: str = "formatted"):
+    """(formatted plans of the frames run_round checkpoints, in call
+    order, and the *mode* plan of every table it returns) for round 0
+    over the seed frontier; each checkpointed frame is explained before
+    it is built, so its plan still holds the lineage the checkpoint
+    cuts."""
     import json
 
+    from storm_focused_crawler_spark import driver as drv
     from storm_focused_crawler_spark import spec
-    from storm_focused_crawler_spark.driver import (
-        FRONTIER_SCHEMA,
-        SEEN_SCHEMA,
-        CrawlConfig,
-        run_round,
-    )
     from storm_focused_crawler_spark.sources.session import scope
 
+    checkpointed = []
+
+    def recording(df, eager=False):
+        checkpointed.append(_plan(df))
+        return checkpoint(df, eager)
+
+    checkpoint = drv.checkpoint
+    monkeypatch.setattr(drv, "checkpoint", recording)
     with open(fixture_paths["seeds"]) as f:
         seeds = [spec.canon(u) for u in json.load(f)]
     frontier = spark.createDataFrame(
-        [(u, spec.xxh64(u), 0.0, 0, 0) for u in seeds], FRONTIER_SCHEMA
+        [(u, spec.xxh64(u), 0.0, 0, 0) for u in seeds], drv.FRONTIER_SCHEMA
     )
     with scope():
-        out = run_round(
+        out = drv.run_round(
             spark,
             spark.read.parquet(fixture_paths["pages"]),
             frontier,
-            spark.createDataFrame([], SEEN_SCHEMA),
+            spark.createDataFrame([], drv.SEEN_SCHEMA),
             spark.read.parquet(fixture_paths["robots"]),
             spark.read.parquet(fixture_paths["host_budget"]),
-            CrawlConfig(rounds=1, capacity=64, keywords=("data",)),
+            drv.CrawlConfig(rounds=1, capacity=64, keywords=("data",)),
             0,
         )
-        plans = {t: _plan(out[t]) for t in ("frontier", "results")}
-    for t, plan in plans.items():
-        exchanges = _exchanges(plan)
-        assert exchanges, plan
-        with_html = [(cols, args) for cols, args in exchanges if "html" in cols]
-        assert len(with_html) == 1, f"{t}: html bytes cross {len(with_html)} shuffles: {with_html}"
-        cols, args = with_html[0]
-        assert args.startswith("hashpartitioning(url#") and "warc_ts" in cols, (t, cols, args)
-        assert "text" not in cols, f"{t}: corpus text crosses the as-of exchange: {cols}"
+        return checkpointed, {t: _plan(df, mode) for t, df in out.items()}
+
+
+def test_no_html_through_round_shuffles(spark, fixture_paths, monkeypatch):
+    """Across the crawl round DAG (the frames run_round checkpoints and
+    every table it returns), html crosses exactly one Exchange: the
+    as-of window of udfs.fetch_extract (hashpartitioning on url, before
+    extraction), and the corpus ``text`` column, which nothing reads,
+    crosses none (SURVEY.md §7.4-4)."""
+    checkpointed, tables = _round_plans(spark, fixture_paths, monkeypatch)
+    assert len(checkpointed) == 2, "run_round checkpoints the dequeued set and the fetched pages"
+    plans = [(f"checkpoint {i}", p) for i, p in enumerate(checkpointed)] + list(tables.items())
+    exchanges = [(name, cols, args) for name, plan in plans for cols, args in _exchanges(plan)]
+    assert exchanges
+    with_html = [e for e in exchanges if "html" in e[1]]
+    assert len(with_html) == 1, f"html bytes cross {len(with_html)} shuffles: {with_html}"
+    name, cols, args = with_html[0]
+    assert args.startswith("hashpartitioning(url#") and "warc_ts" in cols, (name, cols, args)
+    with_text = [e for e in exchanges if "text" in e[1]]
+    assert not with_text, f"corpus text crosses an exchange: {with_text}"
+
+
+def test_commit_recomputes_nothing_upstream(spark, fixture_paths, monkeypatch):
+    """The dequeued set and the fetched pages are built inside run_round,
+    so the plans the commit runs hold neither the dequeue's host
+    exchange nor the fetch's as-of window."""
+    _, tables = _round_plans(spark, fixture_paths, monkeypatch, "simple")
+    for t in ("ordering", "results", "frontier", "metrics"):
+        plan = tables[t]
+        assert "Exchange hashpartitioning(host" not in plan, f"{t} re-plans the dequeue:\n{plan}"
+        asof = [ln for ln in plan.splitlines() if "Window [" in ln and "warc_ts" in ln]
+        assert not asof, f"{t} re-plans the fetch's as-of window: {asof}"
 
 
 def _ancestors(lines: list[str], i: int) -> list[str]:
